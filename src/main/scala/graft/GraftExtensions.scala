@@ -2,9 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions._
+import graft.functions.GraftFunctions
 import graft.plans.TopKStrategy
 
 /** SparkSessionExtensions entry point — the production registration path:
@@ -15,54 +13,20 @@ import graft.plans.TopKStrategy
   *   SparkSession.builder().withExtensions(new GraftExtensions()(_))
   * }}}
   *
-  * Injects the TopKPerGroup planner strategy and every graft native function
-  * (cosine_sim, simhash64, minhash_sig, shingles, band_hashes,
-  * rolling_min_hash, sorted_intersect_count, nearest_centroids,
-  * hyperplane_lsh, zorder64, spacesaving_topk) so they are available from
-  * SQL text as well as the Column API.
+  * Injects the TopKPerGroup planner strategies, the row_number top-k
+  * rewrite, and every graft native function (GraftFunctions.builders) so
+  * they are available from SQL text as well as the Column API.
   * (GraftFunctions.register remains the per-session fallback used inside the
-  * ops so library calls work on vanilla sessions too.)
+  * ops so library calls work on vanilla sessions too; on a session built
+  * with these extensions it finds every function present and does nothing.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => TopKStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.TopKRankedStrategy)
     ext.injectOptimizerRule(_ => graft.plans.RowNumberTopKRewrite)
-    GraftExtensions.functionSpecs.foreach { case (name, info, builder) =>
-      ext.injectFunction((FunctionIdentifier(name), info, builder))
+    GraftFunctions.builders.foreach { case (name, build) =>
+      ext.injectFunction((FunctionIdentifier(name), GraftFunctions.info(name), build))
     }
   }
-}
-
-object GraftExtensions {
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft.functions", name)
-
-  val functionSpecs: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("cosine_sim", info("cosine_sim", "cosine similarity of float vectors"),
-      (e: Seq[Expression]) => CosineSimilarity(e(0), e(1))),
-    ("simhash64", info("simhash64", "64-bit SimHash of a token array"),
-      (e: Seq[Expression]) => SimHash64(e.head)),
-    ("minhash_sig", info("minhash_sig", "MinHash signature of hashed shingles"),
-      (e: Seq[Expression]) => MinHashSignature(e(0), e(1).eval().asInstanceOf[Number].intValue())),
-    ("shingles", info("shingles", "distinct word n-gram shingles"),
-      (e: Seq[Expression]) => ShingleArray(e(0), e(1).eval().asInstanceOf[Number].intValue())),
-    ("band_hashes", info("band_hashes", "LSH band hashes of a MinHash signature"),
-      (e: Seq[Expression]) => BandHashes(e(0), e(1).eval().asInstanceOf[Number].intValue())),
-    ("rolling_min_hash", info("rolling_min_hash", "winnowing min rolling hash"),
-      (e: Seq[Expression]) => RollingMinHash(e(0), e(1).eval().asInstanceOf[Number].intValue())),
-    ("sorted_intersect_count", info("sorted_intersect_count", "merge-count of sorted long arrays"),
-      (e: Seq[Expression]) => SortedIntersectCount(e(0), e(1))),
-    ("nearest_centroids", info("nearest_centroids", "top-k nearest centroid indexes by cosine"),
-      (e: Seq[Expression]) => NearestCentroids(e(0), GraftFunctions.evalCentroids(e(1)),
-        e(2).eval().asInstanceOf[Number].intValue())),
-    ("hyperplane_lsh", info("hyperplane_lsh", "multi-table sign-LSH bucket ids"),
-      (e: Seq[Expression]) => HyperplaneLsh(e(0), GraftFunctions.evalCentroids(e(1)),
-        e(2).eval().asInstanceOf[Number].intValue(),
-        e(3).eval().asInstanceOf[Number].intValue())),
-    ("zorder64", info("zorder64", "64-bit Morton interleave of two long keys"),
-      (e: Seq[Expression]) => Zorder64(e(0), e(1))),
-    ("spacesaving_topk", info("spacesaving_topk", "Space-Saving heavy-hitters aggregate"),
-      (e: Seq[Expression]) => SpaceSavingTopK(e(0),
-        e(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression()))
 }

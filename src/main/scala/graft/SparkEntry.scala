@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.ops._
+import graft.ops.TextOps.spreadScan
 
 /** Driver contract — see /root/repo/SURVEY.md §2 (inventory) and §7 (plan).
   *
@@ -66,25 +67,6 @@ object SparkEntry {
   val IvfIndexDir = s"$DumpBase/graft_ivf_index"
   val IvfIndexProbeDumpDir = s"$DumpBase/graft_ivf_index_probes"
   val MinhashStoreDir = s"$DumpBase/graft_minhash_store"
-
-  /** §2.5 input-skew guard for per-row-CPU text queries: the suite corpora
-    * are single-row-group parquet files, so the scan — and every map-side
-    * stage fused onto it (tokenize, 5-language stopword votes, regex
-    * chains, fingerprints) — runs as ONE task at any core count. When the
-    * scan yields materially fewer partitions than the session has cores,
-    * spread the rows once right after the read ("one huge unsplittable
-    * file … repartition immediately after the read"); when the input
-    * already arrives split (many files / row groups — every real-cluster
-    * layout, and the sweep scripts' 2m split override), this is a no-op,
-    * so no full-corpus shuffle is ever added at scale. Unlike the media
-    * family's id-only spread, text ops need the text column, so the spread
-    * moves the corpus slice itself — only worth it where per-row CPU
-    * dominates the row's bytes (the callers below were each profiled as
-    * single-task map stages, JobProfile r13). */
-  private def spreadScan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 2 <= target) df.repartition(target) else df
-  }
 
   /** The committed contract-honoring ffmpeg fixture the gate's
     * `video_frames_bridge` query streams payloads through (overridable so
@@ -289,11 +271,10 @@ object SparkEntry {
     }),
     // §2.3 LLM-data-pipeline operators
     "dedup_exact" -> ((s, d) => DedupOps.dedupExact(Tables.documents(s, d))),
-    // spreadScan composes with shingleDocs' persist (single docs consumer →
-    // the spread exchange runs once, at persist materialization), so the
-    // multi-consumer recompute that made spreadScan a loss elsewhere does
-    // not apply to the shingle family
-    "dedup_ngram_jaccard" -> ((s, d) => DedupOps.ngramJaccardPairs(spreadScan(Tables.documents(s, d)))),
+    // the shingle family spreads a narrow scan itself, inside shingleDocs
+    // (under its persist, so the spread exchange runs once); no call-site
+    // spreadScan here or on the other shingle-family entries
+    "dedup_ngram_jaccard" -> ((s, d) => DedupOps.ngramJaccardPairs(Tables.documents(s, d))),
     "dedup_substring" -> ((s, d) => DedupOps.substringDupSpans(Tables.documents(s, d))),
     "substring_dup_stats" -> ((s, d) => DedupOps.substringDupStats(Tables.documents(s, d))),
     "dedup_minhash_lsh" -> ((s, d) => DedupOps.minhashLshPairs(Tables.documents(s, d))),
@@ -412,9 +393,11 @@ object SparkEntry {
     // corpus too dense for the prefix join fails fast with the measured
     // bound and the LSH/df-cap remediations instead of GC-killing the JVM
     // (the sf10 saturated-vocabulary skip, NOTES_PERF r11).
-    // spreadScan measured a LOSS here (interleaved best-of-3 at sf0.1:
-    // 1.3-1.6 s → 1.6-2.2 s) — the stringless keepHs=false shingle pass is
-    // too cheap to amortize the extra exchange; REVERTED (§1.3)
+    // shingleDocs spreads a narrow scan for this op too. A call-site spread
+    // had measured a loss here (sf0.1, 1.3-1.6 s → 1.6-2.2 s) while the
+    // shingle filter ran before the exchange; with the text-only filter it
+    // does not (4 cores, warm runs, cache cleared between: sf0.1 2.8-3.7 →
+    // 2.7-3.3 s, the 10k-doc perfbench corpus 7.0-9.9 → 5.3-7.7 s).
     "dedup_jaccard_ppjoin" -> ((s, d) => DedupOps.ngramJaccardPairsPrefix(Tables.documents(s, d),
       maxCandidates = ppjoinBudget)),
     "multimodal_meta" -> ((s, d) => MultimodalOps.multimodalMeta(Tables.documents(s, d))),

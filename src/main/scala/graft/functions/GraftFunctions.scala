@@ -7,115 +7,104 @@ import org.apache.spark.sql.functions.call_function
   *
   * Registered in the session FunctionRegistry so they work from both the
   * Column API (via call_function) and plain SQL (`SELECT cosine_sim(a, b)`).
-  * Idempotent — call per session before use.
+  * One table, [[builders]], feeds both registration paths: GraftExtensions
+  * injects it when the session is built, and [[register]] adds whatever a
+  * session does not hold yet.
   */
 object GraftFunctions {
+  import org.apache.spark.sql.catalyst.FunctionIdentifier
+  import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+  import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_sim",
-      exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("dot_f",
-      exprs => DotProductF(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("tile_neardup_pairs",
-      exprs => TileNearDupPairs(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].doubleValue()), "built-in")
-    reg.createOrReplaceTempFunction("tile_levenshtein_pairs",
-      exprs => TileLevenshteinPairs(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction("tile_hamming_pairs",
-      exprs => TileHammingPairs(exprs(0), exprs(1), exprs(2),
-        exprs(3).eval().asInstanceOf[Number].intValue(),
-        exprs(4).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction("simhash64",
-      exprs => SimHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("simhash64_weighted",
-      exprs => SimHashWeighted(exprs(0), evalStrings(exprs(1)),
-        evalDoubles(exprs(2)).toSeq,
-        exprs(3).eval().asInstanceOf[Number].doubleValue()), "built-in")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      exprs => MinHashSignature(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction("shingles",
-      exprs => ShingleArray(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction("band_hashes",
-      exprs => BandHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction("rolling_min_hash",
-      exprs => RollingMinHash(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction("rolling_window_hashes",
-      exprs => RollingWindowHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction("rolling_char_window_hashes",
-      exprs => RollingCharWindowHashes(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction("poly_hash64",
-      exprs => PolyHash64(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("synthetic_doc_text",
-      exprs => SyntheticDocText(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].longValue(),
-        if (exprs.length > 3) exprs(3).eval().asInstanceOf[Number].doubleValue()
-        else 0.0), "built-in")
-    reg.createOrReplaceTempFunction("synthetic_embedding",
-      exprs => SyntheticEmbedding(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue(),
-        exprs(3).eval().asInstanceOf[Number].longValue()), "built-in")
-    reg.createOrReplaceTempFunction("bucket_count_sketch",
-      exprs => BucketCountSketch(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("quantize_stats",
-      exprs => QuantizeStats(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("sketch_intersect_ub",
-      exprs => SketchIntersectUB(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("bounded_levenshtein",
-      exprs => BoundedLevenshtein(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction("spacesaving_topk",
-      exprs => SpaceSavingTopK(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("nearest_centroids",
-      exprs => NearestCentroids(exprs(0), evalCentroids(exprs(1)),
-        exprs(2).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction("zorder64",
-      exprs => Zorder64(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("rank_bucket",
-      exprs => RankBucket(exprs(0), {
-        import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType}
-        val arr = exprs(1).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        exprs(1).dataType match {
-          case ArrayType(DoubleType, _) => arr.toDoubleArray()
-          case ArrayType(dt: DecimalType, _) => arr.toObjectArray(dt)
-            .map(_.asInstanceOf[org.apache.spark.sql.types.Decimal].toDouble)
-          case other => throw new IllegalArgumentException(
-            s"rank_bucket expects array<double> boundaries, got $other")
-        }
-      }), "built-in")
-    reg.createOrReplaceTempFunction("bloom_build",
-      exprs => BloomBuildAgg(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("bloom_might_contain",
-      exprs => BloomMightContain(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("bpe_encode",
-      exprs => BpeEncode(exprs(0), evalMerges(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("hashed_linear_margin",
-      exprs => HashedLinearMargin(exprs(0), evalDoubles(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("unigram_encode",
-      exprs => UnigramEncode(exprs(0), evalStrings(exprs(1)),
-        evalDoubles(exprs(2)).toSeq), "built-in")
-    reg.createOrReplaceTempFunction("hyperplane_lsh",
-      exprs => HyperplaneLsh(exprs(0), evalCentroids(exprs(1)),
-        exprs(2).eval().asInstanceOf[Number].intValue(),
-        exprs(3).eval().asInstanceOf[Number].intValue(),
-        // optional 5th arg: multi-probe flips per table (default 0)
-        if (exprs.length > 4) exprs(4).eval().asInstanceOf[Number].intValue()
-        else 0), "built-in")
-  }
+  /** Every graft native function: (SQL name, expression builder). */
+  private[graft] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "cosine_sim" -> (e => CosineSimilarity(e(0), e(1))),
+    "dot_f" -> (e => DotProductF(e(0), e(1))),
+    "tile_neardup_pairs" -> (e => TileNearDupPairs(e(0), e(1),
+      e(2).eval().asInstanceOf[Number].doubleValue())),
+    "tile_levenshtein_pairs" -> (e => TileLevenshteinPairs(e(0), e(1),
+      e(2).eval().asInstanceOf[Number].intValue())),
+    "tile_hamming_pairs" -> (e => TileHammingPairs(e(0), e(1), e(2),
+      e(3).eval().asInstanceOf[Number].intValue(),
+      e(4).eval().asInstanceOf[Number].intValue())),
+    "simhash64" -> (e => SimHash64(e.head)),
+    "simhash64_weighted" -> (e => SimHashWeighted(e(0), evalStrings(e(1)),
+      evalDoubles(e(2)).toSeq,
+      e(3).eval().asInstanceOf[Number].doubleValue())),
+    "minhash_sig" -> (e => MinHashSignature(e(0),
+      e(1).eval().asInstanceOf[Number].intValue())),
+    "shingles" -> (e => ShingleArray(e(0),
+      e(1).eval().asInstanceOf[Number].intValue())),
+    "band_hashes" -> (e => BandHashes(e(0),
+      e(1).eval().asInstanceOf[Number].intValue())),
+    "rolling_min_hash" -> (e => RollingMinHash(e(0),
+      e(1).eval().asInstanceOf[Number].intValue())),
+    "rolling_window_hashes" -> (e => RollingWindowHashes(e(0),
+      e(1).eval().asInstanceOf[Number].intValue())),
+    "rolling_char_window_hashes" -> (e => RollingCharWindowHashes(e(0),
+      e(1).eval().asInstanceOf[Number].intValue())),
+    "poly_hash64" -> (e => PolyHash64(e(0))),
+    "sorted_intersect_count" -> (e => SortedIntersectCount(e(0), e(1))),
+    "synthetic_doc_text" -> (e => SyntheticDocText(e(0),
+      e(1).eval().asInstanceOf[Number].intValue(),
+      e(2).eval().asInstanceOf[Number].longValue(),
+      if (e.length > 3) e(3).eval().asInstanceOf[Number].doubleValue()
+      else 0.0)),
+    "synthetic_embedding" -> (e => SyntheticEmbedding(e(0),
+      e(1).eval().asInstanceOf[Number].intValue(),
+      e(2).eval().asInstanceOf[Number].intValue(),
+      e(3).eval().asInstanceOf[Number].longValue())),
+    "bucket_count_sketch" -> (e => BucketCountSketch(e(0))),
+    "quantize_stats" -> (e => QuantizeStats(e(0))),
+    "sketch_intersect_ub" -> (e => SketchIntersectUB(e(0), e(1))),
+    "bounded_levenshtein" -> (e => BoundedLevenshtein(e(0), e(1),
+      e(2).eval().asInstanceOf[Number].intValue())),
+    "spacesaving_topk" -> (e => SpaceSavingTopK(e(0),
+      e(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression()),
+    "nearest_centroids" -> (e => NearestCentroids(e(0), evalCentroids(e(1)),
+      e(2).eval().asInstanceOf[Number].intValue())),
+    "zorder64" -> (e => Zorder64(e(0), e(1))),
+    "rank_bucket" -> (e => RankBucket(e(0), {
+      import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType}
+      val arr = e(1).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      e(1).dataType match {
+        case ArrayType(DoubleType, _) => arr.toDoubleArray()
+        case ArrayType(dt: DecimalType, _) => arr.toObjectArray(dt)
+          .map(_.asInstanceOf[org.apache.spark.sql.types.Decimal].toDouble)
+        case other => throw new IllegalArgumentException(
+          s"rank_bucket expects array<double> boundaries, got $other")
+      }
+      })),
+    "bloom_build" -> (e => BloomBuildAgg(e(0),
+      e(1).eval().asInstanceOf[Number].intValue(),
+      e(2).eval().asInstanceOf[Number].intValue()).toAggregateExpression()),
+    "bloom_might_contain" -> (e => BloomMightContain(e(0), e(1))),
+    "bpe_encode" -> (e => BpeEncode(e(0), evalMerges(e(1)))),
+    "hashed_linear_margin" -> (e => HashedLinearMargin(e(0), evalDoubles(e(1)))),
+    "unigram_encode" -> (e => UnigramEncode(e(0), evalStrings(e(1)),
+      evalDoubles(e(2)).toSeq)),
+    "hyperplane_lsh" -> (e => HyperplaneLsh(e(0), evalCentroids(e(1)),
+      e(2).eval().asInstanceOf[Number].intValue(),
+      e(3).eval().asInstanceOf[Number].intValue(),
+      // optional 5th arg: multi-probe flips per table (default 0)
+      if (e.length > 4) e(4).eval().asInstanceOf[Number].intValue()
+      else 0)))
+
+  private[graft] def info(name: String): ExpressionInfo =
+    new ExpressionInfo("graft.functions", name)
+
+  /** Registers every graft function the session's registry does not hold
+    * yet — a no-op when GraftExtensions injected them or an earlier call
+    * registered them. Ops call this per use, so re-registering each time
+    * would replace all of them (and log a WARN per function) on every call.
+    * Never replaces a function the registry already holds. */
+  def register(spark: SparkSession): Unit = register(spark.sessionState.functionRegistry)
+
+  private[graft] def register(reg: FunctionRegistry): Unit =
+    builders.foreach { case (name, build) =>
+      val id = FunctionIdentifier(name)
+      if (!reg.functionExists(id)) reg.registerFunction(id, info(name), build)
+    }
 
   /** Fold a foldable array<array<string>> merge-table argument into the
     * (left, right) merge pairs for [[BpeEncode]]. */

@@ -40,8 +40,9 @@ object DedupOps {
     * projection, PERSISTed because every consumer (self-join sides,
     * candidate verification) re-reads it — at 100 TB this is the standard
     * "checkpoint the shingle relation" step of a dedup pipeline, sized
-    * ~tokens×n bytes, spilling to disk when needed. */
-  /** Columns: s = shingle strings; hs = pmod(xxhash64, P) base hashes for
+    * ~tokens×n bytes, spilling to disk when needed.
+    *
+    * Columns: s = shingle strings; hs = pmod(xxhash64, P) base hashes for
     * MinHash (domain [0,P) keeps perm arithmetic overflow-free); hv = SORTED
     * full-64-bit hashes for candidate verification (8 B/element instead of
     * ~20 B strings through the pair joins, and a codegen'd two-pointer
@@ -49,33 +50,59 @@ object DedupOps {
     * collision ~1e-11 — irrelevant to the exact-match oracle).
     *
     * keepStrings=false drops the `s` string array from the PERSISTED
-    * relation for callers that never touch shingle strings (minhash-LSH:
-    * signatures come from hs, verification from hv/sk). The strings are
-    * the single largest column (~20 B/shingle vs 8 B hashes) — at 5 M docs
-    * dropping them roughly halves the persist/spill footprint of this
-    * relation, which is the single-box scale wall (NOTES_PERF r8). The
-    * inverted-index ops (ngram/ppjoin) keep them: their join key is the
-    * shingle itself. */
+    * relation for callers that never touch shingle strings (every op but
+    * crossJaccardPairs: signatures come from hs, posting lists and
+    * verification from hv/sk). The strings are the single largest column
+    * (~20 B/shingle vs 8 B hashes) — at 5 M docs dropping them roughly
+    * halves the persist/spill footprint of this relation, which is the
+    * single-box scale wall (NOTES_PERF r8). keepHs=false additionally drops
+    * the MinHash base-hash array for callers that never build signatures
+    * (the ngram and ppjoin posting lists and their verify run on hv).
+    *
+    * Work is done once, on every core:
+    *  - a narrow scan is spread here, for every caller, by the
+    *    [[TextOps.spreadScan]] rule (at most half as many scan partitions as
+    *    cores), under the persist, so the spread exchange runs once;
+    *  - the empty-shingle filter tests the TEXT, before tokenizing:
+    *    size(shingles(t, n)) > 0 ⇔ size(t) ≥ n (see ShingleArray.compute)
+    *    ⇔ [[TextOps.hasTokens]]. Catalyst pushes any deterministic filter
+    *    below the projections and the spread's exchange, copying the
+    *    expressions it references: a filter on the shingle column shingled
+    *    every doc twice, one on the token column tokenized it twice, the
+    *    first time on the scan's few tasks. hasTokens reads each text only
+    *    up to its n-th token. */
   private def shingleDocs(docs: DataFrame, n: Int = 3,
                           keepStrings: Boolean = true,
                           keepHs: Boolean = true): DataFrame = {
     GraftFunctions.register(docs.sparkSession)
-    // keepHs=false additionally drops the MinHash base-hash array for
-    // callers that never build signatures (ppjoin: prefix keys and verify
-    // both run on hv) — one fewer 8 B/shingle column in the persist.
-    val base = docs.select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
+    TextOps.spreadScan(docs)
+      .filter(TextOps.hasTokens(col("text"), n))
+      .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
       .select(col("doc_id"), shinglesFromTokens(col("t"), n).as("s"))
-      .filter(size(col("s")) > 0)
       .select(col("doc_id") +: (if (keepStrings) Seq(col("s")) else Nil) ++:
         (if (keepHs) Seq(transform(col("s"), x => pmod(xxhash64(x), lit(P))).as("hs")) else Nil) :+
         array_sort(transform(col("s"), x => xxhash64(x))).as("hv"): _*)
-    base
       // sk = 256-byte bucket-count sketch of hv, computed once per doc at
       // shingle time: verifyPairs' pre-filter ships it per candidate pair
       // instead of the ~KB hv arrays (see BucketCountSketch)
       .withColumn("sk", GraftFunctions.bucketCountSketch(col("hv")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
+
+  /** Self-join of a (doc_id, key, …) posting relation on equal keys, one
+    * row per doc pair (a.doc_id < b.doc_id) per shared key, PINNED to a
+    * partitioned join (shuffle_hash hint). Both sides are one persisted,
+    * exploded relation, whose size Catalyst and AQE estimate from the
+    * cached scan — below the broadcast threshold — so unpinned they
+    * broadcast it: the driver collects the whole posting list and builds
+    * the hash relation alone (1.8 s with no job running on the 10k-doc
+    * corpus), and the broadcast stays on the heap after the query
+    * (~550 MB). Partitioned, each task builds a hash table over its key
+    * range only. Shared by the ngram inverted index and the ppjoin
+    * prefix join. */
+  private def postingSelfJoin(postings: DataFrame, key: String): DataFrame =
+    postings.as("a").hint("shuffle_hash").join(postings.as("b"),
+      col(s"a.$key") === col(s"b.$key") && col("a.doc_id") < col("b.doc_id"))
 
   /** Jaccard verification of candidate (a_id, b_id) pairs against the
     * persisted shingle relation, over sorted 64-bit hash arrays.
@@ -288,28 +315,31 @@ object DedupOps {
     * maxDf caps posting lists at scale (off by default for oracle parity). */
   def ngramJaccardPairs(docs: DataFrame, tau: Double = 0.5,
                         maxDf: Option[Int] = None): DataFrame = {
-    val sh = shingleDocs(docs)
-    // §2.3 project before the exchange: posting rows carry ONLY (doc_id,
-    // sg) through the quadratic inverted-index join — the per-doc shingle
+    // Posting lists are keyed on the 64-bit shingle hashes (hv), as in
+    // ngramJaccardPairsPrefix: equal shingles hash equal, so the pair counts
+    // are the string-keyed ones (barring a ~1e-11 corpus collision), and
+    // every posting row carries an 8-byte key instead of a ~25-byte string;
+    // the persisted relation keeps neither strings nor MinHash hashes.
+    val sh = shingleDocs(docs, keepStrings = false, keepHs = false)
+    // §2.3 project before the exchange: posting rows carry ONLY (doc_id, h)
+    // through the quadratic inverted-index join — the per-doc shingle
     // count attaches to the PAIR relation after the groupBy (two joins
     // against a doc-count-sized size relation), so the Σ df·(df−1)/2
     // posting-pair stream is ~8 bytes/row narrower on each side and the
     // pair aggregation drops its two first() aggregates.
-    val ex0 = sh.select(col("doc_id"), explode(col("s")).as("sg"))
+    val ex0 = sh.select(col("doc_id"), explode(col("hv")).as("h"))
     val ex = maxDf.fold(ex0) { cap =>
-      val rare = ex0.groupBy(col("sg")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= cap).select(col("sg"))
-      ex0.join(rare, "sg")
+      val rare = ex0.groupBy(col("h")).agg(count(lit(1)).as("df"))
+        .filter(col("df") <= cap).select(col("h"))
+      ex0.join(rare, "h")
     }
-    val sizes = sh.select(col("doc_id"), size(col("s")).as("nsh"))
-    // self-join via alias: both sides are the same persisted relation.
+    val sizes = sh.select(col("doc_id"), size(col("hv")).as("nsh"))
     // Stage counters as named observations (the ppjoin/lsh convention —
     // accumulator-based, zero extra actions, dumped under "observed" by
     // Bench): the inverted-index join volume IS Σ df·(df−1)/2, the quantity
     // the r11 corpus profile sizes — at a saturated-vocabulary sf10 it hit
     // 1.09 G rows, and this counter makes that visible per artifact.
-    ex.as("a").join(ex.as("b"),
-        col("a.sg") === col("b.sg") && col("a.doc_id") < col("b.doc_id"))
+    postingSelfJoin(ex, "h")
       .observe("ngram_inverted_join", count(lit(1)).as("posting_pair_rows"))
       .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
       .agg(count(lit(1)).as("inter"))
@@ -368,7 +398,11 @@ object DedupOps {
     val sh = shingleDocs(docs, keepStrings = false, keepHs = false)
     val ex = sh.select(col("doc_id"), explode(col("hv")).as("h"), size(col("hv")).as("nsh"))
     val dfs = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    val prefix = ex.join(dfs, "h")
+    // Partitioned join (shuffle_hash on the df side, already hash-partitioned
+    // on h by its aggregate), for the reason postingSelfJoin gives: left to
+    // AQE, it broadcast the exploded posting list itself on the 10k-doc
+    // corpus, sized from the cached scan.
+    val prefix = ex.join(dfs.hint("shuffle_hash"), "h")
       .withColumn("rnk", row_number().over(
         Window.partitionBy(col("doc_id")).orderBy(col("df"), col("h"))))
       .filter(col("rnk") <= col("nsh") - ceil(col("nsh") * tau) + 1)
@@ -422,8 +456,7 @@ object DedupOps {
     // this operator is ATTRIBUTABLE — a corpus with more real near-dups
     // moves all three together; a prefix/positional-filter regression moves
     // their RATIOS (Bench dumps them under "observed").
-    val cand = prefix.as("a").join(prefix.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
+    val cand = postingSelfJoin(prefix, "h")
       .observe("ppjoin_prefix_join", count(lit(1)).as("rows_pre_positional"))
       .filter(ubound >= needed)
       .observe("ppjoin_positional", count(lit(1)).as("rows_post_positional"))

@@ -20,10 +20,44 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
+  /** §2.5 input-skew guard for per-row-CPU text operators: the suite corpora
+    * are single-row-group parquet files, so the scan — and every map-side
+    * stage fused onto it (tokenize, shingle, 5-language stopword votes,
+    * regex chains, fingerprints) — runs as ONE task at any core count. When
+    * the scan yields at most half as many partitions as the session has
+    * cores, spread the rows once right after the read ("one huge
+    * unsplittable file … repartition immediately after the read"); when the
+    * input already arrives split (many files / row groups — every
+    * real-cluster layout, and the sweep scripts' 2m split override), this is
+    * a no-op, so no full-corpus shuffle is ever added at scale. An input
+    * whose plan already shuffles (AQE wraps it) arrives over the session's
+    * shuffle partitions and is left as it is: counting its partitions would
+    * run its shuffle stages eagerly. Unlike the media family's id-only
+    * spread, text ops need the text column, so the spread moves the corpus
+    * slice itself — only worth it where per-row CPU dominates the row's
+    * bytes (the callers were each profiled as single-task map stages,
+    * JobProfile r13). */
+  def spreadScan(df: DataFrame): DataFrame = {
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    df.queryExecution.executedPlan match {
+      case _: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => df
+      case plan => if (plan.execute().getNumPartitions * 2 <= target) df.repartition(target) else df
+    }
+  }
+
   /** Whitespace tokenizer shared by every op (and mirrored in the DuckDB
     * oracles as string_split_regex(text,'\s+') with empties dropped). */
   def tokens(c: Column): Column =
     filter(split(c, "\\s+"), t => length(t) > 0)
+
+  /** size(tokens(c)) >= n without tokenizing: true iff `c` holds at least n
+    * maximal runs of non-whitespace, i.e. n [[tokens]] (same `\s` class).
+    * Anchored and possessive, so the match reads `c` only up to the start of
+    * its n-th token and never backtracks. */
+  def hasTokens(c: Column, n: Int): Column = {
+    require(n >= 1, s"hasTokens: n must be >= 1, got $n")
+    c.rlike("^\\s*+(\\S++\\s++){" + (n - 1) + "}\\S")
+  }
 
   /** WordCount: one explode + one partial-agg'd groupBy. */
   def wordCount(docs: DataFrame, textCol: String = "text"): DataFrame =

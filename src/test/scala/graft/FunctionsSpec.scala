@@ -76,4 +76,35 @@ class FunctionsSpec extends SparkSpecBase {
       "SELECT hyperplane_lsh(array(cast(1.0 AS float)), array(array(0.5)), 1, 1) AS b")
       .head.getAs[scala.collection.Seq[Int]](0).length == 1)
   }
+
+  test("register adds each graft function once: a second call leaves the registry unchanged") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    // an entry is (info, builder), compared by identity: re-registering a
+    // function stores a new entry even when it is built the same way
+    def snapshot(reg: FunctionRegistry) = reg.listFunction()
+      .map(id => id -> (reg.lookupFunction(id).get, reg.lookupFunctionBuilder(id).get)).toMap
+    def assertUnchanged(before: Map[FunctionIdentifier, (AnyRef, AnyRef)],
+                        after: Map[FunctionIdentifier, (AnyRef, AnyRef)]): Unit = {
+      assert(after.keySet == before.keySet)
+      before.foreach { case (id, (info, build)) =>
+        assert((after(id)._1 eq info) && (after(id)._2 eq build), s"$id was re-registered")
+      }
+    }
+    val graftIds = GraftFunctions.builders.map { case (n, _) => FunctionIdentifier(n) }
+    // a vanilla registry: the first call adds every graft function
+    val vanilla = FunctionRegistry.builtin.clone()
+    GraftFunctions.register(vanilla)
+    assert(graftIds.forall(vanilla.functionExists))
+    val first = snapshot(vanilla)
+    GraftFunctions.register(vanilla)
+    assertUnchanged(first, snapshot(vanilla))
+    // a session built with GraftExtensions already holds them all
+    val reg = spark.sessionState.functionRegistry
+    assert(graftIds.forall(reg.functionExists))
+    val injected = snapshot(reg)
+    GraftFunctions.register(spark)
+    GraftFunctions.register(spark)
+    assertUnchanged(injected, snapshot(reg))
+  }
 }

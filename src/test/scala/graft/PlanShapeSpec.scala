@@ -1,7 +1,13 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import graft.functions.ShingleArray
+import graft.tools.ExplainAudit
 
 /** Plan contracts — the claims NOTES_PERF makes about plan quality, pinned
   * as assertions so a refactor that silently loses pushdown, broadcast, a
@@ -82,5 +88,57 @@ class PlanShapeSpec extends SparkSpecBase {
       s"q19 disjunction bounds must reach the scans:\n$plan")
     assert("PushedFilters: \\[[^\\]]*Or".r.findFirstIn(plan).isDefined,
       s"q19 must push an Or filter:\n$plan")
+  }
+
+  /** Every operator of a physical plan, through AQE wrappers and query
+    * stages, stopping at cached-relation scans. */
+  private def operators(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => operators(a.executedPlan)
+    case s: QueryStageExec => operators(s.plan)
+    case _ => p.children.flatMap(operators)
+  })
+
+  /** Every cached relation a plan scans, including those scanned by the
+    * plans of other cached relations. */
+  private def cachedRelations(p: SparkPlan): Seq[InMemoryRelation] =
+    operators(p).collect { case i: InMemoryTableScanExec => i.relation }
+      .flatMap(r => r +: cachedRelations(r.cachedPlan))
+
+  // These run the query first: AQE picks some joins from runtime statistics,
+  // so only the final plan shows them.
+  test("dedup_ngram_jaccard: the posting-list self-join is partitioned in the " +
+    "final adaptive plan, and no exploded relation is broadcast") {
+    val plan = ExplainAudit.finalPlan(SparkEntry.queries("dedup_ngram_jaccard")(spark, sfDir))
+    val ops = operators(plan)
+    def onPostingKey(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      keys.exists(_.references.exists(_.name == "h"))
+    val postingJoins = ops.collect {
+      case j: ShuffledHashJoinExec if onPostingKey(j.leftKeys) => j
+      case j: SortMergeJoinExec if onPostingKey(j.leftKeys) => j
+      case j: BroadcastHashJoinExec if onPostingKey(j.leftKeys) => j
+    }
+    assert(postingJoins.nonEmpty, s"no posting-list join found:\n$plan")
+    assert(postingJoins.forall(j => !j.isInstanceOf[BroadcastHashJoinExec]),
+      s"the posting-list join must be partitioned:\n$plan")
+    val broadcastExplodes = ops.collect { case b: BroadcastExchangeExec => b }
+      .filter(b => operators(b.child).exists(_.isInstanceOf[GenerateExec]))
+    assert(broadcastExplodes.isEmpty, s"an exploded relation is broadcast:\n$plan")
+    spark.catalog.clearCache()
+  }
+
+  test("shingle family: the cached shingle relation evaluates shingles() in " +
+    "exactly one operator") {
+    Seq("dedup_ngram_jaccard", "dedup_minhash_lsh").foreach { name =>
+      val plan = ExplainAudit.finalPlan(SparkEntry.queries(name)(spark, sfDir))
+      // a file scan's data filters are pushdown candidates, not evaluated per row
+      def shingling(r: InMemoryRelation) = operators(r.cachedPlan)
+        .filterNot(_.isInstanceOf[FileSourceScanExec])
+        .count(_.expressions.exists(_.exists(_.isInstanceOf[ShingleArray])))
+      val counts = cachedRelations(plan).map(shingling).filter(_ > 0)
+      assert(counts.nonEmpty, s"$name: no cached relation shingles:\n$plan")
+      assert(counts.forall(_ == 1),
+        s"$name: shingles() evaluated in ${counts.mkString(", ")} operators:\n$plan")
+      spark.catalog.clearCache()
+    }
   }
 }
