@@ -11,7 +11,10 @@ numbers; it never moves plan hashes). AQE runtime re-plans are not
 visible here (the hash is the static plan); stats-driven flips are.
 
 Also reports per-query best-sample timing deltas >2x alongside, flagged
-NOISE when the run's sentinel marked the host loaded.
+NOISE when the run's sentinel marked the host loaded. When both records
+carry Bench's per-query "profile" counters, each flip also shows its jobs,
+tasks and executor-CPU deltas, and queries whose job or task count moved
+without a flip are listed; older records without them diff as before.
 """
 import json, sys
 
@@ -23,7 +26,9 @@ def load(p):
         line = line.strip()
         if line.startswith('{"metric"'):
             return json.loads(line)
-    return json.loads(txt)
+    d = json.loads(txt)
+    # the per-round BENCH_rNN.json wrap Bench's record under "parsed"
+    return d.get("parsed") or d
 
 def main():
     a, b = load(sys.argv[1]), load(sys.argv[2])
@@ -38,11 +43,28 @@ def main():
     only_b = sorted(set(pb) - set(pa))
     noisy = a.get("sentinel", {}).get("noisy") or b.get("sentinel", {}).get("noisy")
 
+    fa, fb = a.get("profile", {}), b.get("profile", {})
+
+    def counters(q):
+        if q not in fa or q not in fb:
+            return ""
+        x, y = fa[q], fb[q]
+        return (f"  jobs {x['jobs']}->{y['jobs']} tasks {x['tasks']}->{y['tasks']}"
+                f" cpu {x['cpu_s']}s->{y['cpu_s']}s")
+
     print(f"{len(common)} common queries; {len(flipped)} plan flips")
     for q in flipped:
-        print(f"  FLIP {q}: {pa[q]} -> {pb[q]}  ({qa.get(q, '?')}s -> {qb.get(q, '?')}s)")
+        print(f"  FLIP {q}: {pa[q]} -> {pb[q]}  ({qa.get(q, '?')}s -> {qb.get(q, '?')}s)"
+              + counters(q))
     if only_a: print(f"only in {sys.argv[1]}: {', '.join(only_a)}")
     if only_b: print(f"only in {sys.argv[2]}: {', '.join(only_b)}")
+
+    recounted = [q for q in common if q not in flipped and q in fa and q in fb
+                 and (fa[q]["jobs"], fa[q]["tasks"]) != (fb[q]["jobs"], fb[q]["tasks"])]
+    if recounted:
+        print(f"\n{len(recounted)} job/task count moves without a plan flip:")
+        for q in recounted:
+            print(f"  {q}:{counters(q)}")
 
     moved = [(q, qa[q], qb[q]) for q in common
              if isinstance(qa.get(q), (int, float)) and isinstance(qb.get(q), (int, float))

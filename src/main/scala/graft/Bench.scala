@@ -2,9 +2,16 @@ package graft
 
 import java.util.Locale
 
-/** Benchmark main — runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR, forcing FULL materialization through the noop sink
-  * (count() would let Catalyst prune projections and under-report work).
+import scala.util.control.NonFatal
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+
+/** Benchmark main — runs SparkEntry queries against SPARK_GRAFT_SF_DIR,
+  * forcing FULL materialization through the noop sink (count() would let
+  * Catalyst prune projections and under-report work). Query names given as
+  * arguments run just those; with none, every query runs.
   * Prints one JSON line: {"metric":"total","value":…,"queries":{…}}.
   * All numbers formatted with Locale.ROOT — a comma-decimal JVM locale
   * would otherwise emit invalid JSON.
@@ -15,17 +22,115 @@ import java.util.Locale
   * SENTINEL query timed at suite start and re-timed at suite end flags a
   * host whose load shifted mid-suite ("noisy": true when they differ >2×).
   *
+  * "profile" carries each query's last-sample counters: `build_s` (the
+  * builder call, eager work included), Spark jobs (each a blocking driver
+  * round trip), stages, tasks, executor CPU seconds (steal-immune, unlike
+  * wall seconds) and shuffle read/write MB.
+  *
   * "plans" carries a canonicalized fingerprint of each query's physical
   * plan (expression ids / plan ids / file paths masked), so cross-round
   * plan flips (broadcast→SMJ, new shuffles) are detected by diffing two
   * BENCH jsons instead of re-deriving plans by hand. The fingerprint is
-  * the STATIC plan — AQE runtime re-plans don't show; flips driven by
-  * stats (broadcast thresholds, join strategy) do. */
+  * the STATIC plan of the DataFrame the last timed sample built — AQE
+  * runtime re-plans don't show; flips driven by stats (broadcast
+  * thresholds, join strategy) do. */
 object Bench {
+
+  /** Spark counters over one sample. */
+  final case class Profile(jobs: Int = 0, stages: Int = 0, tasks: Int = 0, cpuNs: Long = 0L,
+                           shuffleReadB: Long = 0L, shuffleWriteB: Long = 0L)
+
+  /** Counts jobs started, and the tasks, executor CPU and shuffle bytes of
+    * every stage completed, since the last [[reset]]. Listener events arrive
+    * asynchronously on one bus thread, so both calls first wait for the bus
+    * to drain — keep them outside any timed region. */
+  final class JobCounters(sc: SparkContext) extends SparkListener {
+    @volatile private var p = Profile()
+
+    override def onJobStart(j: SparkListenerJobStart): Unit = p = p.copy(jobs = p.jobs + 1)
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      val m = s.stageInfo.taskMetrics
+      p = Profile(p.jobs, p.stages + 1, p.tasks + s.stageInfo.numTasks,
+        p.cpuNs + m.executorCpuTime, p.shuffleReadB + m.shuffleReadMetrics.totalBytesRead,
+        p.shuffleWriteB + m.shuffleWriteMetrics.bytesWritten)
+    }
+
+    def reset(): Unit = { GraftBridge.drainListeners(sc); p = Profile() }
+    def snapshot(): Profile = { GraftBridge.drainListeners(sc); p }
+  }
+
+  /** One query's measurement: every timed sample (-1 for a failed one),
+    * and the last sample's build seconds (-1 when its build failed),
+    * counters and plan fingerprint. */
+  final case class Measurement(samples: Seq[Double], buildS: Double,
+                               profile: Profile, planHash: String)
+
+  /** Times `runs` samples of `build` followed by a noop write. Only the
+    * build and the write are timed; the counter resets, the drain and the
+    * plan fingerprint run outside the timed region, and the fingerprint
+    * comes from the last sample's own DataFrame, so the builder runs
+    * exactly `runs` times. */
+  def measure(spark: SparkSession, sfDir: String, name: String, runs: Int, counters: JobCounters,
+              build: (SparkSession, String) => DataFrame): Measurement = {
+    var lastDf: DataFrame = null
+    var buildS = -1.0
+    val samples = (1 to runs).map { _ =>
+      counters.reset()
+      lastDf = null
+      buildS = -1.0
+      val t0 = System.nanoTime()
+      try {
+        lastDf = build(spark, sfDir)
+        buildS = (System.nanoTime() - t0) / 1e9
+        lastDf.write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: $e"); -1.0
+      }
+    }
+    Measurement(samples, buildS, counters.snapshot(), planHash(lastDf))
+  }
+
+  /** Canonicalized static-plan fingerprint: changes when the planned shape
+    * changes; "err" when there is no plan. Lambda variable numbers and
+    * where Spark truncates a scan's DataFilters are not masked, so those
+    * can move it too (NOTES_PERF.md, "One bench main"). */
+  def planHash(df: DataFrame): String =
+    try {
+      val canon = df.queryExecution.executedPlan.toString
+        .replaceAll("#\\d+", "#x")
+        .replaceAll("plan_id=\\d+", "plan_id=x")
+        .replaceAll("id=#?\\d+", "id=x")
+        .replaceAll("file:[^\\s,\\]\\)]*", "file:x")
+        .replaceAll("Location: [^,\\]]*", "Location: x")
+        // JVM object identities: lambda class counters (Lambda$123/0x...)
+        // and toString identity hashes ([[F@1a2b3c, closure@...)
+        .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda")
+        .replaceAll("@[0-9a-f]+", "@x")
+      val md = java.security.MessageDigest.getInstance("MD5")
+      md.digest(canon.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(12)
+    } catch { case NonFatal(_) => "err" }
+
+  private def fmt(v: Double): String = String.format(Locale.ROOT, "%.3f", Double.box(v))
+
+  /** MB are 10^6 bytes. */
+  private def profileJson(m: Measurement): String = {
+    val p = m.profile
+    s"""{"build_s":${fmt(m.buildS)},"jobs":${p.jobs},"stages":${p.stages},""" +
+    s""""tasks":${p.tasks},"cpu_s":${fmt(p.cpuNs / 1e9)},""" +
+    s""""shuffle_read_mb":${fmt(p.shuffleReadB / 1e6)},"shuffle_write_mb":${fmt(p.shuffleWriteB / 1e6)}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSessions.local(cpus)
+    val runs = GraftEnv.benchRuns()
+    GraftEnv.check()
+    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = GraftSessions.local(GraftEnv.cpus(4))
+    val counters = new JobCounters(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counters)
 
     // Named observations (Dataset.observe counters inside operators — e.g.
     // the PPJoin candidate-stage counters) are captured per execution and
@@ -54,16 +159,6 @@ object Bench {
                              exception: Exception): Unit = ()
     })
 
-    def runOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: $e"); return -1.0
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-
     /** Corpus stamp: doc/row counts, total text bytes, and an
       * order-invariant distributed fingerprint (sum of xxhash64 over id AND
       * content — no collect, no sort) for the two driver-regenerated
@@ -91,40 +186,17 @@ object Bench {
         s"""{"docs":${d.getLong(0)},"text_bytes":${d.getLong(1)},""" +
         s""""docs_fp":"${d.getString(2)}","vecs":${e.getLong(0)},""" +
         s""""vecs_fp":"${e.getString(1)}"}"""
-      } catch { case ex: Throwable =>
+      } catch { case NonFatal(ex) =>
         "\"err: " + ex.toString.replace("\"", "'") + "\"" }
 
     // Best-of-n per query: the best of n is the closest observable to the
     // true cost under steal noise. A transiently-failed sample is dropped,
     // not allowed to poison the successful ones; -1 only when EVERY sample
     // failed.
-    val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    def run(name: String): Seq[Double] = (1 to runs).map(_ => runOnce(name))
     def best(samples: Seq[Double]): Double = {
       val ok = samples.filter(_ >= 0)
       if (ok.isEmpty) -1.0 else ok.min
     }
-
-    def fmt(v: Double): String = String.format(Locale.ROOT, "%.3f", Double.box(v))
-
-    /** Canonicalized static-plan fingerprint: stable across runs, changes
-      * when the planned shape changes. */
-    def planHash(name: String): String =
-      try {
-        val canon = SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.executedPlan.toString
-          .replaceAll("#\\d+", "#x")
-          .replaceAll("plan_id=\\d+", "plan_id=x")
-          .replaceAll("id=#?\\d+", "id=x")
-          .replaceAll("file:[^\\s,\\]\\)]*", "file:x")
-          .replaceAll("Location: [^,\\]]*", "Location: x")
-          // JVM object identities: lambda class counters (Lambda$123/0x...)
-          // and toString identity hashes ([[F@1a2b3c, closure@...)
-          .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda")
-          .replaceAll("@[0-9a-f]+", "@x")
-        val md = java.security.MessageDigest.getInstance("MD5")
-        md.digest(canon.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(12)
-      } catch { case _: Throwable => "err" }
 
     // JVM/codegen warmup on the configured dataset (not reported) — the
     // flagship entry() hardcodes its own dir, which may not exist here.
@@ -135,47 +207,41 @@ object Bench {
     // infancy reads as "host load shifted mid-suite" — a false noisy flag
     // on an idle host. Extra warm runs cost seconds once actually warm.
     val sentinelName = "q1_pricing_summary"
-    var warmPrev = runOnce(sentinelName)
-    var sentinelStart = runOnce(sentinelName)
+    def sentinel(): Double = measure(spark, sfDir, sentinelName, 1, counters,
+      SparkEntry.queries(sentinelName)).samples.head
+    var warmPrev = sentinel()
+    var sentinelStart = sentinel()
     var warmTries = 0
     while (warmTries < 4 && warmPrev > 0 && sentinelStart > 0 &&
            math.max(warmPrev, sentinelStart) /
              math.min(warmPrev, sentinelStart) > 1.5) {
       warmPrev = sentinelStart
-      sentinelStart = runOnce(sentinelName)
+      sentinelStart = sentinel()
       warmTries += 1
     }
 
-    // Same subset knobs as Verify — the sf10 sweep benches the TPC-H/events
-    // families only (documents/embeddings can't scale past the
-    // decorrelation bounds, see scripts/scaleup.py)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val skip = sys.env.get("SPARK_GRAFT_SKIP").map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)) && !skip(n))
-    val samples = names.map(n => n -> run(n))
-    val results = samples.map { case (n, ss) => n -> best(ss) }
-    val sentinelEnd = runOnce(sentinelName)
+    val measured = names.map(n =>
+      n -> measure(spark, sfDir, n, runs, counters, SparkEntry.queries(n)))
+    val results = measured.map { case (n, m) => n -> best(m.samples) }
+    val sentinelEnd = sentinel()
     val noisy = sentinelStart > 0 && sentinelEnd > 0 &&
       math.max(sentinelStart, sentinelEnd) / math.min(sentinelStart, sentinelEnd) > 2.0
 
+    def obj(kvs: Seq[(String, String)]): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val nFailed = results.count(_._2 < 0)
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val ss = samples.map { case (k, vs) =>
-      "\"" + k + "\":[" + vs.map(fmt).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val ph = names.map(n => "\"" + n + "\":\"" + planHash(n) + "\"")
-      .mkString("{", ",", "}")
+    val qs = obj(results.map { case (k, v) => k -> fmt(v) })
+    val ss = obj(measured.map { case (k, m) => k -> m.samples.map(fmt).mkString("[", ",", "]") })
+    val ph = obj(measured.map { case (k, m) => k -> ("\"" + m.planHash + "\"") })
+    val prof = obj(measured.map { case (k, m) => k -> profileJson(m) })
     val total = results.map(_._2).filter(_ >= 0).sum
     val obs = {
       import scala.jdk.CollectionConverters._
-      observed.asScala.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+      obj(observed.asScala.toSeq.sortBy(_._1))
     }
     val json = String.format(Locale.ROOT,
-      """{"metric":"total","value":%.3f,"unit":"sec","queries":%s,"samples":%s,"plans":%s,"observed":%s,"corpus":%s,"sentinel":{"start_sec":%s,"end_sec":%s,"noisy":%b},"sf":"%s","runs":%d,"failed":%d}""",
-      Double.box(total), qs, ss, ph, obs, corpusStamp(),
+      """{"metric":"total","value":%.3f,"unit":"sec","queries":%s,"samples":%s,"plans":%s,"profile":%s,"observed":%s,"corpus":%s,"sentinel":{"start_sec":%s,"end_sec":%s,"noisy":%b},"sf":"%s","runs":%d,"failed":%d}""",
+      Double.box(total), qs, ss, ph, prof, obs, corpusStamp(),
       fmt(sentinelStart), fmt(sentinelEnd),
       Boolean.box(noisy), sfDir, Int.box(runs), Int.box(nFailed))
     // The result JSON is printed BETWEEN fixed sentinel lines and also
@@ -186,7 +252,7 @@ object Bench {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench_last.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (json + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(s"[bench] file dump failed: $e") }
+    catch { case NonFatal(e) => System.err.println(s"[bench] file dump failed: $e") }
     println("GRAFT_BENCH_JSON_BEGIN")
     println(json)
     println("GRAFT_BENCH_JSON_END")

@@ -2,8 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One session-builder for every driver-facing main (Verify / Bench /
-  * BenchOne) — the config block was drifting across three copies. */
+/** The one session builder: Verify, Bench, the tools mains, the perfbench
+  * harness and the specs all get their session here, so they run under one
+  * config block. `cpus` is the `local[n]` thread count (read through
+  * [[GraftEnv.cpus]] by the mains); `extra` adds or overrides settings, such
+  * as a warehouse dir or an app name. */
 object GraftSessions {
   def local(cpus: String, extra: Map[String, String] = Map.empty): SparkSession = {
     // shuffle width defaults to the core count (right at bench SF, where

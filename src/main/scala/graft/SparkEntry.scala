@@ -42,17 +42,6 @@ object SparkEntry {
   val LshProbeDumpDir = s"$DumpBase/graft_lsh_probes"
   val SemAnnBucketDumpDir = s"$DumpBase/graft_sem_ann_buckets"
 
-  /** SPARK_GRAFT_PPJOIN_BUDGET, accepting both integer and the
-    * scientific-notation form the docs use (2e8). DEFAULT ARMED at the
-    * sweep scripts' measured calibration (2e8 candidate rows — honest
-    * corpora bound 13.9 M/47.4 M at 500 k/sf1 while the saturated-
-    * vocabulary GC-death regime measured 492 M): the gate corpus is tiny,
-    * so the pre-flight bound costs one cheap aggregate there, and the
-    * guard stays exercised on every Verify/Bench run instead of rotting
-    * sweep-only. Explicit 0 disarms. */
-  private def ppjoinBudget: Long =
-    sys.env.get("SPARK_GRAFT_PPJOIN_BUDGET").map(_.trim.toDouble.toLong)
-      .getOrElse(200000000L)
   val RollingHashDumpDir = s"$DumpBase/graft_rolling_hashes"
   val HllRegDumpDir = s"$DumpBase/graft_hll_registers"
   val ApproxRegDumpDir = s"$DumpBase/graft_approx_registers"
@@ -399,7 +388,7 @@ object SparkEntry {
     // does not (4 cores, warm runs, cache cleared between: sf0.1 2.8-3.7 →
     // 2.7-3.3 s, the 10k-doc perfbench corpus 7.0-9.9 → 5.3-7.7 s).
     "dedup_jaccard_ppjoin" -> ((s, d) => DedupOps.ngramJaccardPairsPrefix(Tables.documents(s, d),
-      maxCandidates = ppjoinBudget)),
+      maxCandidates = GraftEnv.ppjoinBudget())),
     "multimodal_meta" -> ((s, d) => MultimodalOps.multimodalMeta(Tables.documents(s, d))),
     // REAL-decoder round trips: payloads are synthesized from closed-form
     // per-doc parameters, run through the actual JDK codecs / container

@@ -74,8 +74,8 @@ object Verify {
     // intermediate (dedup_simhash's fingerprint dump) check for this prop, so
     // Bench and library callers never pay for or depend on the side write.
     System.setProperty("graft.fp.dump", "1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSessions.local(cpus)
+    GraftEnv.check()
+    val spark = GraftSessions.local(GraftEnv.cpus(4))
     new java.io.File(outDir).mkdirs()
     var nFailed = 0
     // Optional subset for large-SF local sweeps (driver runs set neither):

@@ -205,7 +205,8 @@ object DedupOps {
     *      single native `rolling_window_hashes` pass emits every window's
     *      polynomial hash in O(bytes) per doc — no per-window substring
     *      allocation (which costs 4× the whole downstream pipeline: 52 s
-    *      vs 12 s for the detection pass at 82 M windows, SubstringProfile).
+    *      vs 12 s for the detection pass at 82 M windows — NOTES_PERF.md,
+    *      "Optimization history that matters at 100 TB", lesson 7).
     *      Docs with multibyte chars (char windows ≠ byte windows) fall back
     *      to substr enumeration hashed by `poly_hash64` — the SAME hash
     *      space, so equal windows collide across the two paths and
@@ -666,10 +667,10 @@ object DedupOps {
       .select(col("doc_id"),
         posexplode(GraftFunctions.bandHashes(col("sig"), bands)).as(Seq("band", "band_sig")))
     // NOT persisted pre-partitioned on the join key: that shape was
-    // A/B-measured (JobProfile, sf0.1) and REJECTED — the partitioned
-    // cache pins 32 fixed partitions that AQE cannot coalesce, so every
-    // downstream stage ran 32 tiny tasks (27 → 211 tasks, wall 1.4 →
-    // 2.2 s) to save 2 jobs.
+    // A/B-measured (sf0.1, OPTIMIZATION_r13.md §4) and REJECTED — the
+    // partitioned cache pins 32 fixed partitions that AQE cannot coalesce,
+    // so every downstream stage ran 32 tiny tasks (27 → 211 tasks, wall
+    // 1.4 → 2.2 s) to save 2 jobs.
     val bandedA = banded(sa)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bandedB = banded(sb)
@@ -1043,8 +1044,7 @@ object DedupOps {
     * directed edge rows ≈ tens of MB on the driver — the bounded-collect-
     * or-distributed split of dedupParagraphs' broadcastDropMax, sized per
     * deployment. */
-  def DefaultCcLocalEdges: Long = sys.env.get("SPARK_GRAFT_CC_LOCAL_EDGES")
-    .map(_.trim.toLong).getOrElse(2000000L)
+  def DefaultCcLocalEdges: Long = graft.GraftEnv.ccLocalEdges()
 
   /** "Rooted at" = equal or a proper child PATH after URI normalization —
     * never a raw substring match, which would let requested /tmp/a match an

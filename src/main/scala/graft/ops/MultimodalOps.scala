@@ -257,8 +257,9 @@ object MultimodalOps {
     }
   }
 
-  /** Per-record body of [[decodeAudio]] (also driven directly by
-    * tools.AudioProbe, which is how the SPI-lock attribution was measured). */
+  /** Per-record body of [[decodeAudio]]. Driving it directly, without Spark,
+    * is how the SPI-lock attribution was measured (NOTES_PERF.md, "r11:
+    * audio decode anti-scaled"). */
   private[graft] def decodeOneAudio(mediaId: Long, bytes: Array[Byte],
                                     maxSampledFrames: Long = 1L << 20,
                                     maxDecodeFrames: Long = 1L << 32): DecodedAudio = {

@@ -334,7 +334,8 @@ object SimilarityOps {
     * 500 k vectors the 4-bit default spilled > 79 GB before dying;
     * measured, not theory). And the uniform log2(n/32) seed is not enough
     * on its own: real corpora bucket-skew (cluster-correlated occupancy —
-    * 3.3× the uniform bound at 5 M vectors, tools/SemAnnProbe), so
+    * 3.3× the uniform bound at 5 M vectors, NOTES_PERF.md "r11: 5 M-vector
+    * ANN semantic dedup"), so
     * `bits = 0` (default) sizes by MEASUREMENT: [[selfJoinBitsMeasured]]
     * walks bits up from the seed until the exact bound fits
     * `maxCandidatePairs` (one cheap aggregate per step — the operator
@@ -374,8 +375,9 @@ object SimilarityOps {
     * bound Σ_b n_b·(n_b−1)/2 is whatever the corpus says it is (measured
     * on the 5 M-vector synthetic corpus: 306 M pairs at 20 bits where
     * uniform math predicts 92 M; max bucket 344 vs the uniform 4.8 —
-    * tools/SemAnnProbe). So size by MEASUREMENT: walk bits up from the
-    * seed until the bound fits `maxPairs`, each step one cheap
+    * NOTES_PERF.md "r11: 5 M-vector ANN semantic dedup"). So size by
+    * MEASUREMENT: walk bits up from the seed until the bound fits
+    * `maxPairs`, each step one cheap
     * count-aggregate over the map-side bucket relation (seconds), so the
     * operator never discovers its candidate volume by spilling it to disk
     * (the r11 5 M first attempt: > 80 GB of verify-sort spill, dead box).

@@ -35,8 +35,9 @@ object TextOps {
     * run its shuffle stages eagerly. Unlike the media family's id-only
     * spread, text ops need the text column, so the spread moves the corpus
     * slice itself — only worth it where per-row CPU dominates the row's
-    * bytes (the callers were each profiled as single-task map stages,
-    * JobProfile r13). */
+    * bytes (the callers were each profiled as single-task map stages —
+    * NOTES_PERF.md, "r13: multi-pass text ops — persist the derived
+    * relation, then spread"). */
   def spreadScan(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     df.queryExecution.executedPlan match {

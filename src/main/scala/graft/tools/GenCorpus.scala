@@ -38,7 +38,7 @@ object GenCorpus {
     val nVecs = args(2).toLong
     val vocab = if (args.length > 3) args(3).toInt else 50000
     val stopFrac = if (args.length > 4) args(4).toDouble else 0.25
-    val spark = graft.GraftSessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = graft.GraftSessions.local(graft.GraftEnv.cpus(32))
     def filesFor(n: Long): Int = math.max(1, math.min(4096, (n / 4096L).toInt))
     CorpusGen.documents(spark, nDocs, vocab = vocab, stopFrac = stopFrac)
       .repartition(filesFor(nDocs))

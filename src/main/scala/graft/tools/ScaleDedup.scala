@@ -50,7 +50,7 @@ object ScaleDedup {
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "500000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.GraftEnv.cpus(32)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale") + s"/n$n"
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "2").toInt)
     val opsFilter: Set[String] = sys.env.get("SPARK_GRAFT_SCALE_OPS")
@@ -251,8 +251,7 @@ object ScaleDedup {
     // 492 M — a too-dense corpus fails this one stage loudly with the
     // measured bound instead of GC-killing the whole harness JVM. ----
     if (enabled("dedup_jaccard_ppjoin")) guarded("dedup_jaccard_ppjoin") {
-      val ppBudget = sys.env.get("SPARK_GRAFT_PPJOIN_BUDGET")
-        .map(_.trim.toDouble.toLong).getOrElse(200000000L)
+      val ppBudget = graft.GraftEnv.ppjoinBudget()
       val pp = recordAndDump("dedup_jaccard_ppjoin") {
         DedupOps.ngramJaccardPairsPrefix(docs, tau = 0.5, maxCandidates = ppBudget) }
       val ppMissed = plantedJ.filter(col("jacc") >= 0.5)

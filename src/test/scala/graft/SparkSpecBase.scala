@@ -11,17 +11,7 @@ trait SparkSpecBase extends AnyFunSuite {
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSessions.local("4", Map(
+    "spark.sql.warehouse.dir" -> "/tmp/graft_warehouse",
+    "spark.app.name" -> "graft-tests"))
 }
