@@ -33,6 +33,7 @@ done
 exec env SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} SPARK_GRAFT_NO_COALESCE=1 \
   SPARK_GRAFT_MAX_PARTITION_BYTES=${SPARK_GRAFT_MAX_PARTITION_BYTES:-2m} \
   SPARK_GRAFT_PPJOIN_BUDGET=${SPARK_GRAFT_PPJOIN_BUDGET:-200000000} \
+  SPARK_GRAFT_FFMPEG_FIXTURE=${SPARK_GRAFT_FFMPEG_FIXTURE:-$(cd "$(dirname "$0")" && pwd)/fake_ffmpeg.sh} \
   java $ADD_OPENS -Xmx"$MEM" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CLASSES:/opt/spark/jars/*" graft.Verify "$SF_DIR" "$OUT"

@@ -92,12 +92,20 @@ object Bench {
   }
 
   /** Canonicalized static-plan fingerprint: changes when the planned shape
-    * changes; "err" when there is no plan. Lambda variable numbers and
-    * where Spark truncates a scan's DataFilters are not masked, so those
-    * can move it too (NOTES_PERF.md, "One bench main"). */
+    * changes; "err" when there is no plan. The plan is printed whole
+    * (Spark otherwise cuts a scan's DataFilters at a fixed length of the
+    * unmasked string, so where it cuts depends on expression-id digits);
+    * that takes a DataFrame whose plan has not been built yet, as the noop
+    * write leaves it. */
   def planHash(df: DataFrame): String =
     try {
-      val canon = df.queryExecution.executedPlan.toString
+      val conf = df.sparkSession.conf
+      val prev = conf.getOption(MaxMetadataLength)
+      conf.set(MaxMetadataLength, Int.MaxValue.toString)
+      val plan =
+        try df.queryExecution.executedPlan.toString
+        finally prev.fold(conf.unset(MaxMetadataLength))(conf.set(MaxMetadataLength, _))
+      val canon = plan
         .replaceAll("#\\d+", "#x")
         .replaceAll("plan_id=\\d+", "plan_id=x")
         .replaceAll("id=#?\\d+", "id=x")
@@ -107,9 +115,14 @@ object Bench {
         // and toString identity hashes ([[F@1a2b3c, closure@...)
         .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda")
         .replaceAll("@[0-9a-f]+", "@x")
+        // higher-order-function variables are numbered by a JVM-wide
+        // counter (x_155): the number says how many lambdas were built before
+        .replaceAll("lambda (\\w+?)_\\d+#", "lambda $1_x#")
       val md = java.security.MessageDigest.getInstance("MD5")
       md.digest(canon.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(12)
     } catch { case NonFatal(_) => "err" }
+
+  private val MaxMetadataLength = "spark.sql.maxMetadataStringLength"
 
   private def fmt(v: Double): String = String.format(Locale.ROOT, "%.3f", Double.box(v))
 

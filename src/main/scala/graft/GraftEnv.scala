@@ -1,9 +1,9 @@
 package graft
 
-/** The numeric SPARK_GRAFT_* settings, parsed in one place: a malformed
-  * value fails with an error naming the variable and the value, not a bare
-  * `NumberFormatException`. Readers take the environment as a parameter so
-  * a spec can pass its own. */
+/** The numeric and on/off SPARK_GRAFT_* settings, parsed in one place: a
+  * malformed value fails with an error naming the variable and the value,
+  * not a bare `NumberFormatException`. Readers take the environment as a
+  * parameter so a spec can pass its own. */
 object GraftEnv {
   type Env = collection.Map[String, String]
 
@@ -39,6 +39,14 @@ object GraftEnv {
     * `DedupOps.connectedComponents`' driver union-find fast path (0 disarms). */
   def ccLocalEdges(env: Env = sys.env): Long =
     read(env, "SPARK_GRAFT_CC_LOCAL_EDGES", 2000000L)(_.trim.toLong)
+
+  /** SPARK_GRAFT_NO_COALESCE: unset, or 1 to make [[Verify]] write each
+    * query's partitions as they are instead of one file. */
+  def noCoalesce(env: Env = sys.env): Boolean =
+    read(env, "SPARK_GRAFT_NO_COALESCE", false) { s =>
+      if (s != "1") throw new NumberFormatException("set it to 1 or leave it unset")
+      true
+    }
 
   /** Parses the settings queries read while they are built, so a malformed
     * one stops a main before its first query. */

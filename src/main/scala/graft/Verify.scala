@@ -1,7 +1,14 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import graft.queries.QuerySpec
+
+/** Correctness dump for the DuckDB oracle compare (scripts/check.py):
+  * `graft.Verify <sfDir> <outDir> [query ...]` writes each named query's
+  * result (every query's, with no names) to `<outDir>/<name>` as parquet,
+  * and every query's oracle SQL to `<outDir>/oracle_sql.json`. A query runs
+  * its `verify` path when it declares one, and its `planMust` is checked;
+  * a query that fails is reported on stderr and the run goes on. */
 object Verify {
 
   /** Cell normalization matching scripts/check.py `norm_cell` bit-for-bit:
@@ -69,25 +76,27 @@ object Verify {
   }
 
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    // Verify-only behavior switch: queries whose oracle needs a materialized
-    // intermediate (dedup_simhash's fingerprint dump) check for this prop, so
-    // Bench and library callers never pay for or depend on the side write.
-    System.setProperty("graft.fp.dump", "1")
-    GraftEnv.check()
-    val spark = GraftSessions.local(GraftEnv.cpus(4))
-    new java.io.File(outDir).mkdirs()
-    var nFailed = 0
-    // Optional subset for large-SF local sweeps (driver runs set neither):
-    // SPARK_GRAFT_ONLY=a,b,c runs just those; SPARK_GRAFT_SKIP=x,y drops those.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val skip = sys.env.get("SPARK_GRAFT_SKIP").map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
+    if (args.length < 2) {
+      System.err.println("usage: graft.Verify <sfDir> <outDir> [query ...]")
+      sys.exit(2)
+    }
+    val Array(sfDir, outDir) = args.take(2)
+    // Query names after the two dirs run just those (large-SF local
+    // sweeps); with none, every query runs, as the correctness gate does.
+    val named = args.drop(2).toSeq.distinct
+    val unknown = named.filterNot(n => QuerySpec.all.exists(_.name == n))
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val specs = if (named.isEmpty) QuerySpec.all else QuerySpec.all.filter(q => named.contains(q.name))
     // coalesce(1) gives the driver one tidy file per query, but it also
     // collapses each query's FINAL STAGE to one thread — invisible at
     // sf0.01, a 32× de-parallelizer on heavy queries at sf1+. Large-SF
     // local sweeps set SPARK_GRAFT_NO_COALESCE=1 to write per-partition
     // files instead (check.py globs *.parquet, so both layouts compare).
-    val noCoalesce = sys.env.contains("SPARK_GRAFT_NO_COALESCE")
+    val noCoalesce = GraftEnv.noCoalesce()
+    GraftEnv.check()
+    val spark = GraftSessions.local(GraftEnv.cpus(4))
+    new java.io.File(outDir).mkdirs()
+    var nFailed = 0
     // Forensic digests (driver-red triage): for each named query, after the
     // dump, re-read the WRITTEN parquet and emit a canonical result digest
     // (<name>.digest.json — cells normalized exactly as scripts/check.py
@@ -99,35 +108,25 @@ object Verify {
     // query that has gone driver-red while locally green (quota_sample).
     val digestFor = sys.env.getOrElse("SPARK_GRAFT_DIGEST", "quota_sample")
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) && !skip(name) }
-      .foreach { case (name, fn) =>
+    specs.foreach { spec =>
       try {
-        val df = fn(spark, sfDir)
-        // Plan-shape gate: these two queries are REQUIRED to hit the
-        // bounded-heap TopKRankedExec (plans/RowNumberTopKRewrite). The
-        // rewrite is spec-proven output-identical, so if it silently
-        // stopped matching the only symptom would be perf drift — throwing
-        // here turns that into a red gate row instead.
-        if (name == "window_topk_per_group" || name == "tfidf_top_terms") {
-          val phys = df.queryExecution.executedPlan.toString
-          require(phys.contains("TopKRanked"),
-            s"$name: RowNumberTopKRewrite did not fire (no TopKRankedExec in plan)")
-        }
+        // a query's Verify path, when it has one, dumps the intermediate
+        // relation its oracle reads
+        val df = spec.verify.getOrElse(spec.build)(spark, sfDir)
+        spec.checkPlan(df)
         (if (noCoalesce) df else df.coalesce(1)).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        if (digestFor(name)) writeDigest(spark, outDir, name)
+          .parquet(s"$outDir/${spec.name}")
+        if (digestFor(spec.name)) writeDigest(spark, outDir, spec.name)
       }
       catch { case e: Throwable =>
         nFailed += 1
-        System.err.println(s"[verify] $name failed: $e") // toString: getMessage can be null
+        System.err.println(s"[verify] ${spec.name} failed: $e") // toString: getMessage can be null
       }
     }
     // quota_sample's input sidecar (doc_id, source, n_tokens, pri, pid):
     // if these rows agree across environments, the output is forced — the
     // plan is a pure function of them (Buckets.hexBucket, no partition ids).
-    if (digestFor("quota_sample") &&
-        only.forall(_.contains("quota_sample")) && !skip("quota_sample")) {
+    if (digestFor("quota_sample") && specs.exists(_.name == "quota_sample")) {
       try {
         val side = ops.CurationPipeline
           .quotaSampleForensics(Tables.documents(spark, sfDir))

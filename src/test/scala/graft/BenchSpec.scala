@@ -8,11 +8,6 @@ class BenchSpec extends SparkSpecBase {
   test("measure: builder runs once per sample; counters and plan hash come from the last one") {
     val counters = new Bench.JobCounters(spark.sparkContext)
     spark.sparkContext.addSparkListener(counters)
-    // Spark cuts a scan's DataFilters string at this length before the
-    // canonicalization masks expression ids, so where it cuts depends on
-    // how many digits the ids have; printed whole, the hash depends on the
-    // plan only, which is what this compares.
-    spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
     try {
       val hashes = Seq("q6_forecast_revenue", "compaction").map { name =>
         var calls = 0
@@ -30,9 +25,12 @@ class BenchSpec extends SparkSpecBase {
       val q6 = SparkEntry.queries("q6_forecast_revenue")(spark, sfDir)
       assert(hashes("q6_forecast_revenue") == Bench.planHash(q6))
       assert(hashes("compaction") != "err")
-    } finally {
-      spark.conf.unset("spark.sql.maxMetadataStringLength")
-      spark.sparkContext.removeSparkListener(counters)
-    }
+    } finally spark.sparkContext.removeSparkListener(counters)
+  }
+
+  test("planHash: a lambda query's hash does not depend on how many lambdas were built before") {
+    // each build numbers its lambda variables from one JVM-wide counter
+    val hashes = (1 to 2).map(_ => Bench.planHash(SparkEntry.queries("wordcount")(spark, sfDir)))
+    assert(hashes.head != "err" && hashes.head == hashes.last, hashes)
   }
 }

@@ -1,45 +1,37 @@
 package graft
 
-/** Driver-contract hygiene: every query is either oracle-checked or on the
-  * documented rows-only list — nothing can silently drift out of the
+import graft.queries.QuerySpec
+
+/** Contract hygiene: every query is declared once, with its oracle
+  * (a [[QuerySpec]] cannot be built without one), and every path Verify
+  * runs executes here too — nothing can silently drift out of the
   * correctness gate. */
 class ContractSpec extends SparkSpecBase {
 
-  /** Ops whose output is not SQL-expressible in DuckDB (engine-internal
-    * approx sketches) — each MUST have spec coverage instead. Since r5 the
-    * ANN variants and rolling_fingerprint are oracle-checked via the
-    * materialized-relation pattern (bucket/probe + window-hash dumps). */
-  /** Since r6 hll_reaggregate is oracle-checked too: the transparent
-    * register-relation HLL dumps its daily registers and DuckDB re-runs
-    * the max-union + harmonic-mean estimate over them. approx_sketch — the
-    * last rows-only holdout — joined it late in r6 via the same register
-    * dump plus md5-sample order-statistic quantiles, so the list is empty:
-    * EVERY query is oracle-checked. */
-  /** Since r9 the list is empty again: `sudoku` — briefly the one genuine
-    * rows-only entry (solving needs exact-cover search DuckDB SQL cannot
-    * express) — is now oracle-checked via the planted-solution pattern:
-    * uniqueness-bounded puzzles must recover their generator source grid,
-    * so the oracle is a literal-VALUES comparison, no SQL solver needed.
-    * bbp_pi_digits and pentomino are likewise literal-VALUES ground
-    * truth. EVERY query is oracle-checked. */
-  private val rowsOnly = Set.empty[String]
-
-  test("every query has an oracle or is on the documented rows-only list") {
-    val qs = SparkEntry.queries.keySet
-    val os = SparkEntry.oracleSql.keySet
-    assert(os.subsetOf(qs), s"oracles without queries: ${os -- qs}")
-    assert((qs -- os) == rowsOnly, s"undocumented rows-only queries: ${qs -- os -- rowsOnly}" +
-      s"; stale rows-only entries: ${rowsOnly -- (qs -- os)}")
+  test("query names are unique") {
+    // SparkEntry's maps would keep only the last of two specs with one name
+    val names = QuerySpec.all.map(_.name)
+    assert(names.diff(names.distinct).isEmpty, s"declared twice: ${names.diff(names.distinct)}")
+    assert(SparkEntry.queries.size == names.size && SparkEntry.oracleSql.size == names.size)
   }
 
+  // also runs each declared Verify path and checks each planMust
   test("every query executes at sf0.001 (row counts are the sf0.01 gate's job)") {
     val dir = "/root/testdata/sf0.001"
     // some selective queries legitimately yield 0 rows at the smallest SF
     // (e.g. q7's nation pair is absent among 10 suppliers) — this check is
     // about execution, the DuckDB gate at sf0.01 checks content
-    SparkEntry.queries.foreach { case (name, q) =>
-      val n = q(spark, dir).count()
-      assert(n >= 0, s"$name failed to execute at sf0.001")
+    QuerySpec.all.foreach { q =>
+      val built = q.build(spark, dir)
+      assert(built.count() >= 0, s"${q.name} failed to execute at sf0.001")
+      val verified = q.verify.fold(built) { v =>
+        val df = v(spark, dir)
+        assert(df.count() >= 0, s"${q.name}: Verify path failed to execute at sf0.001")
+        assert(df.columns.sorted.sameElements(built.columns.sorted),
+          s"${q.name}: Verify path columns ${df.columns.mkString(",")} vs ${built.columns.mkString(",")}")
+        df
+      }
+      q.checkPlan(verified)
     }
   }
 }

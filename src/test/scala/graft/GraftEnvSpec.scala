@@ -26,4 +26,13 @@ class GraftEnvSpec extends AnyFunSuite {
     assert(GraftEnv.ppjoinBudget(Map.empty) == 200000000L)
     assert(GraftEnv.ccLocalEdges(Map.empty) == 2000000L)
   }
+
+  test("SPARK_GRAFT_NO_COALESCE: unset or 1; anything else, 0 included, is rejected") {
+    assert(!GraftEnv.noCoalesce(Map.empty))
+    assert(GraftEnv.noCoalesce(Map("SPARK_GRAFT_NO_COALESCE" -> "1")))
+    for (v <- Seq("0", "", "true", " 1")) {
+      val e = intercept[IllegalArgumentException](GraftEnv.noCoalesce(Map("SPARK_GRAFT_NO_COALESCE" -> v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_NO_COALESCE") && e.getMessage.contains(s""""$v""""), e.getMessage)
+    }
+  }
 }
