@@ -71,8 +71,6 @@ final class SpaceSavingBuffer {
         byCount.add(e)
     }
 
-  def minEntry: (Long, UTF8String) = { val e = byCount.head; (e.cnt, e.key) }
-
   def removeMin(): (Long, UTF8String) = {
     val e = byCount.head
     byCount.remove(e)

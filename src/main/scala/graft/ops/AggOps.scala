@@ -648,8 +648,6 @@ object AggOps {
   def approxSketchTransparent(lineitem: DataFrame): DataFrame =
     approxSketchFromRegisters(lineitem, approxSketchRegisters(lineitem))
 
-  /** Tumbling-window event counts — the batch twin of the streaming agg in
-    * graft.streaming (same grouping, watermark added on the stream side). */
   /** Ordered funnel conversion (view → click → purchase): per stage, the
     * earliest qualifying time must STRICTLY follow the previous stage's.
     * Times are compared at epoch-second resolution on both engines (Spark
@@ -790,14 +788,13 @@ object AggOps {
       .select(unix_timestamp(col("w.start")).as("window_start"), col("event_type"),
         col("n_events"), col("sum_value"))
 
-  /** Native session windows — the built-in third formulation of
-    * sessionization (next to the lag/cumsum batch op and the
-    * flatMapGroupsWithState stream). Boundary semantics differ from the
-    * lag form: session_window treats a gap of EXACTLY gapSec as a NEW
-    * session (windows [t, t+gap) merge only when they overlap), and the
-    * emitted end is last_event + gap, not last_event — the oracle mirrors
-    * both. Also the streaming-ready shape: the same expression works under
-    * a watermark with state eviction. */
+  /** Native session windows — the built-in second formulation of
+    * sessionization (next to the lag/cumsum batch op). Boundary semantics
+    * differ from the lag form: session_window treats a gap of EXACTLY
+    * gapSec as a NEW session (windows [t, t+gap) merge only when they
+    * overlap), and the emitted end is last_event + gap, not last_event —
+    * the oracle mirrors both. Also the streaming-ready shape: the same
+    * expression works under a watermark with state eviction. */
   def sessionizeNative(events: DataFrame, gapSec: Long = 1800L): DataFrame =
     events
       // gap decisions at epoch-second resolution (unix_timestamp floors),

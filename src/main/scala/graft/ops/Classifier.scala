@@ -194,39 +194,6 @@ object Classifier {
     out
   }
 
-  /** Mean logistic loss + accuracy of `w` on the feature relation — the
-    * spec's convergence/quality probe (one shuffle-free pass). */
-  def evaluate(feats: DataFrame, d: Int, w: Array[Double]): (Double, Double) = {
-    val spark = feats.sparkSession
-    import spark.implicits._
-    val ds = feats.groupBy(col("doc_id"), col("y"))
-      .agg(sort_array(collect_list(struct(col("idx"), col("v")))).as("fv"))
-      .select(col("y").cast("double").as("y"),
-        expr("transform(fv, p -> p.idx)").as("idx"),
-        expr("transform(fv, p -> p.v)").as("v"))
-      .as[(Double, Array[Int], Array[Double])]
-    val bw = spark.sparkContext.broadcast(w)
-    val (loss, correct, n) = ds.mapPartitions { rows =>
-      val wv = bw.value
-      var loss = 0.0; var correct = 0L; var n = 0L
-      rows.foreach { case (y, idx, v) =>
-        var m = wv(wv.length - 1)
-        var i = 0
-        while (i < idx.length) { m += wv(idx(i)) * v(i); i += 1 }
-        val p = 1.0 / (1.0 + math.exp(-m))
-        loss += (if (y > 0.5) -math.log(math.max(p, 1e-15))
-                 else -math.log(math.max(1.0 - p, 1e-15)))
-        if ((m > 0) == (y > 0.5)) correct += 1
-        n += 1
-      }
-      Iterator((loss, correct, n))
-    }.collect().foldLeft((0.0, 0L, 0L)) { case ((a, b, c), (x, y, z)) =>
-      (a + x, b + y, c + z)
-    }
-    bw.destroy()
-    (loss / math.max(1, n), correct.toDouble / math.max(1, n))
-  }
-
   /** Declarative scoring twin: feature relation ⋈ weight relation (broadcast
     * by stats — D rows max), per-doc sum. This is the arithmetic the DuckDB
     * oracle replays over the dumped relations; [[scoreMapSide]] is the

@@ -467,11 +467,6 @@ object DedupOps {
     verifyPairs(cand, sh, tau)
   }
 
-  /** Base hashes of a shingle array (materialize BEFORE minhashFromHashes —
-    * interpreted lambdas re-evaluate inlined inputs per permutation). */
-  def shingleHashes(shingleCol: Column): Column =
-    transform(shingleCol, s => pmod(xxhash64(s), lit(P)))
-
   /** MinHash signature (array<bigint>, length numPerms) from pre-hashed
     * shingles — map-side, no per-perm row explosion. Native expression: the
     * interpreted transform/array_min composition gets re-inlined by Catalyst
@@ -481,28 +476,21 @@ object DedupOps {
     graft.functions.GraftFunctions.minhashSig(hashCol, numPerms)
 
   /** (doc_id, band, band_sig) LSH banding as one narrow per-row projection
-    * chain — STREAMING-SAFE (no persist, no shuffle), shared by the
-    * streaming near-dup twin (graft.streaming.Streams.nearDupCandidates)
-    * and identical lane-for-lane to the banding inside [[minhashLshPairs]]
-    * (same tokenizer, shingle n, perm family, band hasher), so candidates
-    * found by one are candidates under the other. */
-  def bandedMinhashSigs(docs: DataFrame, numPerms: Int = 128, bands: Int = 32,
-                        carryCols: Seq[String] = Nil): DataFrame = {
+    * chain (no persist, no shuffle), identical lane-for-lane to the banding
+    * inside [[minhashLshPairs]] (same tokenizer, shingle n, perm family,
+    * band hasher), so candidates found by one are candidates under the
+    * other. */
+  def bandedMinhashSigs(docs: DataFrame, numPerms: Int = 128, bands: Int = 32): DataFrame = {
     require(numPerms % bands == 0,
       s"bandedMinhashSigs: bands=$bands must divide numPerms=$numPerms")
     GraftFunctions.register(docs.sparkSession)
-    // carryCols ride the projection chain unchanged (e.g. the event-time
-    // column the watermark-bounded streaming twin pairs within)
-    val carried = carryCols.map(col)
-    docs.select(col("doc_id") +: TextOps.tokens(col("text")).as("t") +: carried: _*)
-      .select(col("doc_id") +: shinglesFromTokens(col("t"), 3).as("s") +: carried: _*)
+    docs.select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
+      .select(col("doc_id"), shinglesFromTokens(col("t"), 3).as("s"))
       .filter(size(col("s")) > 0)
-      .select(col("doc_id") +:
-        transform(col("s"), x => pmod(xxhash64(x), lit(P))).as("hs") +: carried: _*)
-      .select(col("doc_id") +: minhashFromHashes(col("hs"), numPerms).as("sig") +: carried: _*)
-      .select(col("doc_id") +:
-        posexplode(GraftFunctions.bandHashes(col("sig"), bands)).as(Seq("band", "band_sig")) +:
-        carried: _*)
+      .select(col("doc_id"), transform(col("s"), x => pmod(xxhash64(x), lit(P))).as("hs"))
+      .select(col("doc_id"), minhashFromHashes(col("hs"), numPerms).as("sig"))
+      .select(col("doc_id"),
+        posexplode(GraftFunctions.bandHashes(col("sig"), bands)).as(Seq("band", "band_sig")))
   }
 
   /** MinHash + LSH near-dup pairs, verified with exact Jaccard ≥ tau.
@@ -516,10 +504,9 @@ object DedupOps {
     * Two defenses: (1) the band-join output volume rides every run as a
     * named observation ("lsh_band_join"/cand_rows_pre_dedup — Bench dumps
     * it under "observed"), so degeneration is VISIBLE, not a silent OOM
-    * forensics session; (2) `maxBucket > 0` applies the streaming twin's
-    * saturation cap (Streams.nearDupCandidates maxBucket) in its batch
-    * form: bucket members are ranked by doc_id (deterministic arrival
-    * order) and only the first `maxBucket` act as the index side, so every
+    * forensics session; (2) `maxBucket > 0` applies a saturation cap:
+    * bucket members are ranked by doc_id (deterministic arrival order)
+    * and only the first `maxBucket` act as the index side, so every
     * doc still pairs with up to maxBucket earlier members — candidate rows
     * drop from O(bucketN²) to O(bucketN × maxBucket), connected components
     * over the output still group a saturated cluster (every later member
@@ -710,64 +697,22 @@ object DedupOps {
     * every HISTORICAL document) is the dominant cost of incremental dedup
     * if recomputed per ingest batch; the store pays it once, and each batch
     * thereafter reads narrow (band, band_sig, doc_id) rows. Layout:
-    * bands/ partitioned by band; accepted batches append under
-    * bands_inc/<label> in the same layout (batch-path write — idempotent
-    * because each label is one batch's full rewrite); [[readMinhashStore]]
-    * merges base + increments; fold increments into bands/ with a
-    * compaction rewrite when the batch count grows. */
+    * bands/ partitioned by band; a grown corpus is a rebuild. */
   def minhashWriteStore(docs: DataFrame, dir: String,
                         numPerms: Int = 128, bands: Int = 32): Unit = {
-    // A full rebuild invalidates accumulated increments by definition:
-    // bands_inc/ signatures left over from a previous store would be merged
-    // by readMinhashStore into the NEW base — stale rows for documents that
-    // may no longer exist, and duplicates for ones that do. Clear the root.
+    // A rebuild replaces the whole store: clear the root first, so the dir
+    // holds only what this build writes. (Under dynamic partition
+    // overwrite, the bands write alone would keep the old rows of every
+    // band this build leaves empty.)
     graft.sources.IO.deletePath(docs.sparkSession, dir)
     bandedMinhashSigs(docs, numPerms, bands)
       .write.mode("overwrite").partitionBy("band").parquet(s"$dir/bands")
   }
 
-  /** Fold accumulated ingest batches (bands_inc/<label>) back into the base
-    * banded relation — the store's HAR-style re-layout pass (the IVF twin
-    * is SimilarityOps.compactIndex; reference analog: hadoop-archives
-    * re-packing accumulated small files, HadoopArchives.java:1). Queries
-    * see either layout identically (readMinhashStore merges on read);
-    * compaction restores one band-partitioned dir so discovery lists one
-    * relation and file counts stop growing with batch count. Staged write +
-    * swap, increments deleted last; the merge dedups full rows, so a crash
-    * between swap and delete (increments folded AND present) heals on
-    * re-run instead of double-counting. No-op when no increments exist. */
-  def compactMinhashStore(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val incRoot = new org.apache.hadoop.fs.Path(s"$dir/bands_inc")
-    val fs = incRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(incRoot)) return
-    val staging = s"$dir/bands_cmp"
-    readMinhashStore(spark, dir).dropDuplicates()
-      .write.mode("overwrite").partitionBy("band").parquet(staging)
-    graft.sources.IO.swapPath(spark, staging, s"$dir/bands")
-    graft.sources.IO.deletePath(spark, s"$dir/bands_inc")
-  }
-
-  /** Append one accepted batch's signatures under bands_inc/<label> —
-    * re-running the same label overwrites (retry-idempotent). */
-  def minhashAppendStore(docs: DataFrame, dir: String, label: String,
-                         numPerms: Int = 128, bands: Int = 32): Unit =
-    bandedMinhashSigs(docs, numPerms, bands)
-      .write.mode("overwrite").partitionBy("band").parquet(s"$dir/bands_inc/$label")
-
-  /** The store's full banded relation: base build plus appended batches. */
+  /** The store's banded relation, as [[minhashWriteStore]] wrote it. */
   def readMinhashStore(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): DataFrame = {
-    val base = spark.read.parquet(s"$dir/bands")
-    val incRoot = new org.apache.hadoop.fs.Path(s"$dir/bands_inc")
-    val fs = incRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(incRoot)) base
-    else fs.listStatus(incRoot).filter(st => st.isDirectory &&
-        // an increment dir with no part files (interrupted append, empty
-        // batch) has no schema to infer — it reads as "no rows" by skipping
-        SimilarityOps.hasParquetFile(fs, st.getPath))
-      .map(st => spark.read.parquet(st.getPath.toString))
-      .foldLeft(base)((acc, b) => acc.unionByName(b))
-  }
+                       dir: String): DataFrame =
+    spark.read.parquet(s"$dir/bands")
 
   /** [[incrementalDropIds]] against a PERSISTED signature store instead of
     * re-banding the existing corpus: the new batch is shingled and banded
@@ -1318,47 +1263,6 @@ object DedupOps {
     cross.unionByName(same)
   }
 
-  /** Multi-index variant for HUGE corpora (Norouzi et al. 2012, "Fast Search
-    * in Hamming Space with Multi-Index Hashing"): fewer-but-WIDER bands with
-    * 1-bit probe expansion. Pigeonhole: r errors over k bands leave some
-    * band with ≤ floor(r/k) errors, so with k > r/2 some band is within
-    * hamming 1 — the probe side enumerates each band value plus all its
-    * 1-bit flips and equi-joins against exact band keys.
-    *
-    * Bucket math vs the 0-probe form at radius 6: 7 bands × 9 bits → 512
-    * buckets/band (n/512 per bucket, quadratic within); here 4 bands × 16
-    * bits → 65536 buckets/band (128× smaller buckets, 1/16384 the
-    * per-bucket quadratic term) for 17× more probe rows — the right trade
-    * once n passes ~10^8. Same output as simhashPairsFromFingerprints. */
-  def simhashPairsMultiIndex(fp: DataFrame, maxHamming: Int = 6, bands: Int = 4): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < 64, s"maxHamming=$maxHamming out of [0,64)")
-    require(bands * 2 > maxHamming,
-      s"multi-index needs bands > maxHamming/2 (got bands=$bands, maxHamming=$maxHamming): " +
-        "pigeonhole must leave some band within hamming 1 of a true pair")
-    require(bands >= 1 && bands <= 64)
-    GraftFunctions.register(fp.sparkSession)
-    val docs = fp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val distinctFp = docs.select(col("fp")).distinct()
-    val sliced = bandSlices(distinctFp, bands)
-    val index = sliced.select(col("fp"), col("band"), col("band_bits"))
-    // probe rows: the exact band value (j=0) plus each 1-bit flip (j-1)
-    val probes = sliced.select(col("fp"), col("band"),
-        explode(expr(
-          "transform(sequence(0, hi - lo), " +
-            "j -> CASE WHEN j = 0 THEN band_bits ELSE band_bits ^ shiftleft(1L, j - 1) END)"))
-          .as("probe_bits"))
-    // same filter-before-dedup ordering as the banded form: shrink the
-    // dedup shuffle to within-radius survivors
-    val fpPairs = probes.as("x").join(index.as("y"),
-        col("x.band") === col("y.band") && col("x.probe_bits") === col("y.band_bits") &&
-        col("x.fp") < col("y.fp"))
-      .select(col("x.fp").as("fa"), col("y.fp").as("fb"))
-      .withColumn("hamming", GraftFunctions.hamming64(col("fa"), col("fb")))
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("fa", "fb")
-    expandFpPairsToDocPairs(docs, fpPairs)
-  }
-
   /** Cross-document PARAGRAPH dedup — the CCNet/MassiveText boilerplate
     * rule (Wenzek et al. 2020 §3.1; Rae et al. 2021 §A1.2): a span repeated
     * across ≥ minDocs distinct documents is boilerplate (headers, footers,
@@ -1388,8 +1292,8 @@ object DedupOps {
     *      fits (`broadcastDropMax`), a contamination-sized shuffle beyond.
     * The pre-r10 form shuffled every byte of corpus text twice (a
     * paragraph-string join against the full framed relation, then a
-    * groupBy(doc_id).collect_list rebuild) — kept as
-    * [[dedupParagraphsRegroup]] for the output-identity spec.
+    * groupBy(doc_id).collect_list rebuild) — the specs keep it as the
+    * output-identity reference.
     * Output: (doc_id, n_paras, n_dropped, text_clean); docs whose every
     * paragraph is boilerplate stay, with text_clean = ''. */
   def dedupParagraphs(docs: DataFrame, paraWords: Int = 10,
@@ -1488,40 +1392,5 @@ object DedupOps {
       cleanRebuild(framedArr.filter(!isDirty))
         .unionByName(rebuildWithDrops(framedArr.filter(isDirty), dropSets))
     }
-  }
-
-  /** The pre-r10 regroup form of [[dedupParagraphs]] — identical output,
-    * kept as the spec's identity reference: it shuffles the full framed
-    * paragraph text twice (boiler join keyed on the paragraph string, then
-    * a corpus-wide groupBy(doc_id).collect_list rebuild), which is the
-    * shape the r10 rewrite exists to avoid at 100 TB. */
-  private[graft] def dedupParagraphsRegroup(docs: DataFrame, paraWords: Int = 10,
-                                            minDocs: Int = 2): DataFrame = {
-    require(paraWords >= 1 && minDocs >= 2)
-    val w = TextOps.tokens(col("text"))
-    val framed = docs
-      .select(col("doc_id"), w.as("w")).withColumn("n", size(col("w")))
-      .filter(col("n") > 0)
-      .select(col("doc_id"), posexplode(transform(
-          sequence(lit(0), floor((col("n") + (paraWords - 1)) / paraWords).cast("int") - 1),
-          i => array_join(slice(col("w"), i * paraWords + 1, lit(paraWords)), " ")))
-        .as(Seq("idx", "para")))
-      .withColumn("h", xxhash64(col("para")))
-    val candHashes = framed.select(col("h"), col("doc_id")).distinct()
-      .groupBy(col("h")).agg(count(lit(1)).as("nd"))
-      .filter(col("nd") >= minDocs).select(col("h"))
-    val boiler = framed.join(candHashes, Seq("h"), "left_semi")
-      .select(col("para"), col("doc_id")).distinct()
-      .groupBy(col("para")).agg(count(lit(1)).as("nd"))
-      .filter(col("nd") >= minDocs).select(col("para"), lit(1).as("is_dup"))
-    framed.join(boiler, Seq("para"), "left")
-      .withColumn("is_dup", coalesce(col("is_dup"), lit(0)))
-      .groupBy(col("doc_id")).agg(
-        count(lit(1)).cast("long").as("n_paras"),
-        sum(col("is_dup")).cast("long").as("n_dropped"),
-        array_join(transform(
-          array_sort(collect_list(when(col("is_dup") === 0,
-            struct(col("idx"), col("para"))))),
-          s => s.getField("para")), " ").as("text_clean"))
   }
 }

@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   * as the representative extracted feature). AUDIO decode is REAL too:
   * `decodeAudio` runs javax.sound.sampled (WAV/AIFF/AU, PCM + ULAW/ALAW),
   * reading header metadata and a bounded-prefix RMS amplitude. Payloads no
-  * JDK codec accepts (video containers, corrupt bytes) fall back to the
-  * deterministic synthetic-header stub (`decodeStub`) so the pipeline is
-  * total — that stub remains the stand-in only for VIDEO codecs.
+  * JDK codec accepts (corrupt bytes, non-MJPEG video codecs) fall back to a
+  * deterministic synthetic-header stub record marked `real_decode = false`,
+  * so the pipeline is total.
   *
   * Scale: binary payloads ride in parquet as byte arrays; decode is map-side;
   * `repartition` before decode balances payload bytes (not row counts) when
@@ -23,8 +23,6 @@ import org.apache.spark.sql.functions._
 object MultimodalOps {
 
   case class MediaRecord(media_id: Long, bytes: Array[Byte], kind: String)
-  case class DecodedMeta(media_id: Long, kind: String, byte_len: Int,
-                         width: Int, height: Int, n_frames: Int)
 
   /** Oracle-checkable metadata pass over binary content (here derived from
     * the documents table: bytes = UTF-8 of text — a stand-in payload). */
@@ -337,8 +335,7 @@ object MultimodalOps {
     * (16.16 fixed-point width/height, track count); and the RIFF AVI
     * header list (avih: width/height/total frames/frame interval). This is
     * the part of video decode that needs only public byte-layout knowledge;
-    * FRAME decode still goes through the deterministic stub
-    * (`decodeStub`/`frameSampleStub`) since the container ships no codecs.
+    * FRAME decode is [[decodeVideoFrames]]'s job.
     * Unparseable payloads degrade to a stub record (`real_parse = false`) —
     * same totality contract as decodeImages/decodeAudio. */
   def parseVideoMeta(spark: SparkSession, media: Dataset[MediaRecord]): Dataset[VideoMeta] = {
@@ -502,12 +499,11 @@ object MultimodalOps {
     * javax.imageio JPEG codec decodes them with no new packages: every
     * `everyK`th frame (up to `maxFramesPerVideo`) is decoded and its mean
     * luminance emitted — the frame-sampling fan-out shape (one row per
-    * sampled frame) that frameSampleStub only mimicked. Bomb guard per
-    * frame mirrors decodeImages (declared raster bounded BEFORE pixel
-    * allocation). Payloads that are not AVI or whose frames are not JPEG
-    * (other FourCC codecs) degrade to one stub row with
-    * `real_decode = false` — the stub is now the fallback for non-MJPEG
-    * codecs only. */
+    * sampled frame). Bomb guard per frame mirrors decodeImages (declared
+    * raster bounded BEFORE pixel allocation). Payloads that are not AVI
+    * or whose frames are not JPEG (other FourCC codecs) degrade to one
+    * stub row with `real_decode = false` — the stub is now the fallback
+    * for non-MJPEG codecs only. */
   def decodeVideoFrames(spark: SparkSession, media: Dataset[MediaRecord],
                         everyK: Int = 4, maxFramesPerVideo: Int = 8,
                         maxSampledPixels: Int = 1 << 16,
@@ -632,38 +628,16 @@ object MultimodalOps {
     }
   }
 
-  /** STUB DECODER — deterministic fake now standing in ONLY for non-MJPEG
-    * video codecs (images decode for real via decodeImages, audio via
-    * decodeAudio, video containers via parseVideoMeta, MJPEG-in-AVI frames
-    * via decodeVideoFrames). "Decodes" width/height/frames from the first
-    * payload bytes. Partition-wise: one "decoder" per partition, records
-    * streamed through it — the exact batch shape a real codec (or
-    * mapInPandas) needs. */
-  def decodeStub(spark: SparkSession, media: Dataset[MediaRecord]): Dataset[DecodedMeta] = {
-    import spark.implicits._
-    media.mapPartitions { it =>
-      // real codec would init native resources here, once per partition
-      it.map { m =>
-        val b = m.bytes
-        def at(i: Int): Int = if (b.length > i) b(i) & 0xff else 0
-        DecodedMeta(m.media_id, m.kind, b.length,
-          width = 16 + at(0) % 240, height = 16 + at(1) % 240,
-          n_frames = if (m.kind == "video") 1 + at(2) % 32 else 1)
-      }
-    }
-  }
-
   case class ResizedImage(media_id: Long, width: Int, height: Int,
                           out_bytes: Array[Byte], mean_luma: Double, real_decode: Boolean)
 
   /** REAL image resize (r6 — the resize stage's pixels, not just its
     * metadata): decode (bomb-guarded, as decodeImages), resample into an
     * aspect-kept bounded box with Graphics2D bilinear, re-encode LOSSLESSLY
-    * (PNG) so downstream stages consume real resized rasters. The box uses
-    * the SAME shrink-only integer arithmetic as resizeStub —
-    * out = max(1, dim·maxDim / max(w, h, maxDim)) — so the closed-form
-    * metadata oracle carries over unchanged to the real path. Undecodable
-    * payloads degrade to the stub's metadata-only resize with
+    * (PNG) so downstream stages consume real resized rasters. The box is
+    * shrink-only integer arithmetic — out = max(1, dim·maxDim /
+    * max(w, h, maxDim)) — so a closed-form metadata oracle predicts it.
+    * Undecodable payloads degrade to a metadata-only resize with
     * `real_decode = false` (mark, not kill). */
   def resizeImages(spark: SparkSession, media: Dataset[MediaRecord], maxDim: Int = 64,
                    maxSampledPixels: Int = 1 << 16,
@@ -718,27 +692,6 @@ object MultimodalOps {
         }
       }
     }
-  }
-
-  /** Stub resize: recompute metadata for a bounded box, keeping aspect via
-    * integer arithmetic (the plumbing of an image-resize stage). */
-  def resizeStub(spark: SparkSession, decoded: Dataset[DecodedMeta], maxDim: Int = 64): Dataset[DecodedMeta] = {
-    import spark.implicits._
-    decoded.map { d =>
-      val scaleNum = maxDim
-      val scaleDen = math.max(math.max(d.width, d.height), maxDim)
-      d.copy(width = math.max(1, d.width * scaleNum / scaleDen),
-             height = math.max(1, d.height * scaleNum / scaleDen))
-    }
-  }
-
-  /** Stub frame sampling: every kth frame index per video (the shape of a
-    * frame-extraction fan-out: one row per sampled frame). */
-  def frameSampleStub(spark: SparkSession, decoded: Dataset[DecodedMeta], k: Int = 4): DataFrame = {
-    import spark.implicits._
-    decoded.filter(_.kind == "video")
-      .flatMap(d => (0 until d.n_frames by k).map(f => (d.media_id, f)))
-      .toDF("media_id", "frame_idx")
   }
 
   // ---- deterministic synthetic payload builders ----------------------------

@@ -422,18 +422,6 @@ object SimilarityOps {
     (bits, b)
   }
 
-  /** The quadratic all-pairs baseline (spec reference only — the bucketed
-    * form above is the operator; this one exists to prove it exact). */
-  def embeddingNearDupAllPairs(spark: SparkSession, emb: DataFrame, tau: Double = 0.4): DataFrame = {
-    GraftFunctions.register(spark)
-    val a = emb.select(col("vec_id").as("a_id"), col("embedding").as("ea"))
-    val b = emb.select(col("vec_id").as("b_id"), col("embedding").as("eb"))
-    a.join(b, col("a_id") < col("b_id"))
-      .withColumn("cos", round(cosineSim(col("ea"), col("eb")), 5))
-      .filter(col("cos") >= tau)
-      .select(col("a_id"), col("b_id"), col("cos"))
-  }
-
   /** Brute-force top-k neighbours for the query set (vec_id < nQueries).
     * Broadcast the small query side; rank with a deterministic tie-break. */
   def bruteForceTopK(spark: SparkSession, emb: DataFrame,
@@ -966,12 +954,10 @@ object SimilarityOps {
     GraftFunctions.register(spark)
     val cs = trainKmeans(emb, nlist, iters, centroidStride)
     require(cs.nonEmpty, "empty corpus: nothing to index")
-    // A full rebuild invalidates ALL prior state by definition — including
-    // streaming increments under postings_inc/, which are bucketed under
-    // the OLD centroid model: left in place they would be merged by
-    // readIndexPostings into wrong (new-model) buckets, hiding vectors from
-    // probes and duplicating re-ingested ids. Clear the whole index root
-    // before writing the new model.
+    // A rebuild replaces the whole index: clear the root first, so the dir
+    // holds only what this build writes. (Under dynamic partition
+    // overwrite, the postings write alone would keep the old postings of
+    // every bucket the new model leaves empty.)
     graft.sources.IO.deletePath(spark, dir)
     kmeansCentroidRelation(spark, cs).coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/centroids")
@@ -994,6 +980,12 @@ object SimilarityOps {
       explode(nearestCentroids(col("embedding"), cents, probeK)).as("bucket"))
   }
 
+  /** The index's postings relation: one bucket-partitioned parquet dir,
+    * written whole by [[ivfWriteIndex]], so a bucket filter on it is a
+    * PartitionFilters entry. */
+  private[graft] def readIndexPostings(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/postings")
+
   /** Query a persisted IVF index: probe buckets → STATIC partition pruning
     * of the postings scan (the probe-bucket set is bounded by |queries| ×
     * nprobe, so the isin filter is an explicit PartitionFilters entry —
@@ -1001,85 +993,6 @@ object SimilarityOps {
     * per-query top-k. Output matches [[ivfTopK]]'s (q_id, n_id, cos, rn)
     * contract; a posting lives in exactly one bucket, so candidates never
     * duplicate. */
-  /** The index's full postings relation: the base build plus any
-    * incremental batches appended by Streams.ivfAppendStream
-    * (postings_inc/batch_N, same bucket-partitioned layout). Batch dirs are
-    * unioned individually so each keeps its own partition discovery; a
-    * compaction pass (IO.compaction over postings_inc into postings) folds
-    * them back when the batch count grows. */
-  private[graft] def readIndexPostings(spark: SparkSession, dir: String): DataFrame =
-    readIndexPostingsBatched(spark, dir).drop("_batch")
-
-  /** Same merge, tagged with a `_batch` ordinal (base = 0, batch_N = N+1) so
-    * maintenance passes can resolve a vec_id present in several layers
-    * deterministically — LATEST WINS, not "whichever row dropDuplicates saw
-    * first". Ordinals come from the batch dir names ivfAppendStream writes
-    * (monotone per epoch), so re-ingested/updated vectors compact to their
-    * newest embedding on every run. */
-  private[graft] def readIndexPostingsBatched(spark: SparkSession, dir: String): DataFrame = {
-    val base = spark.read.parquet(s"$dir/postings").withColumn("_batch", lit(0L))
-    val incRoot = new org.apache.hadoop.fs.Path(s"$dir/postings_inc")
-    val fs = incRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(incRoot)) base
-    else fs.listStatus(incRoot).filter(st => st.isDirectory &&
-        st.getPath.getName.matches("batch_\\d+") &&
-        // a batch dir with no part files (an interrupted write, or an empty
-        // micro-batch written by an older ivfAppendStream) has no schema to
-        // infer — skipping it is the only correct read of "no rows"
-        hasParquetFile(fs, st.getPath))
-      .map(st => spark.read.parquet(st.getPath.toString).withColumn("_batch",
-        lit(st.getPath.getName.stripPrefix("batch_").toLong + 1L)))
-      .foldLeft(base)((acc, b) => acc.unionByName(b))
-  }
-
-  private[graft] def hasParquetFile(fs: org.apache.hadoop.fs.FileSystem,
-                                    p: org.apache.hadoop.fs.Path): Boolean = {
-    val it = fs.listFiles(p, true)
-    var found = false
-    while (!found && it.hasNext) {
-      val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith(".parquet")) found = true
-    }
-    found
-  }
-
-  /** Fold accumulated streaming increments (postings_inc/batch_*) back into
-    * the base postings relation — the index's HAR-style re-layout pass
-    * (reference analog: hadoop-archives re-packs accumulated small files,
-    * HadoopArchives.java:1). Queries see either layout identically
-    * (readIndexPostings merges on read); compaction restores one
-    * bucket-partitioned relation so partition discovery lists ONE dir and
-    * per-bucket file counts stop growing with ingest batch count.
-    *
-    * Crash-safety (single-writer maintenance op): the merged relation is
-    * staged under postings_cmp and only then swapped onto postings/, so a
-    * crash before the swap leaves the readable layout untouched. A crash
-    * BETWEEN the swap and the increment delete leaves increments both
-    * folded and still present — which is why the merge dedups on vec_id (a
-    * posting is one vector): re-running compactIndex heals that state
-    * instead of materializing duplicates, and re-ingested vec_ids can no
-    * longer surface twice in a top-k. The dedup is DETERMINISTIC
-    * latest-wins: each layer carries a batch ordinal
-    * ([[readIndexPostingsBatched]]) and max-ordinal wins per vec_id (ties
-    * broken on the row content hash), so a vector re-ingested with a new
-    * embedding compacts to the NEW embedding on every run — never
-    * "whichever partition dropDuplicates happened to see first". No-op
-    * when no increments exist. */
-  def compactIndex(spark: SparkSession, dir: String): Unit = {
-    val incRoot = new org.apache.hadoop.fs.Path(s"$dir/postings_inc")
-    val fs = incRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(incRoot)) return
-    val staging = s"$dir/postings_cmp"
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("vec_id"))
-      .orderBy(col("_batch").desc, xxhash64(col("bucket"), col("embedding")))
-    readIndexPostingsBatched(spark, dir)
-      .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-      .drop("_rn", "_batch")
-      .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    graft.sources.IO.swapPath(spark, staging, s"$dir/postings")
-    graft.sources.IO.deletePath(spark, s"$dir/postings_inc")
-  }
-
   def ivfQueryIndex(spark: SparkSession, dir: String, queries: DataFrame,
                     k: Int = 5, nprobe: Int = 3): DataFrame = {
     val probes = ivfIndexProbes(spark, dir, queries, nprobe)

@@ -120,7 +120,7 @@ object TextOps {
     * Logalyzer.java:56 "archiving and analyzing (sort/grep) of log-files":
     * a grep pattern filters lines, then LogComparator orders them
     * column-wise by a `sortSpec` over a separator split). Input: a `line`
-    * string column (IO.readText(...).toDF("line") for files). Output:
+    * string column (spark.read.text(...).toDF("line") for files). Output:
     * (pos, line) — matching lines with their 1..N global rank under
     * (sort columns asc, full line asc); equal lines are interchangeable,
     * so the relation is deterministic.

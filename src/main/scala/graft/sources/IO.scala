@@ -14,13 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object IO {
 
-  def readParquet(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
-  def readCsv(spark: SparkSession, path: String, header: Boolean = true): DataFrame =
-    spark.read.option("header", header.toString).option("inferSchema", "true").csv(path)
-  def readJson(spark: SparkSession, path: String): DataFrame = spark.read.json(path)
-  def readOrc(spark: SparkSession, path: String): DataFrame = spark.read.orc(path)
-  def readText(spark: SparkSession, path: String): DataFrame = spark.read.text(path)
-
   /** Distributed metadata batch change — the hadoop-extras DistCh analog
     * (hadoop-tools/hadoop-extras/src/main/java/org/apache/hadoop/tools/
     * DistCh.java:1: a recursive listing becomes FileOperation records that
@@ -186,22 +179,11 @@ object IO {
   }
 
   /** Recursive delete (no-op when absent) — the FileSystem plumbing shared
-    * by index rebuilds and compaction passes. */
+    * by the IVF index and MinHash store rebuilds. */
   private[graft] def deletePath(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
-  }
-
-  /** Atomic-ish directory swap for compaction rewrites: delete `dst`, then
-    * rename `src` onto it. Rename is metadata-only on HDFS-like stores
-    * (object stores fall back to copy — still correct, just not O(1)). */
-  private[graft] def swapPath(spark: SparkSession, src: String, dst: String): Unit = {
-    val s = new org.apache.hadoop.fs.Path(src)
-    val d = new org.apache.hadoop.fs.Path(dst)
-    val fs = s.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(d)) fs.delete(d, true)
-    require(fs.rename(s, d), s"swapPath: rename $src -> $dst failed")
   }
 
   def writeParquet(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
@@ -522,8 +504,6 @@ object IO {
                      partitionCols: Seq[String]): DataFrame = {
     require(partitionCols.nonEmpty, "diffPartitions: no partition columns")
     val pcs = partitionCols.indices.map(i => s"_p$i")
-    def keyed(side: String, df: DataFrame) = df.select(
-      partitionCols.zip(pcs).map { case (c, p) => col(c).cast("string").as(s"$side$p") }: _*)
     def fingerprint(side: String, path: String, cols: Seq[String]) = {
       val df = spark.read.parquet(path)
       // hash over the SHARED column set in a fixed (sorted) order, so a

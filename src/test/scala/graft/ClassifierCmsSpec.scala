@@ -64,7 +64,7 @@ class ClassifierCmsSpec extends SparkSpecBase {
     val feats = Classifier.hashedFeatures(docs, label, d)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val w = Classifier.trainLogReg(feats, d, iters = 15)
-    val (loss, acc) = Classifier.evaluate(feats, d, w)
+    val (loss, acc) = SpecReferences.evaluate(feats, d, w)
     // disjoint language vocabularies -> a linear probe should separate well
     assert(acc >= 0.9, s"train accuracy $acc")
     assert(loss < math.log(2.0), s"loss $loss not below the all-zeros baseline")

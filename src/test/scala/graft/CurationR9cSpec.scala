@@ -1,12 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.ops._
-import graft.streaming.Streams
 
-/** Round-9 batch 3: persisted IVF index (build-once / query-many), its
-  * streaming append path, and corpus snapshot diff. The IVF specs
+/** Round-9 batch 3: persisted IVF index (build-once / query-many) and
+  * corpus snapshot diff. The IVF specs
   * recompute the probe-restricted ground truth in plain Scala from the
   * index the ops themselves persisted, so the equivalence is exact, and
   * pin the partition-pruning claim on the physical plan. */
@@ -64,40 +62,6 @@ class CurationR9cSpec extends SparkSpecBase {
     val plan = got.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
       "postings scan must be partition-pruned on bucket")
-  }
-
-  test("ivfAppendStream: streamed vectors are assigned with the index's " +
-    "own centroids and queries see base + increments") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/tmp/graft_test_ivf_stream"
-    wipe(dir)
-    val emb = Tables.embeddings(spark, sfDir)
-    SimilarityOps.ivfWriteIndex(spark, emb.filter(col("vec_id") < 250), dir)
-    val rest = emb.filter(col("vec_id") >= 250).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = Streams.ivfAppendStream(
-      input.toDF().toDF("vec_id", "embedding"), dir, s"$dir/ckpt")
-    try { input.addData(rest.toIndexedSeq: _*); q.processAllAvailable() }
-    finally q.stop()
-    val posts = SimilarityOps.readIndexPostings(spark, dir)
-    assert(posts.count() == emb.count(), "no vector lost on the stream path")
-    // streamed assignments match the argmax over the index's centroids
-    val cents = spark.read.parquet(s"$dir/centroids").orderBy("cluster")
-      .collect().map(_.getSeq[Float](1).toArray)
-    posts.filter(col("vec_id") >= 250)
-      .select("vec_id", "embedding", "bucket").collect().foreach { r =>
-        val v = r.getSeq[Float](1).toArray
-        // the shared assignment rule: round-6 cosine desc, index asc
-        val best = cents.indices.maxBy(i => (BigDecimal(cos(v, cents(i)))
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, -i))
-        assert(r.getInt(2) == best, s"vec ${r.getLong(0)} misassigned")
-      }
-    // the query contract holds over the augmented index
-    val queries = emb.filter(col("vec_id") < 10)
-    val got = SimilarityOps.ivfQueryIndex(spark, dir, queries).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq.sorted
-    assert(got == probeRestrictedTopK(dir, queries))
   }
 
   test("corpusDiff: added/removed/changed classified exactly; unchanged " +

@@ -5,8 +5,8 @@ import graft.ops._
 
 /** Persisted MinHash signature store: the store path must be id-for-id
   * identical to the recompute path (that is the contract the shared DuckDB
-  * oracle also checks), and appended batches must make the store equal to
-  * a fresh build over the union. */
+  * oracle also checks), and a store rebuilt in place must equal a fresh
+  * build. */
 class MinhashStoreSpec extends SparkSpecBase {
 
   private def survivors(df: org.apache.spark.sql.DataFrame): Seq[Long] =
@@ -26,24 +26,27 @@ class MinhashStoreSpec extends SparkSpecBase {
     assert(viaStore.nonEmpty && viaStore.size < batch.count())
   }
 
-  test("appended batch == fresh build over the union; dedup against the " +
-    "appended store == recompute against the grown corpus") {
+  test("minhashWriteStore rebuilt in place == a fresh build; dedup against " +
+    "a store rebuilt over a grown corpus == recompute against that corpus") {
     val dir = "/tmp/graft_test_minhash_store2"
-    val dirU = "/tmp/graft_test_minhash_store2u"
-    wipe(dir); wipe(dirU)
+    val freshDir = "/tmp/graft_test_minhash_store2f"
+    wipe(dir); wipe(freshDir)
     val docs = Tables.documents(spark, sfDir)
     val existing = docs.filter(col("doc_id") % 5 === 0)
-    val accepted = docs.filter(col("doc_id") % 5 === 1)
+    val grown = existing.unionByName(docs.filter(col("doc_id") % 5 === 1))
     val nextBatch = docs.filter(col("doc_id") % 5 === 2)
+    def rel(d: String) = DedupOps.readMinhashStore(spark, d)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+    // the larger corpus first: a rebuild that kept any of its rows would
+    // differ from the fresh build of the smaller one
+    DedupOps.minhashWriteStore(grown, dir)
+    new java.io.File(s"$dir/stale").mkdirs()
     DedupOps.minhashWriteStore(existing, dir)
-    DedupOps.minhashAppendStore(accepted, dir, "batch_0001")
-    DedupOps.minhashWriteStore(existing.unionByName(accepted), dirU)
-    val merged = DedupOps.readMinhashStore(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    val fresh = DedupOps.readMinhashStore(spark, dirU)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    assert(merged == fresh, "append layout must equal a fresh union build")
-    val grown = existing.unionByName(accepted)
+    DedupOps.minhashWriteStore(existing, freshDir)
+    assert(rel(dir) == rel(freshDir), "rebuilt store must equal a fresh build")
+    assert(new java.io.File(dir).list().filterNot(_.startsWith(".")).toSet == Set("bands"),
+      "rebuild leaves only what it wrote")
+    DedupOps.minhashWriteStore(grown, dir)
     assert(survivors(CurationPipeline.incrementalDedupFromStore(nextBatch, grown, dir))
       == survivors(CurationPipeline.incrementalDedup(nextBatch, grown)))
   }

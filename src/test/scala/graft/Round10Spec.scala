@@ -1,16 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import graft.ops._
-import graft.streaming.Streams
 
-/** Round-10: persisted-index lifecycle — compaction folds increments back
-  * into the base relation (query parity before == after, pruning
-  * preserved), a full rebuild invalidates stale increments, part-file-less
-  * increment dirs read as empty, and every centroid-assignment path shares
-  * ONE tie-break rule (round-6 cosine desc, index asc). */
+/** Round-10: an IVF index rebuild leaves only what it wrote, the
+  * zero-text-shuffle paragraph dedup, kmeans|| init, and every
+  * centroid-assignment path shares ONE tie-break rule (round-6 cosine
+  * desc, index asc). */
 class Round10Spec extends SparkSpecBase {
 
   import spark.implicits._
@@ -21,132 +18,27 @@ class Round10Spec extends SparkSpecBase {
     if (fs.exists(p)) fs.delete(p, true)
   }
 
-  private def exists(dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private def topk(dir: String, q: org.apache.spark.sql.DataFrame) =
-    SimilarityOps.ivfQueryIndex(spark, dir, q).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-      .toSeq.sorted
-
-  test("compactIndex: query parity before == after, increments folded, " +
-    "partition pruning preserved, idempotent re-run") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/tmp/graft_test_ivf_compact"
-    wipe(dir)
-    val emb = Tables.embeddings(spark, sfDir)
-    SimilarityOps.ivfWriteIndex(spark, emb.filter(col("vec_id") < 250), dir)
-    val rest = emb.filter(col("vec_id") >= 250).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = Streams.ivfAppendStream(
-      input.toDF().toDF("vec_id", "embedding"), dir, s"$dir/ckpt")
-    try { input.addData(rest.toIndexedSeq: _*); q.processAllAvailable() }
-    finally q.stop()
-    assert(exists(s"$dir/postings_inc"), "precondition: increments exist")
-    val queries = emb.filter(col("vec_id") < 10)
-    val before = topk(dir, queries)
-    val nBefore = SimilarityOps.readIndexPostings(spark, dir).count()
-    SimilarityOps.compactIndex(spark, dir)
-    assert(!exists(s"$dir/postings_inc"), "increments folded away")
-    assert(!exists(s"$dir/postings_cmp"), "staging dir swapped away")
-    assert(SimilarityOps.readIndexPostings(spark, dir).count() == nBefore,
-      "no posting lost or duplicated by compaction")
-    val after = SimilarityOps.ivfQueryIndex(spark, dir, queries)
-    assert(topk(dir, queries) == before, "query parity after compaction")
-    val plan = after.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
-      "compacted postings scan must stay partition-pruned on bucket")
-    // idempotent: a second run with no increments is a no-op
-    SimilarityOps.compactIndex(spark, dir)
-    assert(topk(dir, queries) == before)
-  }
-
   test("ivfWriteIndex rebuild clears stale increments (old-model buckets " +
     "never leak into the new index)") {
-    implicit val sqlCtx = spark.sqlContext
     val dir = "/tmp/graft_test_ivf_rebuild"
     wipe(dir)
     val emb = Tables.embeddings(spark, sfDir)
-    SimilarityOps.ivfWriteIndex(spark, emb.filter(col("vec_id") < 200), dir)
-    val more = emb.filter(col("vec_id") >= 200 && col("vec_id") < 260).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = Streams.ivfAppendStream(
-      input.toDF().toDF("vec_id", "embedding"), dir, s"$dir/ckpt")
-    try { input.addData(more.toIndexedSeq: _*); q.processAllAvailable() }
-    finally q.stop()
-    assert(exists(s"$dir/postings_inc"))
-    // full rebuild over a DIFFERENT corpus slice retrains the model;
-    // increments bucketed under the old model must not survive it
+    SimilarityOps.ivfWriteIndex(spark, emb.filter(col("vec_id") >= 100), dir)
+    // an index written by an older layout also carries a postings_inc dir
+    // of increments bucketed under its own model
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(s"$dir/postings"),
+      fs, new org.apache.hadoop.fs.Path(s"$dir/postings_inc"), false, conf)
+    // full rebuild over a DIFFERENT corpus slice retrains the model
     val rebuilt = emb.filter(col("vec_id") < 100)
     SimilarityOps.ivfWriteIndex(spark, rebuilt, dir)
-    assert(!exists(s"$dir/postings_inc"), "rebuild must clear increments")
-    assert(SimilarityOps.readIndexPostings(spark, dir).count() == rebuilt.count(),
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("vec_id", "embedding")
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
+    assert(rows(SimilarityOps.readIndexPostings(spark, dir)) == rows(rebuilt),
       "index contains exactly the rebuilt corpus")
-  }
-
-  test("minhashWriteStore rebuild clears stale increments; " +
-    "compactMinhashStore folds appends with relation parity") {
-    val dir = "/tmp/graft_test_mh_compact"
-    wipe(dir)
-    val docs = Tables.documents(spark, sfDir)
-    val existing = docs.filter(col("doc_id") % 5 === 0)
-    val accepted = docs.filter(col("doc_id") % 5 === 1)
-    DedupOps.minhashWriteStore(existing, dir)
-    DedupOps.minhashAppendStore(accepted, dir, "batch_0001")
-    assert(exists(s"$dir/bands_inc"))
-    def rel() = DedupOps.readMinhashStore(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    val before = rel()
-    DedupOps.compactMinhashStore(spark, dir)
-    assert(!exists(s"$dir/bands_inc"), "increments folded away")
-    assert(!exists(s"$dir/bands_cmp"), "staging dir swapped away")
-    assert(rel() == before, "banded relation identical after compaction")
-    // survivor parity: dedup against the compacted store == recompute
-    val nextBatch = docs.filter(col("doc_id") % 5 === 2)
-    val grown = existing.unionByName(accepted)
-    def ids(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.getLong(0)).sorted.toSeq
-    assert(ids(CurationPipeline.incrementalDedupFromStore(nextBatch, grown, dir))
-      == ids(CurationPipeline.incrementalDedup(nextBatch, grown)))
-    // idempotent re-run (no increments left) is a no-op
-    DedupOps.compactMinhashStore(spark, dir)
-    assert(rel() == before)
-    // a REBUILD after appends clears bands_inc: the store equals exactly
-    // the fresh corpus, no stale signature rows
-    DedupOps.minhashAppendStore(accepted, dir, "batch_0002")
-    DedupOps.minhashWriteStore(existing, dir)
-    assert(!exists(s"$dir/bands_inc"), "rebuild must clear increments")
-    val freshDir = "/tmp/graft_test_mh_compact_fresh"
-    wipe(freshDir)
-    DedupOps.minhashWriteStore(existing, freshDir)
-    assert(rel() == DedupOps.readMinhashStore(spark, freshDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq)
-  }
-
-  test("part-file-less increment dirs read as empty (interrupted write / " +
-    "empty micro-batch) instead of breaking schema inference") {
-    val dir = "/tmp/graft_test_ivf_emptydir"
-    wipe(dir)
-    val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 100)
-    SimilarityOps.ivfWriteIndex(spark, emb, dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/postings_inc/batch_7"))
-    assert(SimilarityOps.readIndexPostings(spark, dir).count() == emb.count())
-    val queries = emb.filter(col("vec_id") < 5)
-    assert(topk(dir, queries).nonEmpty)
-    // same contract for the minhash store
-    val mh = "/tmp/graft_test_mh_emptydir"
-    wipe(mh)
-    val docs = Tables.documents(spark, sfDir).filter(col("doc_id") < 50)
-    DedupOps.minhashWriteStore(docs, mh)
-    val n = DedupOps.readMinhashStore(spark, mh).count()
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$mh/bands_inc/stub"))
-    assert(DedupOps.readMinhashStore(spark, mh).count() == n)
+    assert(new java.io.File(dir).list().filterNot(_.startsWith(".")).toSet ==
+      Set("centroids", "postings"), "rebuild leaves only what it wrote")
   }
 
   test("dedupParagraphs: zero-text-shuffle path is output-identical to the " +
@@ -156,7 +48,7 @@ class Round10Spec extends SparkSpecBase {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
       .sorted.toSeq
     val got = rows(DedupOps.dedupParagraphs(docs))
-    assert(got == rows(DedupOps.dedupParagraphsRegroup(docs)),
+    assert(got == rows(SpecReferences.dedupParagraphsRegroup(docs)),
       "r10 bloom-split form must be row-identical to the regroup form")
     assert(got.exists(_._3 > 0), "gate corpus should contain boilerplate")
     assert(got.exists(_._3 == 0), "gate corpus should contain clean docs")

@@ -1,14 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.ops._
-import graft.streaming.Streams
 
 /** Round-11: distCh's DISTRIBUTED listing (no whole-tree driver buffer —
   * driver seeds are bounded, tasks walk subtrees), executor FileSystem
-  * built from the broadcast session configuration, and compactIndex's
-  * deterministic latest-wins dedup for re-ingested vectors. */
+  * built from the broadcast session configuration. */
 class Round11Spec extends SparkSpecBase {
 
   import spark.implicits._
@@ -179,30 +176,6 @@ class Round11Spec extends SparkSpecBase {
       .collect().map(_.getLong(0)).toSet
     assert(viaCol == probes.filter(model.mightContain).toSet,
       "broadcast probe must be bit-identical to the model")
-  }
-
-  test("compactIndex: a re-ingested vec_id with a CHANGED embedding " +
-    "compacts to the newest embedding (deterministic latest-wins)") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/tmp/graft_test_ivf_latestwins"
-    wipe(dir)
-    val emb = Tables.embeddings(spark, sfDir)
-    SimilarityOps.ivfWriteIndex(spark, emb.filter(col("vec_id") < 200), dir)
-    // re-ingest vec_id 7 with a sentinel embedding via the streaming path
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
-    val sentinel = Array.tabulate(dim)(i => if (i == 0) 9.5f else 0.01f).toSeq
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = Streams.ivfAppendStream(
-      input.toDF().toDF("vec_id", "embedding"), dir, s"$dir/ckpt")
-    try { input.addData((7L, sentinel)); q.processAllAvailable() }
-    finally q.stop()
-    SimilarityOps.compactIndex(spark, dir)
-    val rows = spark.read.parquet(s"$dir/postings")
-      .filter(col("vec_id") === 7L).collect()
-    assert(rows.length == 1, "one posting per vec_id after compaction")
-    assert(rows(0).getSeq[Float](rows(0).fieldIndex("embedding")) == sentinel,
-      "the NEWEST (re-ingested) embedding wins, not an arbitrary layer")
-    wipe(dir)
   }
 
   test("decodeAudio SPI cache: cached-provider decode is row-identical to " +

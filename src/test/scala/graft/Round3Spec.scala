@@ -5,7 +5,6 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.BoundedLevenshtein
 import graft.ops.{DedupOps, SortOps, TextOps}
 import graft.sources.IO
-import graft.streaming.Streams
 
 import scala.util.Random
 
@@ -156,16 +155,6 @@ class Round3Spec extends SparkSpecBase {
     assert(ex.getMessage.contains("staging"))
     // base is intact
     assert(spark.read.parquet(base).count() == 1)
-  }
-
-  test("readRollup on a rollup with no committed batches returns an empty frame") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_rollup_empty").toString
-    val empty = Streams.readRollup(spark, s"$tmp/rollup_never_written")
-    assert(empty.isEmpty && empty.columns.toSeq ==
-      Seq("hour", "event_type", "n_events", "sum_value"))
-    // existing but batch-less dir (checkpoint raced ahead of first trigger)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$tmp/rollup2"))
-    assert(Streams.readRollup(spark, s"$tmp/rollup2").isEmpty)
   }
 
   // ---- q2: single fact scan ----

@@ -39,7 +39,7 @@ class ScaleSoundnessSpec extends SparkSpecBase {
   test("bucketed embedding near-dup == all-pairs result, with no nested-loop join") {
     val emb = Tables.embeddings(spark, sfDir)
     val bucketed = SimilarityOps.embeddingNearDup(spark, emb)
-    val exact = SimilarityOps.embeddingNearDupAllPairs(spark, emb)
+    val exact = SpecReferences.embeddingNearDupAllPairs(spark, emb)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val got = bucketed.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got == exact, s"missing=${exact -- got} extra=${got -- exact}")
@@ -116,30 +116,6 @@ class ScaleSoundnessSpec extends SparkSpecBase {
     val capped = asSet(DedupOps.ngramJaccardPairs(docs, tau = 0.8, maxDf = Some(3)))
     assert(capped.subsetOf(uncapped), s"capped introduced pairs: ${capped -- uncapped}")
     assert(uncapped.nonEmpty)
-  }
-
-  test("multi-index simhash: identical output to the banded form, 100% planted recall") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(11)
-    val rows = (0 until 150).flatMap { i =>
-      val base = rnd.nextLong()
-      val bits = rnd.shuffle((0 until 64).toList).take(i % 7)
-      val partner = bits.foldLeft(base)((f, b) => f ^ (1L << b))
-      Seq((i.toLong, base), (i + 10000L, partner))
-    }
-    val fp = rows.toDF("doc_id", "fp")
-    def asSet(df: org.apache.spark.sql.DataFrame) = df.select("a_id", "b_id", "hamming")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val banded = asSet(DedupOps.simhashPairsFromFingerprints(fp, maxHamming = 6))
-    val multi = asSet(DedupOps.simhashPairsMultiIndex(fp, maxHamming = 6, bands = 4))
-    assert(multi == banded, s"missing=${banded -- multi} extra=${multi -- banded}")
-    (0 until 150).foreach { i =>
-      assert(multi.exists(p => p._1 == i.toLong && p._2 == i + 10000L),
-        s"planted pair at hamming ${i % 7} missed by multi-index")
-    }
-    intercept[IllegalArgumentException] {
-      DedupOps.simhashPairsMultiIndex(fp, maxHamming = 6, bands = 3) // 3*2 ≤ 6: unsound
-    }
   }
 
   test("AQE splits a skewed join partition at runtime (the 100 TB hot-key path)") {

@@ -1,123 +1,12 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
-import graft.streaming.Streams
-import graft.streaming.Streams.Ev
 
+/** graft's stateless predicates and its SpaceSaving aggregate run unchanged
+  * over Structured Streaming sources, equal to their batch form; and a
+  * file sink restarted from its checkpoint does not reprocess input. */
 class StreamingSpec extends SparkSpecBase {
-
-  private def ts(minute: Int): Timestamp =
-    Timestamp.valueOf(f"2024-01-01 ${10 + minute / 60}%02d:${minute % 60}%02d:00")
-
-  test("hourlyCounts: windowed agg with watermark over a memory stream") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val q = Streams.hourlyCounts(input.toDF())
-      .writeStream.format("memory").queryName("hourly_t").outputMode(OutputMode.Update).start()
-    try {
-      input.addData(
-        Ev(1, ts(0), 1, "view", 1.0), Ev(2, ts(10), 1, "view", 2.0),
-        Ev(3, ts(65), 2, "click", 3.0))
-      q.processAllAvailable()
-      val rows = spark.table("hourly_t").collect()
-        .map(r => (r.getAs[Timestamp]("hour_start").toString, r.getAs[String]("event_type"),
-          r.getAs[Long]("n_events"))).toSet
-      assert(rows.contains(("2024-01-01 10:00:00.0", "view", 2L)))
-      assert(rows.contains(("2024-01-01 11:00:00.0", "click", 1L)))
-    } finally q.stop()
-  }
-
-  test("file-source streaming: parquet directory stream matches batch aggregation") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    val events = Tables.events(spark, sfDir)
-    events.limit(200).write.parquet(s"$tmp/in")
-    val stream = spark.readStream.schema(events.schema).parquet(s"$tmp/in")
-    val q = Streams.hourlyCounts(stream)
-      .writeStream.format("memory").queryName("file_hourly_t")
-      .outputMode(OutputMode.Update).start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("file_hourly_t")
-        .groupBy("hour_start", "event_type").agg(org.apache.spark.sql.functions.max("n_events"))
-        .count()
-      val batch = graft.ops.AggOps.eventsHourly(
-        spark.read.parquet(s"$tmp/in")).count()
-      assert(streamed == batch && batch > 0)
-    } finally q.stop()
-  }
-
-  test("left-outer stream join: unmatched views emit null clicks AFTER the watermark passes") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[Ev]
-    val clicks = MemoryStream[Ev]
-    val q = Streams.viewClickJoin(views.toDF(), clicks.toDF(),
-        joinWindowSec = 600L, watermark = "10 minutes", joinType = "left_outer")
-      .writeStream.format("memory").queryName("vc_outer_t")
-      .outputMode(OutputMode.Append).start()
-    try {
-      views.addData(Ev(1, ts(0), 1, "view", 0), Ev(2, ts(0), 2, "view", 0))
-      clicks.addData(Ev(10, ts(5), 1, "click", 0)) // user 1 matches; user 2 never clicks
-      q.processAllAvailable()
-      // user 2's null row must NOT exist yet — a click could still arrive
-      val early = spark.table("vc_outer_t").collect()
-      assert(!early.exists(r => r.getAs[Long]("user_id") == 2L),
-        s"null row emitted before the watermark made it final: ${early.toList}")
-      // advance both watermarks far past user 2's join window
-      views.addData(Ev(90, ts(120), 9, "view", 0))
-      clicks.addData(Ev(91, ts(120), 9, "click", 0))
-      q.processAllAvailable()
-      views.addData(Ev(92, ts(180), 9, "view", 0)) // one more batch to flush state
-      clicks.addData(Ev(93, ts(180), 9, "click", 0))
-      q.processAllAvailable()
-      val rows = spark.table("vc_outer_t").collect()
-        .map(r => (r.getAs[Long]("user_id"), Option(r.getAs[java.lang.Long]("click_id"))))
-      assert(rows.contains((1L, Some(10L))), s"matched pair missing: ${rows.toList}")
-      assert(rows.contains((2L, None)), s"final null row for user 2 missing: ${rows.toList}")
-    } finally q.stop()
-  }
-
-  test("full-outer stream join: unmatched rows on BOTH sides emit null " +
-    "counterparts only after the watermark proves no match can arrive") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[Ev]
-    val clicks = MemoryStream[Ev]
-    val q = Streams.viewClickJoin(views.toDF(), clicks.toDF(),
-        joinWindowSec = 600L, watermark = "10 minutes", joinType = "full_outer")
-      .writeStream.format("memory").queryName("vc_full_t")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // user 1: matched; user 2: view with no click; user 3: click with no view
-      views.addData(Ev(1, ts(0), 1, "view", 0), Ev(2, ts(0), 2, "view", 0))
-      clicks.addData(Ev(10, ts(5), 1, "click", 0), Ev(30, ts(5), 3, "click", 0))
-      q.processAllAvailable()
-      val early = spark.table("vc_full_t").collect()
-      assert(!early.exists(r => r.getAs[Long]("user_id") == 2L),
-        s"view-side null row emitted before watermark finality: ${early.toList}")
-      assert(!early.exists(r => r.getAs[Long]("user_id") == 3L),
-        s"click-side null row emitted before watermark finality: ${early.toList}")
-      // advance BOTH watermarks far past both join windows, then one more
-      // batch to flush evicted state through the sink
-      views.addData(Ev(90, ts(120), 9, "view", 0))
-      clicks.addData(Ev(91, ts(120), 9, "click", 0))
-      q.processAllAvailable()
-      views.addData(Ev(92, ts(180), 9, "view", 0))
-      clicks.addData(Ev(93, ts(180), 9, "click", 0))
-      q.processAllAvailable()
-      val rows = spark.table("vc_full_t").collect()
-        .map(r => (r.getAs[Long]("user_id"),
-          Option(r.getAs[java.lang.Long]("view_id")),
-          Option(r.getAs[java.lang.Long]("click_id"))))
-      assert(rows.contains((1L, Some(1L), Some(10L))), s"matched pair: ${rows.toList}")
-      assert(rows.contains((2L, Some(2L), None)), s"view-side outer row: ${rows.toList}")
-      assert(rows.contains((3L, None, Some(30L))), s"click-side outer row: ${rows.toList}")
-    } finally q.stop()
-  }
 
   test("SpaceSaving sketch aggregates incrementally in a streaming query") {
     import spark.implicits._
@@ -142,153 +31,6 @@ class StreamingSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
-  test("streaming sessionize agrees with the oracle-green batch sessionize") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // multi-user, multi-session history; a far-future sentinel per user
-    // advances the watermark so every real session closes
-    val real = Seq(
-      Ev(1, ts(0), 7, "view", 1.0), Ev(2, ts(10), 7, "view", 1.0),
-      Ev(3, ts(100), 7, "click", 1.0), // > 30 min gap → second session
-      Ev(4, ts(5), 8, "view", 1.0),
-      Ev(5, ts(20), 8, "purchase", 1.0), Ev(6, ts(30), 8, "view", 1.0))
-    val sentinels = Seq(Ev(90, ts(600), 7, "view", 0.0), Ev(91, ts(600), 8, "view", 0.0))
-    val input = MemoryStream[Ev]
-    val q = Streams.sessionize(input.toDS(), gapSec = 1800)
-      .writeStream.format("memory").queryName("parity_t").outputMode(OutputMode.Append).start()
-    try {
-      input.addData(real: _*)
-      q.processAllAvailable()
-      input.addData(sentinels: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("parity_t").as[Streams.Session].collect()
-        .map(s => (s.user_id, s.session_start.toString, s.session_end.toString, s.n_events))
-        .toSet
-      // batch twin over the SAME real events (sentinels excluded: their
-      // sessions never close in the stream)
-      val batch = graft.ops.AggOps.sessionize(real.toDF(), gapSec = 1800L)
-        .collect().map(r => (r.getAs[Long]("user_id"),
-          r.getAs[String]("session_start") + ".0", r.getAs[String]("session_end") + ".0",
-          r.getAs[Long]("n_events"))).toSet
-      assert(streamed == batch,
-        s"stream/batch mismatch: streamOnly=${streamed -- batch} batchOnly=${batch -- streamed}")
-    } finally q.stop()
-  }
-
-  test("stream-stream join: clicks pair with prior views inside the window only") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[Ev]
-    val clicks = MemoryStream[Ev]
-    val q = Streams.viewClickJoin(views.toDF(), clicks.toDF(), joinWindowSec = 600L)
-      .writeStream.format("memory").queryName("vc_join_t")
-      .outputMode(OutputMode.Append).start()
-    try {
-      views.addData(Ev(1, ts(0), 1, "view", 0), Ev(2, ts(0), 2, "view", 0))
-      clicks.addData(
-        Ev(10, ts(5), 1, "click", 0),   // user 1, 5 min after view → joins
-        Ev(11, ts(20), 2, "click", 0),  // user 2, 20 min after → outside 10-min window
-        Ev(12, ts(5), 3, "click", 0))   // user 3 never viewed
-      q.processAllAvailable()
-      val got = spark.table("vc_join_t").collect()
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("view_id"), r.getAs[Long]("click_id")))
-      assert(got.toSet == Set((1L, 1L, 10L)), s"got ${got.toList}")
-    } finally q.stop()
-  }
-
-  test("incrementalRollup: appended partials merge to the exact batch answer") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_rollup").toString
-    val events = Tables.events(spark, sfDir)
-    events.limit(300).write.parquet(s"$tmp/in")
-    val stream = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-    val q = Streams.incrementalRollup(stream, s"$tmp/rollup", s"$tmp/ckpt")
-    try q.processAllAvailable() finally q.stop()
-    val merged = Streams.readRollup(spark, s"$tmp/rollup")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-    val batch = graft.ops.AggOps.eventsHourly(spark.read.parquet(s"$tmp/in"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(merged == batch && batch.nonEmpty,
-      s"merge-on-read must equal batch recompute; diff=${(merged -- batch) ++ (batch -- merged)}")
-  }
-
-  test("scoreStream: streaming margins equal batch map-side scoring, filter honored") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val d = 64
-    // deterministic synthetic weights — stream/batch identity is the claim
-    val w = Array.tabulate(d + 1)(j => ((j % 7) - 3) * 0.1)
-    val rows = Seq((1L, "alpha beta gamma"), (2L, "delta delta"), (3L, ""),
-      (4L, "epsilon zeta eta theta"), (5L, "beta"))
-    val input = MemoryStream[(Long, String)]
-    val q = Streams.scoreStream(input.toDF().toDF("doc_id", "text"), w,
-        minMargin = Double.NegativeInfinity, keepOnly = false)
-      .writeStream.format("memory").queryName("score_t")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("score_t").collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("margin")).toMap
-      val batch = graft.ops.Classifier.scoreMapSide(
-          rows.toDF("doc_id", "text"), org.apache.spark.sql.functions.lit(0), w)
-        .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-      assert(streamed == batch && streamed.size == rows.size,
-        s"stream $streamed vs batch $batch")
-      // threshold routing: keepOnly drops sub-threshold rows
-      val input2 = MemoryStream[(Long, String)]
-      val thr = streamed.values.toSeq.sorted.apply(2) // keep top 3 of 5
-      val q2 = Streams.scoreStream(input2.toDF().toDF("doc_id", "text"), w, thr)
-        .writeStream.format("memory").queryName("score_keep_t")
-        .outputMode(OutputMode.Append).start()
-      try {
-        input2.addData(rows: _*)
-        q2.processAllAvailable()
-        val kept = spark.table("score_keep_t").collect().map(_.getAs[Long]("doc_id")).toSet
-        assert(kept == streamed.filter(_._2 >= thr).keySet)
-      } finally q2.stop()
-    } finally q.stop()
-  }
-
-  test("cmsStream: merged micro-batch sketches equal the batch sketch (linearity)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cms_stream").toString
-    val docs = Tables.documents(spark, sfDir)
-    docs.limit(120).select(org.apache.spark.sql.functions.col("doc_id"),
-      org.apache.spark.sql.functions.col("text")).write.parquet(s"$tmp/in")
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, text STRING"))
-      .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-    val q = Streams.cmsStream(stream, s"$tmp/cms", s"$tmp/ckpt", depth = 3, width = 256)
-    try q.processAllAvailable() finally q.stop()
-    val merged = Streams.readCms(spark, s"$tmp/cms")
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val batch = graft.ops.TextAnalysis.cmsMatrix(spark.read.parquet(s"$tmp/in"), 3, 256)
-      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-    assert(merged == batch && batch.nonEmpty,
-      s"cell-wise merge must equal batch sketch; diffs=${
-        (merged.toSet -- batch.toSet).take(3)} ${(batch.toSet -- merged.toSet).take(3)}")
-  }
-
-  test("dedupStream: replayed events within the watermark horizon are dropped") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val q = Streams.dedupStream(input.toDF())
-      .writeStream.format("memory").queryName("dedup_t")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(
-        Ev(1, ts(0), 1, "view", 1.0), Ev(2, ts(1), 1, "view", 2.0),
-        Ev(1, ts(0), 1, "view", 1.0)) // exact replay of event 1
-      q.processAllAvailable()
-      input.addData(Ev(2, ts(2), 1, "view", 2.0), Ev(3, ts(3), 2, "click", 3.0))
-      q.processAllAvailable()
-      val ids = spark.table("dedup_t").collect().map(_.getAs[Long]("event_id")).toList
-      assert(ids.sorted == List(1L, 2L, 3L),
-        s"each event_id must survive exactly once, got $ids")
-    } finally q.stop()
-  }
-
   test("file sink + checkpoint: exactly-once across a query restart") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_eo").toString
     val events = Tables.events(spark, sfDir)
@@ -308,131 +50,6 @@ class StreamingSpec extends SparkSpecBase {
     val out = spark.read.parquet(s"$tmp/out")
     // 100 + 150 rows, previously-seen input files NOT reprocessed
     assert(out.count() == 250, s"expected 250 rows, got ${out.count()}")
-  }
-
-  test("sessionize stream: gap closure emits completed sessions") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val q = Streams.sessionize(input.toDS(), gapSec = 1800)
-      .writeStream.format("memory").queryName("sessions_t").outputMode(OutputMode.Append).start()
-    try {
-      input.addData(Ev(1, ts(0), 7, "view", 1.0), Ev(2, ts(10), 7, "view", 1.0))
-      q.processAllAvailable()
-      // 2h later: previous session (2 events) closes on arrival
-      input.addData(Ev(3, ts(120), 7, "view", 1.0))
-      q.processAllAvailable()
-      val sessions = spark.table("sessions_t").as[Streams.Session].collect()
-      assert(sessions.exists(s =>
-        s.user_id == 7 && s.n_events == 2 &&
-        s.session_start == ts(0) && s.session_end == ts(10)))
-    } finally q.stop()
-  }
-
-  test("sessionize: out-of-order within-watermark event extends the open session, never forks it") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val q = Streams.sessionize(input.toDS(), gapSec = 1800)
-      .writeStream.format("memory").queryName("ooo_sessions_t").outputMode(OutputMode.Append).start()
-    try {
-      input.addData(Ev(1, ts(0), 7, "view", 1.0), Ev(2, ts(10), 7, "view", 1.0))
-      q.processAllAvailable()
-      // t=5 arrives a batch LATE but above the watermark (2h delay) — it
-      // must merge into the open [0,10] session, not start a second one
-      input.addData(Ev(3, ts(5), 7, "click", 1.0))
-      q.processAllAvailable()
-      input.addData(Ev(90, ts(600), 7, "view", 0.0)) // close via gap
-      q.processAllAvailable()
-      val sessions = spark.table("ooo_sessions_t").as[Streams.Session].collect()
-        .filter(s => s.user_id == 7 && s.session_start == ts(0))
-      assert(sessions.length == 1 && sessions.head.n_events == 3 &&
-        sessions.head.session_end == ts(10),
-        s"late in-watermark event must extend, got ${sessions.toList}")
-    } finally q.stop()
-  }
-
-  test("sessionize: below-watermark events are dropped — closed sessions stay closed") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val q = Streams.sessionize(input.toDS(), gapSec = 1800, watermark = "10 minutes")
-      .writeStream.format("memory").queryName("late_sessions_t").outputMode(OutputMode.Append).start()
-    try {
-      input.addData(Ev(1, ts(0), 7, "view", 1.0), Ev(2, ts(10), 7, "view", 1.0))
-      q.processAllAvailable()
-      // watermark → ts(590): user 7's session times out and emits
-      input.addData(Ev(90, ts(600), 9, "view", 0.0))
-      q.processAllAvailable()
-      val afterClose = spark.table("late_sessions_t").as[Streams.Session].collect()
-        .count(_.user_id == 7)
-      assert(afterClose == 1, "session should have closed via event-time timeout")
-      // a FAR-below-watermark replay of the same user must be discarded —
-      // no resurrected state, no second session, no mutation of the first
-      input.addData(Ev(3, ts(20), 7, "view", 1.0))
-      q.processAllAvailable()
-      input.addData(Ev(91, ts(1200), 9, "view", 0.0)) // advance further, flush timeouts
-      q.processAllAvailable()
-      val sevens = spark.table("late_sessions_t").as[Streams.Session].collect()
-        .filter(_.user_id == 7)
-      assert(sevens.length == 1 && sevens.head.n_events == 2,
-        s"below-watermark event resurrected state: ${sevens.toList}")
-    } finally q.stop()
-  }
-
-  test("left-outer join: out-of-order within-watermark click still matches — no premature null, one row") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[Ev]
-    val clicks = MemoryStream[Ev]
-    val q = Streams.viewClickJoin(views.toDF(), clicks.toDF(),
-        joinWindowSec = 600L, watermark = "30 minutes", joinType = "left_outer")
-      .writeStream.format("memory").queryName("ooo_outer_t")
-      .outputMode(OutputMode.Append).start()
-    try {
-      views.addData(Ev(1, ts(0), 1, "view", 0))
-      clicks.addData(Ev(20, ts(25), 9, "click", 0)) // stream time runs ahead…
-      q.processAllAvailable()
-      // …then user 1's click lands OUT OF ORDER (ts 5 < already-seen ts 25)
-      // but above the click watermark (25 − 30 < 5) — it must join
-      clicks.addData(Ev(10, ts(5), 1, "click", 0))
-      q.processAllAvailable()
-      // advance both sides far past every window to finalize outer state
-      Seq(120, 180).foreach { m =>
-        views.addData(Ev(90 + m, ts(m), 9, "view", 0))
-        clicks.addData(Ev(95 + m, ts(m), 9, "click", 0))
-        q.processAllAvailable()
-      }
-      val u1 = spark.table("ooo_outer_t").collect()
-        .filter(_.getAs[Long]("user_id") == 1L)
-        .map(r => Option(r.getAs[java.lang.Long]("click_id")))
-      assert(u1.toList == List(Some(10L)),
-        s"want exactly one matched row, no null row: ${u1.toList}")
-    } finally q.stop()
-  }
-
-  test("duplicate storm: dedupStream upstream of the join restores exactly-once matches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[Ev]
-    val clicks = MemoryStream[Ev]
-    // at-least-once sources replay; the join itself faithfully multiplies
-    // matches, so the repair belongs UPSTREAM: dedupStream on the replayed side
-    val q = Streams.viewClickJoin(views.toDF(), Streams.dedupStream(clicks.toDF()),
-        joinWindowSec = 600L)
-      .writeStream.format("memory").queryName("storm_join_t")
-      .outputMode(OutputMode.Append).start()
-    try {
-      views.addData(Ev(1, ts(0), 1, "view", 0))
-      clicks.addData(Ev(10, ts(5), 1, "click", 0), Ev(10, ts(5), 1, "click", 0))
-      q.processAllAvailable()
-      clicks.addData(Ev(10, ts(5), 1, "click", 0)) // replay in a later batch too
-      q.processAllAvailable()
-      val rows = spark.table("storm_join_t").collect()
-        .map(r => (r.getAs[Long]("view_id"), r.getAs[Long]("click_id"))).toList
-      assert(rows == List((1L, 10L)),
-        s"3× replayed click must join exactly once, got $rows")
-    } finally q.stop()
   }
 
   test("curation predicates compose on a stream: mixtureKeep + repetitionOk are stateless filters") {
@@ -462,155 +79,6 @@ class StreamingSpec extends SparkSpecBase {
         .collect().map(_.getLong(0)).toSet
       assert(got == batch, s"stream $got vs batch $batch")
       assert(got.contains(0L) && !got.contains(1L))
-    } finally q.stop()
-  }
-
-  test("streaming near-dup candidates == batch LSH banding; batch verified pairs are a subset") {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-    val rows = docs.as[(Long, String)].collect()
-    val input = MemoryStream[(Long, String)]
-    val q = Streams.nearDupCandidates(input.toDF().toDF("doc_id", "text"))
-      .writeStream.format("memory").queryName("neardup_cand_t")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // two micro-batches: pairs must form both within a batch and across
-      // batches (new arrivals against bucket state from batch 1)
-      val (b1, b2) = rows.splitAt(rows.length / 2)
-      input.addData(b1.toSeq: _*); q.processAllAvailable()
-      input.addData(b2.toSeq: _*); q.processAllAvailable()
-      val streamed = spark.table("neardup_cand_t").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      // exactly-once per pair: the stateful dropDuplicates means collect()
-      // count equals distinct count
-      assert(spark.table("neardup_cand_t").count() == streamed.size)
-      val banded = graft.ops.DedupOps.bandedMinhashSigs(docs)
-      val batchCand = banded.as("x").join(banded.as("y"),
-          col("x.band") === col("y.band") && col("x.band_sig") === col("y.band_sig") &&
-          col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id"), col("y.doc_id")).distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(streamed == batchCand,
-        s"stream ${streamed.size} pairs vs batch ${batchCand.size}")
-      val verified = graft.ops.DedupOps.minhashLshPairs(docs)
-        .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(verified.nonEmpty && verified.subsetOf(streamed))
-    } finally q.stop()
-  }
-
-  test("streaming semantic near-dup candidates == batch sign-LSH bucket " +
-    "self-join; pairs form within and across micro-batches") {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val emb = Tables.embeddings(spark, sfDir)
-    val dim = emb.select(org.apache.spark.sql.functions.size(col("embedding")))
-      .limit(1).collect()(0).getInt(0)
-    val rows = emb.select("vec_id", "embedding").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val input = MemoryStream[(Long, Array[Float])]
-    val q = Streams.semanticNearDupCandidates(
-        input.toDF().toDF("vec_id", "embedding"), dim)
-      .writeStream.format("memory").queryName("sem_cand_t")
-      .outputMode(OutputMode.Append).start()
-    try {
-      val (b1, b2) = rows.splitAt(rows.length / 2)
-      input.addData(b1.toSeq: _*); q.processAllAvailable()
-      input.addData(b2.toSeq: _*); q.processAllAvailable()
-      val streamed = spark.table("sem_cand_t").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(spark.table("sem_cand_t").count() == streamed.size,
-        "stateful pair dedup must emit each pair exactly once")
-      val buckets = graft.ops.SimilarityOps.lshIndexRelation(spark, emb)
-      val batchCand = buckets.as("a").join(buckets.as("b"),
-          col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id"), col("b.vec_id")).distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(streamed == batchCand,
-        s"stream ${streamed.size} pairs vs batch ${batchCand.size}")
-      assert(streamed.nonEmpty, "testdata must collide somewhere")
-    } finally q.stop()
-  }
-
-  test("streaming decontamination candidates == batch cross banding; " +
-    "batch verified cross pairs are a subset; plan is stateless") {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val docs = Tables.documents(spark, sfDir)
-    val benchmark = docs.filter(col("source").isin("src0", "src1"))
-      .select("doc_id", "text")
-    val corpus = docs.filter(!col("source").isin("src0", "src1"))
-      .select("doc_id", "text")
-    val rows = corpus.as[(Long, String)].collect()
-    val input = MemoryStream[(Long, String)]
-    val q = Streams.decontaminateCandidatesStream(
-        input.toDF().toDF("doc_id", "text"), benchmark)
-      .writeStream.format("memory").queryName("decontam_cand_t")
-      .outputMode(OutputMode.Append).start()
-    try {
-      val (b1, b2) = rows.splitAt(rows.length / 2)
-      input.addData(b1.toSeq: _*); q.processAllAvailable()
-      input.addData(b2.toSeq: _*); q.processAllAvailable()
-      // zero streaming state: the stream-static join keeps no state store
-      assert(q.lastProgress.stateOperators.isEmpty,
-        s"expected stateless plan, got ${q.lastProgress.stateOperators.length} state operators")
-      val streamed = spark.table("decontam_cand_t").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      def banded(d: org.apache.spark.sql.DataFrame) =
-        graft.ops.DedupOps.bandedMinhashSigs(d)
-      val batchCand = banded(corpus).as("x").join(banded(benchmark).as("y"),
-          col("x.band") === col("y.band") && col("x.band_sig") === col("y.band_sig"))
-        .select(col("x.doc_id"), col("y.doc_id")).distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(streamed == batchCand,
-        s"stream ${streamed.size} pairs vs batch ${batchCand.size}")
-      val verified = graft.ops.DedupOps.crossMinhashPairs(corpus, benchmark)
-        .select("corpus_id", "ref_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(verified.nonEmpty && verified.subsetOf(streamed))
-    } finally q.stop()
-  }
-
-  test("horizon-bounded near-dup candidates: within-horizon pairs equal the " +
-    "unbounded form; farther-apart pairs are dropped; state evicts") {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-      .as[(Long, String)].collect()
-    // assign event times: doc i lands at t0 + i minutes → pair (a, b) is
-    // within a "90 minutes" horizon iff |a − b| ≤ 90 (ids are 0..N−1)
-    val t0 = 1700000000000L
-    val stamped = docs.map { case (id, tx) => (id, tx, new Timestamp(t0 + id * 60000L)) }
-    val input = MemoryStream[(Long, String, Timestamp)]
-    val q = Streams.nearDupCandidatesWithin(
-        input.toDF().toDF("doc_id", "text", "ts"),
-        horizon = "90 minutes", watermark = "0 seconds")
-      .writeStream.format("memory").queryName("neardup_within_t")
-      .outputMode(OutputMode.Append).start()
-    try {
-      val (b1, b2) = stamped.splitAt(stamped.length / 2)
-      input.addData(b1.toSeq: _*); q.processAllAvailable()
-      input.addData(b2.toSeq: _*); q.processAllAvailable()
-      val streamed = spark.table("neardup_within_t").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      // ground truth: unbounded banding pairs, horizon-filtered
-      val banded = graft.ops.DedupOps.bandedMinhashSigs(
-        spark.createDataset(docs.toSeq).toDF("doc_id", "text"))
-      val unbounded = banded.as("x").join(banded.as("y"),
-          col("x.band") === col("y.band") && col("x.band_sig") === col("y.band_sig") &&
-          col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id"), col("y.doc_id")).distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val withinHorizon = unbounded.filter { case (a, b) => (b - a) <= 90 }
-      assert(streamed == withinHorizon,
-        s"stream ${streamed.size} pairs vs horizon-filtered batch ${withinHorizon.size}")
-      // the horizon must actually exclude something, or the test is vacuous
-      assert(unbounded.exists { case (a, b) => (b - a) > 90 },
-        "testdata has no cross-horizon candidate pair; widen the time spread")
     } finally q.stop()
   }
 
