@@ -134,6 +134,34 @@ object Bench {
     s""""shuffle_read_mb":${fmt(p.shuffleReadB / 1e6)},"shuffle_write_mb":${fmt(p.shuffleWriteB / 1e6)}}"""
   }
 
+  /** Corpus stamp of the documents and embeddings tables under `dir`:
+    * row counts, total text bytes, and an order-invariant distributed
+    * fingerprint (sum of xxhash64 over id AND content — no collect, no
+    * sort). A regenerated corpus is then attributable from two records
+    * alone (fingerprint flips ⇒ data moved). Content is part of the hash
+    * since r12: the id-only form collided across corpora that shared ids
+    * 0..n-1 but differed in every text byte (the suite dir and the 500 k
+    * planted corpus), which is the flip the stamp exists to show. Stamps
+    * are comparable to pre-r12 records only via counts + text_bytes.
+    * Bench and Verify's planted-check record both carry it. */
+  def corpusStamp(spark: SparkSession, dir: String): String =
+    try {
+      import org.apache.spark.sql.functions._
+      // hash sum in decimal(38,0): long-sum of 2^63-scale hashes overflows
+      // immediately under ANSI; 38 digits absorb ~10^19 rows
+      def fp(cs: org.apache.spark.sql.Column*) =
+        sum(xxhash64(cs: _*).cast("decimal(38,0)")).cast("string")
+      val d = Tables.documents(spark, dir)
+        .agg(count(lit(1)), sum(length(col("text"))),
+          fp(col("doc_id"), col("text"))).head()
+      val e = Tables.embeddings(spark, dir)
+        .agg(count(lit(1)), fp(col("vec_id"), col("embedding"))).head()
+      s"""{"docs":${d.getLong(0)},"text_bytes":${d.getLong(1)},""" +
+      s""""docs_fp":"${d.getString(2)}","vecs":${e.getLong(0)},""" +
+      s""""vecs_fp":"${e.getString(1)}"}"""
+    } catch { case NonFatal(ex) =>
+      "\"err: " + ex.toString.replace("\"", "'") + "\"" }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = GraftEnv.benchRuns()
@@ -171,36 +199,6 @@ object Bench {
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              exception: Exception): Unit = ()
     })
-
-    /** Corpus stamp: doc/row counts, total text bytes, and an
-      * order-invariant distributed fingerprint (sum of xxhash64 over id AND
-      * content — no collect, no sort) for the two driver-regenerated
-      * tables. Exists so a driver-side corpus regeneration is attributable
-      * from two BENCH artifacts alone (fingerprint flips ⇒ data moved),
-      * instead of costing a round of plan-hash forensics. CONTENT is part
-      * of the hash since r12: the original id-only form collided across
-      * corpora that shared ids 0..n-1 but differed in every text byte (the
-      * suite-dir and ScaleDedup 500 k corpora — caught comparing their
-      * artifacts), which is precisely the flip the stamp exists to show.
-      * Stamps are comparable to pre-r12 artifacts only via counts +
-      * text_bytes. */
-    def corpusStamp(): String =
-      try {
-        import org.apache.spark.sql.functions._
-        // hash sum in decimal(38,0): long-sum of 2^63-scale hashes overflows
-        // immediately under ANSI; 38 digits absorb ~10^19 rows
-        def fp(cs: org.apache.spark.sql.Column*) =
-          sum(xxhash64(cs: _*).cast("decimal(38,0)")).cast("string")
-        val d = Tables.documents(spark, sfDir)
-          .agg(count(lit(1)), sum(length(col("text"))),
-            fp(col("doc_id"), col("text"))).head()
-        val e = Tables.embeddings(spark, sfDir)
-          .agg(count(lit(1)), fp(col("vec_id"), col("embedding"))).head()
-        s"""{"docs":${d.getLong(0)},"text_bytes":${d.getLong(1)},""" +
-        s""""docs_fp":"${d.getString(2)}","vecs":${e.getLong(0)},""" +
-        s""""vecs_fp":"${e.getString(1)}"}"""
-      } catch { case NonFatal(ex) =>
-        "\"err: " + ex.toString.replace("\"", "'") + "\"" }
 
     // Best-of-n per query: the best of n is the closest observable to the
     // true cost under steal noise. A transiently-failed sample is dropped,
@@ -254,7 +252,7 @@ object Bench {
     }
     val json = String.format(Locale.ROOT,
       """{"metric":"total","value":%.3f,"unit":"sec","queries":%s,"samples":%s,"plans":%s,"profile":%s,"observed":%s,"corpus":%s,"sentinel":{"start_sec":%s,"end_sec":%s,"noisy":%b},"sf":"%s","runs":%d,"failed":%d}""",
-      Double.box(total), qs, ss, ph, prof, obs, corpusStamp(),
+      Double.box(total), qs, ss, ph, prof, obs, corpusStamp(spark, sfDir),
       fmt(sentinelStart), fmt(sentinelEnd),
       Boolean.box(noisy), sfDir, Int.box(runs), Int.box(nFailed))
     // The result JSON is printed BETWEEN fixed sentinel lines and also

@@ -48,6 +48,15 @@ object GraftEnv {
       true
     }
 
+  /** SPARK_GRAFT_BBP_OFFSETS: the comma-separated hex-digit offsets
+    * `tools.BbpFar` computes, each a positive long. */
+  def bbpOffsets(env: Env = sys.env): Seq[Long] =
+    read(env, "SPARK_GRAFT_BBP_OFFSETS", Seq(400000000L, 4294967296L)) { s =>
+      val offsets = s.split(",", -1).map(_.trim).toSeq.map(_.toLong)
+      if (offsets.exists(_ < 1)) throw new NumberFormatException("each offset must be at least 1")
+      offsets
+    }
+
   /** Parses the settings queries read while they are built, so a malformed
     * one stops a main before its first query. */
   def check(env: Env = sys.env): Unit = { ppjoinBudget(env); ccLocalEdges(env) }

@@ -1,14 +1,21 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-import graft.queries.QuerySpec
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.SparkSession
+
+import graft.ops.CorpusGen
+import graft.queries.{Planted, QuerySpec}
 
 /** Correctness dump for the DuckDB oracle compare (scripts/check.py):
   * `graft.Verify <sfDir> <outDir> [query ...]` writes each named query's
   * result (every query's, with no names) to `<outDir>/<name>` as parquet,
   * and every query's oracle SQL to `<outDir>/oracle_sql.json`. A query runs
   * its `verify` path when it declares one, and its `planMust` is checked;
-  * a query that fails is reported on stderr and the run goes on. */
+  * a query that fails is reported on stderr and the run goes on. On a
+  * GenCorpus dir, which carries its planted truth, each query's `planted`
+  * rule also checks the written output ([[run]]). */
 object Verify {
 
   /** Cell normalization matching scripts/check.py `norm_cell` bit-for-bit:
@@ -47,7 +54,7 @@ object Verify {
     * results, and an unbounded collect could OOM the driver on a large
     * query) is skipped above 200k rows; the digest.json then records the
     * skip + row count instead of a hash. */
-  private def writeDigest(spark: org.apache.spark.sql.SparkSession,
+  private def writeDigest(spark: SparkSession,
                           outDir: String, name: String): Unit = {
     val df = spark.read.parquet(s"$outDir/$name")
     val n = df.count()
@@ -75,6 +82,78 @@ object Verify {
       Files.writeString(Paths.get(s"$outDir/$name.rows.tsv"), body)
   }
 
+  /** The verdict of `spec`'s planted rule on the output Verify wrote under
+    * `outDir`, re-read from that parquet (so the check never re-runs the
+    * query's lineage); None when the query declares no rule or `sfDir`
+    * holds no truth for the table the rule reads. A rule that throws fails. */
+  def checkPlanted(spark: SparkSession, spec: QuerySpec, sfDir: String,
+                   outDir: String): Option[Planted.Verdict] =
+    spec.planted.filter(p => exists(spark, CorpusGen.truthPath(sfDir, p.table))).map { p =>
+      try p.check(
+        Planted.Corpus(spark, sfDir, spark.read.parquet(CorpusGen.truthPath(sfDir, p.table))),
+        spark.read.parquet(s"$outDir/${spec.name}"))
+      catch { case NonFatal(e) => Planted.Verdict(ok = false, s"rule failed to run: $e") }
+    }
+
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** Runs `specs` on `sfDir` as the object doc says, writing each output
+    * under `outDir` (and a digest for the names in `digestFor`), then checks
+    * each planted rule whose truth is in `sfDir`. When a rule ran, writes
+    * `<outDir>/planted_checks.json` (corpus stamp and every verdict). Returns
+    * the names of the queries that failed to dump, and the verdicts. */
+  def run(spark: SparkSession, sfDir: String, outDir: String, specs: Seq[QuerySpec],
+          noCoalesce: Boolean = false,
+          digestFor: Set[String] = Set.empty): (Seq[String], Seq[(String, Planted.Verdict)]) = {
+    new java.io.File(outDir).mkdirs()
+    val failed = Seq.newBuilder[String]
+    val verdicts = Seq.newBuilder[(String, Planted.Verdict)]
+    specs.foreach { spec =>
+      try {
+        // a query's Verify path, when it has one, dumps the intermediate
+        // relation its oracle reads
+        val df = spec.verify.getOrElse(spec.build)(spark, sfDir)
+        spec.checkPlan(df)
+        (if (noCoalesce) df else df.coalesce(1)).write.mode("overwrite")
+          .parquet(s"$outDir/${spec.name}")
+        if (digestFor(spec.name)) writeDigest(spark, outDir, spec.name)
+        checkPlanted(spark, spec, sfDir, outDir).foreach { v =>
+          System.err.println(s"[verify] planted ${spec.name} $v")
+          verdicts += spec.name -> v
+        }
+      }
+      catch { case e: Throwable =>
+        failed += spec.name
+        System.err.println(s"[verify] ${spec.name} failed: $e") // toString: getMessage can be null
+      }
+    }
+    val checked = verdicts.result()
+    if (checked.nonEmpty) {
+      val body = checked.map { case (n, v) =>
+        s"${q(n)}: {${q("ok")}: ${v.ok}, ${q("detail")}: ${q(v.detail)}}" }
+      Files.writeString(Paths.get(s"$outDir/planted_checks.json"),
+        s"""{"corpus": ${Bench.corpusStamp(spark, sfDir)}, "checks": {""" +
+        body.mkString(", ") + "}}\n")
+    }
+    (failed.result(), checked)
+  }
+
+  /** JSON string escape: backslash, quote, and ALL control chars (<0x20) —
+    * a tab or CR in an oracle's SQL would otherwise make oracle_sql.json
+    * unparseable, and every query's compare with it. */
+  private def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     if (args.length < 2) {
       System.err.println("usage: graft.Verify <sfDir> <outDir> [query ...]")
@@ -95,8 +174,6 @@ object Verify {
     val noCoalesce = GraftEnv.noCoalesce()
     GraftEnv.check()
     val spark = GraftSessions.local(GraftEnv.cpus(4))
-    new java.io.File(outDir).mkdirs()
-    var nFailed = 0
     // Forensic digests (driver-red triage): for each named query, after the
     // dump, re-read the WRITTEN parquet and emit a canonical result digest
     // (<name>.digest.json — cells normalized exactly as scripts/check.py
@@ -108,21 +185,7 @@ object Verify {
     // query that has gone driver-red while locally green (quota_sample).
     val digestFor = sys.env.getOrElse("SPARK_GRAFT_DIGEST", "quota_sample")
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    specs.foreach { spec =>
-      try {
-        // a query's Verify path, when it has one, dumps the intermediate
-        // relation its oracle reads
-        val df = spec.verify.getOrElse(spec.build)(spark, sfDir)
-        spec.checkPlan(df)
-        (if (noCoalesce) df else df.coalesce(1)).write.mode("overwrite")
-          .parquet(s"$outDir/${spec.name}")
-        if (digestFor(spec.name)) writeDigest(spark, outDir, spec.name)
-      }
-      catch { case e: Throwable =>
-        nFailed += 1
-        System.err.println(s"[verify] ${spec.name} failed: $e") // toString: getMessage can be null
-      }
-    }
+    val (failed, verdicts) = run(spark, sfDir, outDir, specs, noCoalesce, digestFor)
     // quota_sample's input sidecar (doc_id, source, n_tokens, pri, pid):
     // if these rows agree across environments, the output is forced — the
     // plan is a pure function of them (Buckets.hexBucket, no partition ids).
@@ -146,19 +209,10 @@ object Verify {
     // check.py over the written outputs (a missing query shows up as a red
     // there), and a non-zero exit could abort the gate entirely. The
     // summary line makes partial breakage loud in the log.
-    if (nFailed > 0) System.err.println(s"[verify] $nFailed quer${if (nFailed == 1) "y" else "ies"} FAILED to dump")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    if (failed.nonEmpty) System.err.println(
+      s"[verify] ${failed.size} quer${if (failed.size == 1) "y" else "ies"} FAILED to dump")
+    val nBad = verdicts.count(!_._2.ok)
+    if (nBad > 0) System.err.println(s"[verify] $nBad of ${verdicts.size} planted rules FAILED")
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -233,9 +233,8 @@ object Classifier {
     * expression. */
   def qualityClassifier(spark: SparkSession, docs: DataFrame,
                         d: Int = 1 << 15, iters: Int = 30,
-                        dumpDirs: Option[(String, String)] = None,
-                        labelOverride: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val label = labelOverride.getOrElse(stopDensityLabel())
+                        dumpDirs: Option[(String, String)] = None): DataFrame = {
+    val label = stopDensityLabel()
     val feats = hashedFeatures(docs, label, d)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val w = trainLogReg(feats, d, iters)

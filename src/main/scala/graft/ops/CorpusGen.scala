@@ -13,7 +13,7 @@ import graft.functions.GraftFunctions
   * doc_id/text/lang/source/n_chars; embeddings: vec_id/embedding/label),
   * so every dedup/similarity operator runs on generated corpora unchanged.
   * `plantedPairs` emits the closed-form ground-truth duplicate relation
-  * that scale runs check recall against. */
+  * that planted rules (graft.queries.Planted) check recall against. */
 object CorpusGen {
 
   /** n synthetic documents with planted duplicate groups (see
@@ -57,7 +57,7 @@ object CorpusGen {
     * the pairs (g, g+1, exact), (g, g+2, near), (g+1, g+2, near). All other
     * id pairs are independent draws (their similarity under any of the
     * dedup measures is a coin-flip tail event, checked empirically by the
-    * scale runner, not planted). */
+    * planted rules' soundness half, not planted). */
   def plantedPairs(spark: SparkSession, n: Long): DataFrame = {
     val g = spark.range(0, n, 10, 16).select(col("id").as("g"))
       .filter(col("g") + 2 < n)
@@ -68,4 +68,7 @@ object CorpusGen {
         .as("p"))
       .select(col("p.a_id"), col("p.b_id"), col("p.kind"))
   }
+
+  /** Where GenCorpus writes `table`'s planted pairs, next to the table. */
+  def truthPath(dir: String, table: String): String = s"$dir/${table}_truth.parquet"
 }

@@ -65,50 +65,10 @@ object MultimodalOps {
     import spark.implicits._
     media.mapPartitions { it =>
       it.map { m =>
-        val real =
-          try {
-            val iis = javax.imageio.ImageIO.createImageInputStream(
-              new java.io.ByteArrayInputStream(m.bytes))
-            try {
-              val readers = javax.imageio.ImageIO.getImageReaders(iis)
-              if (!readers.hasNext) None
-              else {
-                val r = readers.next()
-                try {
-                  r.setInput(iis)
-                  val fmt = r.getFormatName.toLowerCase(java.util.Locale.ROOT)
-                  // decompression-bomb guard: the header declares dimensions
-                  // BEFORE any raster is allocated — a tiny payload claiming
-                  // a huge raster would OOM the executor at r.read(0), and
-                  // OutOfMemoryError is not caught by NonFatal. Bound the
-                  // declared pixel count first; oversized claims degrade to
-                  // the stub like any other undecodable payload (ADVICE r3).
-                  val declaredPixels = r.getWidth(0).toLong * r.getHeight(0).toLong
-                  if (declaredPixels > maxDecodePixels)
-                    throw new java.io.IOException(
-                      s"declared raster $declaredPixels px exceeds bound $maxDecodePixels")
-                  val img = r.read(0)
-                  val w = img.getWidth; val h = img.getHeight
-                  val stride = math.max(1, math.toIntExact(
-                    math.round(math.sqrt(w.toLong * h / maxSampledPixels.toDouble))))
-                  var sum = 0.0; var n = 0L; var y = 0
-                  while (y < h) {
-                    var x = 0
-                    while (x < w) {
-                      val rgb = img.getRGB(x, y)
-                      sum += 0.299 * ((rgb >> 16) & 0xff) +
-                             0.587 * ((rgb >> 8) & 0xff) +
-                             0.114 * (rgb & 0xff)
-                      n += 1; x += stride
-                    }
-                    y += stride
-                  }
-                  Some(DecodedImage(m.media_id, fmt, w, h, m.bytes.length,
-                    mean_luma = if (n == 0) 0.0 else sum / n, real_decode = true))
-                } finally r.dispose()
-              }
-            } finally if (iis != null) iis.close()
-          } catch { case scala.util.control.NonFatal(_) => None }
+        val real = withDecodedImage(m.bytes, maxDecodePixels) { (fmt, img) =>
+          DecodedImage(m.media_id, fmt, img.getWidth, img.getHeight, m.bytes.length,
+            meanLuma(img, maxSampledPixels), real_decode = true)
+        }
         real.getOrElse {
           val b = m.bytes
           def at(i: Int): Int = if (b.length > i) b(i) & 0xff else 0
@@ -443,8 +403,36 @@ object MultimodalOps {
   case class DecodedFrame(media_id: Long, frame_idx: Int, width: Int, height: Int,
                           frame_bytes: Int, mean_luma: Double, real_decode: Boolean)
 
+  /** Runs `f` on the javax.imageio decode of `len` payload bytes from `off`
+    * (format name, raster), inside the reader's lifecycle. None when no
+    * JDK codec reads the payload, when anything throws, or when the header
+    * declares more than `maxDecodePixels`: the decompression-bomb guard
+    * reads the declared dimensions BEFORE any raster is allocated — a tiny
+    * payload claiming a huge raster would OOM the executor at r.read(0),
+    * and OutOfMemoryError is not caught by NonFatal (ADVICE r3). */
+  private def withDecodedImage[A](bytes: Array[Byte], maxDecodePixels: Long,
+                                  off: Int = 0, len: Int = -1)
+                                 (f: (String, java.awt.image.BufferedImage) => A): Option[A] =
+    try {
+      val iis = javax.imageio.ImageIO.createImageInputStream(new java.io.ByteArrayInputStream(
+        bytes, off, if (len < 0) bytes.length - off else len))
+      try {
+        val readers = javax.imageio.ImageIO.getImageReaders(iis)
+        if (!readers.hasNext) None
+        else {
+          val r = readers.next()
+          try {
+            r.setInput(iis)
+            val fmt = r.getFormatName.toLowerCase(java.util.Locale.ROOT)
+            if (r.getWidth(0).toLong * r.getHeight(0).toLong > maxDecodePixels) None
+            else Some(f(fmt, r.read(0)))
+          } finally r.dispose()
+        }
+      } finally if (iis != null) iis.close()
+    } catch { case scala.util.control.NonFatal(_) => None }
+
   /** Mean ITU-R 601 luminance of a decoded raster, stride-subsampled to a
-    * bounded pixel budget (shared by decodeImages-style feature passes). */
+    * bounded pixel budget (the feature every image and frame decode emits). */
   private def meanLuma(img: java.awt.image.BufferedImage, maxSampledPixels: Int): Double = {
     val w = img.getWidth; val h = img.getHeight
     val stride = math.max(1, math.toIntExact(
@@ -525,27 +513,10 @@ object MultimodalOps {
             case (c, idx) if idx % everyK == 0 => (c, idx)
           }.take(maxFramesPerVideo)
           val decoded = sampled.flatMap { case ((off, len), idx) =>
-            try {
-              val iis = javax.imageio.ImageIO.createImageInputStream(
-                new java.io.ByteArrayInputStream(m.bytes, off, len))
-              try {
-                val readers = javax.imageio.ImageIO.getImageReaders(iis)
-                if (!readers.hasNext) None
-                else {
-                  val r = readers.next()
-                  try {
-                    r.setInput(iis)
-                    val declared = r.getWidth(0).toLong * r.getHeight(0).toLong
-                    if (declared > maxDecodePixels)
-                      throw new java.io.IOException(
-                        s"frame raster $declared px exceeds bound $maxDecodePixels")
-                    val img = r.read(0)
-                    Some(DecodedFrame(m.media_id, idx, img.getWidth, img.getHeight,
-                      len, meanLuma(img, maxSampledPixels), real_decode = true))
-                  } finally r.dispose()
-                }
-              } finally if (iis != null) iis.close()
-            } catch { case scala.util.control.NonFatal(_) => None }
+            withDecodedImage(m.bytes, maxDecodePixels, off, len) { (_, img) =>
+              DecodedFrame(m.media_id, idx, img.getWidth, img.getHeight,
+                len, meanLuma(img, maxSampledPixels), real_decode = true)
+            }
           }
           // an AVI whose frames all fail to decode (non-MJPEG codec) is a
           // stub case, not an empty video
@@ -646,41 +617,23 @@ object MultimodalOps {
     require(maxDim >= 1)
     media.mapPartitions { it =>
       it.map { m =>
-        val real =
-          try {
-            val iis = javax.imageio.ImageIO.createImageInputStream(
-              new java.io.ByteArrayInputStream(m.bytes))
-            try {
-              val readers = javax.imageio.ImageIO.getImageReaders(iis)
-              if (!readers.hasNext) None
-              else {
-                val r = readers.next()
-                try {
-                  r.setInput(iis)
-                  val declared = r.getWidth(0).toLong * r.getHeight(0).toLong
-                  if (declared > maxDecodePixels)
-                    throw new java.io.IOException(
-                      s"declared raster $declared px exceeds bound $maxDecodePixels")
-                  val img = r.read(0)
-                  val w = img.getWidth; val h = img.getHeight
-                  val den = math.max(math.max(w, h), maxDim)
-                  val ow = math.max(1, w * maxDim / den)
-                  val oh = math.max(1, h * maxDim / den)
-                  val out = new java.awt.image.BufferedImage(
-                    ow, oh, java.awt.image.BufferedImage.TYPE_INT_RGB)
-                  val g = out.createGraphics()
-                  g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-                    java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-                  g.drawImage(img, 0, 0, ow, oh, null)
-                  g.dispose()
-                  val bos = new java.io.ByteArrayOutputStream()
-                  javax.imageio.ImageIO.write(out, "png", bos)
-                  Some(ResizedImage(m.media_id, ow, oh, bos.toByteArray,
-                    meanLuma(out, maxSampledPixels), real_decode = true))
-                } finally r.dispose()
-              }
-            } finally if (iis != null) iis.close()
-          } catch { case scala.util.control.NonFatal(_) => None }
+        val real = withDecodedImage(m.bytes, maxDecodePixels) { (_, img) =>
+          val w = img.getWidth; val h = img.getHeight
+          val den = math.max(math.max(w, h), maxDim)
+          val ow = math.max(1, w * maxDim / den)
+          val oh = math.max(1, h * maxDim / den)
+          val out = new java.awt.image.BufferedImage(
+            ow, oh, java.awt.image.BufferedImage.TYPE_INT_RGB)
+          val g = out.createGraphics()
+          g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
+            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+          g.drawImage(img, 0, 0, ow, oh, null)
+          g.dispose()
+          val bos = new java.io.ByteArrayOutputStream()
+          javax.imageio.ImageIO.write(out, "png", bos)
+          ResizedImage(m.media_id, ow, oh, bos.toByteArray,
+            meanLuma(out, maxSampledPixels), real_decode = true)
+        }
         real.getOrElse {
           val b = m.bytes
           def at(i: Int): Int = if (b.length > i) b(i) & 0xff else 0

@@ -385,12 +385,13 @@ object SimilarityOps {
     * Returns (bits, measuredBound). Recall falls as bits rise (per-table
     * collision p^bits), so `maxPairs` is a THROUGHPUT budget whose recall
     * price is visible: pick it per deployment (executor-disk aggregate),
-    * and let the measured-recall gate (ScaleDedup check line) be the
-    * arbiter. Walk cap 24 bits (the HyperplaneLsh limit); a corpus whose
-    * bound exceeds the budget even there (e.g. one giant identical-vector
-    * cluster — same-bucket in EVERY table at any bits) fails LOUDLY with
-    * the measured bound unless `allowOverBudget` (the maxBucket-capped
-    * caller, whose join volume the cap bounds regardless). */
+    * and let the measured recall (`dedup_semantic_ann`'s planted rule,
+    * which Verify checks on a GenCorpus dir) be the arbiter. Walk cap 24
+    * bits (the HyperplaneLsh limit); a corpus whose bound exceeds the
+    * budget even there (e.g. one giant identical-vector cluster —
+    * same-bucket in EVERY table at any bits) fails LOUDLY with the
+    * measured bound unless `allowOverBudget` (the maxBucket-capped caller,
+    * whose join volume the cap bounds regardless). */
   def selfJoinBitsMeasured(spark: SparkSession, emb: DataFrame,
                            maxPairs: Long, tables: Int = 8,
                            seed: Long = 42L,
@@ -554,69 +555,6 @@ object SimilarityOps {
     rankTopK(scored, k)
   }
 
-  /** Auto-sized sign-LSH parameters — see [[autoTuneLsh]]. */
-  final case class LshParams(tables: Int, bits: Int, flips: Int)
-
-  /** Sizes (tables, bits, flips) for [[annLshTopK]] from the corpus itself,
-    * closing the fixed-defaults recall gap (8×4 measured 0.86 recall at
-    * 500 k rows vs the ≥0.95 bar):
-    *
-    *  - `bits` bounds per-table candidate volume: each random hyperplane
-    *    halves an angularly-spread corpus, so a bucket holds ~n/2^bits rows;
-    *    bits = log2(n/1000) keeps expected candidates-per-query-per-table
-    *    near 1 k at any corpus size.
-    *  - `flips` = 2 multi-probes (recall rises like extra tables at only
-    *    nQueries× probe cost — the cheap knob, always on).
-    *  - `tables` is the measured knob: recall@k is checked against a
-    *    brute-force ground truth on a bounded sample (strided corpus sample
-    *    ∪ query rows), walking up the table ladder until `target` holds.
-    *
-    * The sample measurement is CONSERVATIVE: per-pair bucket-collision
-    * probability depends only on the pair's angle (corpus-independent), and
-    * the sample's top-k neighbours sit farther out than the full corpus's
-    * (fewer close rows to draw from), so sampled recall underestimates
-    * full-corpus recall — a table count that passes here can only do better
-    * at scale. Cost is bounded regardless of corpus size: one count, one
-    * ≤`sampleTarget`-row sample, and a handful of sample-sized probe runs
-    * (driver-coordinated, executor-run — nothing quadratic in n). */
-  def autoTuneLsh(spark: SparkSession, emb: DataFrame, nQueries: Int = 10, k: Int = 5,
-                  target: Double = 0.95, seed: Long = 42L,
-                  sampleTarget: Long = 20000L, maxTables: Int = 32): LshParams = {
-    val n = emb.count()
-    val bits = math.max(4, math.min(16,
-      math.ceil(math.log(math.max(2.0, n / 1000.0)) / math.log(2.0)).toInt))
-    val flips = math.min(2, bits)
-    if (n == 0) return LshParams(8, bits, flips)
-    val stride = math.max(1L, n / sampleTarget)
-    val sample = emb.filter(col("vec_id") < nQueries or pmod(col("vec_id"), lit(stride)) === 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val truth = bruteForceTopK(spark, sample, nQueries, k)
-        .select(col("q_id"), col("n_id")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      if (truth.isEmpty) return LshParams(8, bits, flips)
-      def recallAt(t: Int, b: Int): Double = {
-        val got = annLshTopK(spark, sample, nQueries, k, t, b, seed, flips)
-          .select(col("q_id"), col("n_id")).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        (got & truth).size.toDouble / truth.size
-      }
-      // Joint walk, bits DESCENDING: at each bits level first probe the max
-      // table count — if even that misses target (measured at 5 M: 32×13
-      // gave full-corpus recall 0.78), more tables can't save this bits
-      // level, so drop a bit (doubling per-table candidates ~ squaring the
-      // per-table collision probability) and retry. Once the max passes,
-      // walk the ladder up to the CHEAPEST passing table count. Bounded:
-      // ≤ (bitsInit−4) + ladder.size sample-sized probes.
-      val ladder = Seq(4, 6, 8, 12, 16, 24, 32).filter(_ <= maxTables)
-      var b = bits
-      while (b > 4 && recallAt(ladder.last, b) < target) b -= 1
-      val t = ladder.find(t => t == ladder.last || recallAt(t, b) >= target)
-        .getOrElse(ladder.last)
-      LshParams(t, b, flips)
-    } finally sample.unpersist()
-  }
-
   /** IVF-style ANN: deterministic "training" picks nlist strided vectors as
     * centroids; every vector is assigned MAP-SIDE to its nearest centroid
     * (NearestCentroids — one codegen'd column, no join/window in the
@@ -659,95 +597,10 @@ object SimilarityOps {
     * same partials order — the gate therefore checks the ASSIGNMENT from
     * the materialized centroid relation (exact on both engines), and the
     * spec pins direct-vs-relation assignment parity. */
-  /** kmeans||-style oversampled initialization (Bahmani et al. 2012,
-    * "Scalable K-Means++", adapted to the spherical metric): `rounds`
-    * distributed passes each sample points with probability
-    * min(1, over·k·d(x,C)/φ(C)), d = 1 − cos to the nearest current
-    * candidate, φ = Σ d — far-from-candidates points oversample, so a few
-    * passes land candidates in every real mode where the strided pick can
-    * miss small or adversarially-placed clusters. Repo determinism rules
-    * replace randomness: the sampling coin is the multiplicative md5 hash
-    * of (round, vec_id) — engine/run/retry-stable — and each round's
-    * accept set is hard-capped by coin priority (bounded collect:
-    * ≤ rounds · 4·over·k candidate vectors; the weight pass collects
-    * ≤ |candidates| counts). Candidates are weighted by assignment-cell
-    * size (one map-side argmax pass) and reduced DRIVER-SIDE by weighted
-    * spherical Lloyd over the candidate set (model-sized work) to k
-    * centers — the kmeans|| recluster step. */
-  private[graft] def kmeansParallelInit(emb: DataFrame, k: Int, rounds: Int = 4,
-                                        over: Int = 2): Array[Array[Float]] = {
-    GraftFunctions.register(emb.sparkSession)
-    def cosArr(a: Array[Float], b: Array[Float]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { d += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
-        nb += b(i).toDouble * b(i); i += 1 }
-      if (na == 0.0 || nb == 0.0) 0.0 else d / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val first = emb.orderBy(col("vec_id")).limit(1)
-      .select(col("embedding")).collect().map(_.getSeq[Float](0).toArray)
-    if (first.isEmpty) return Array.empty
-    var cands = first
-    val cap = 4 * over * k
-    val coinOf = (r: Int) => conv(substring(md5(concat_ws("-",
-      lit("kmpar"), lit(r), col("vec_id").cast("string"))), 1, 8), 16, 10)
-      .cast("double") / 4294967296.0
-    var r = 1
-    var done = false
-    while (r <= rounds && !done) {
-      val asg = nearestCentroids(col("embedding"), cands, 1)(0)
-      val dCol = lit(1.0) - cosToCentroid(col("embedding"), cands, asg)
-      val phi = emb.agg(sum(dCol)).collect()(0).getDouble(0)
-      if (phi <= 1e-12) done = true // every point coincides with a candidate
-      else {
-        val p = least(lit(1.0), lit(over.toDouble * k) * dCol / phi)
-        val picked = emb.withColumn("pri", coinOf(r))
-          .filter(col("pri") < p)
-          .orderBy(col("pri"), col("vec_id")).limit(cap)
-          .select(col("embedding")).collect().map(_.getSeq[Float](0).toArray)
-        cands = cands ++ picked
-      }
-      r += 1
-    }
-    if (cands.length <= k)
-      return (cands ++ trainCentroids(emb, k, 31)).distinctBy(_.toSeq).take(k)
-    // weight pass: candidate cell sizes from one map-side argmax
-    val counts = emb.select(nearestCentroids(col("embedding"), cands, 1)(0).as("c"))
-      .groupBy(col("c")).agg(count(lit(1)).as("n")).collect()
-      .map(row => row.getInt(0) -> row.getLong(1)).toMap
-    val w = cands.indices.map(i => counts.getOrElse(i, 0L).toDouble).toArray
-    // driver-side weighted spherical Lloyd over the candidate set: seed with
-    // the k heaviest candidates (deterministic: weight desc, index asc)
-    val dim = cands.head.length
-    var centers = cands.indices.sortBy(i => (-w(i), i)).take(k)
-      .map(i => cands(i).clone()).toArray
-    for (_ <- 1 to 10) {
-      val acc = Array.ofDim[Double](centers.length, dim)
-      val cw = new Array[Double](centers.length)
-      cands.indices.foreach { i =>
-        if (w(i) > 0) {
-          val best = centers.indices.maxBy(c => (cosArr(cands(i), centers(c)), -c))
-          var d = 0
-          while (d < dim) { acc(best)(d) += w(i) * cands(i)(d); d += 1 }
-          cw(best) += w(i)
-        }
-      }
-      centers = centers.zipWithIndex.map { case (old, c) =>
-        if (cw(c) == 0) old
-        else Array.tabulate(dim)(d => (acc(c)(d) / cw(c)).toFloat)
-      }
-    }
-    centers
-  }
-
   private[graft] def trainKmeans(emb: DataFrame, k: Int = 16, iters: Int = 5,
-                                 centroidStride: Int = 31,
-                                 init: String = "strided"): Array[Array[Float]] = {
+                                 centroidStride: Int = 31): Array[Array[Float]] = {
     GraftFunctions.register(emb.sparkSession)
-    var cs = init match {
-      case "parallel" => kmeansParallelInit(emb, k)
-      case _ => trainCentroids(emb, k, centroidStride)
-    }
+    var cs = trainCentroids(emb, k, centroidStride)
     if (cs.isEmpty) return cs
     val dim = cs.head.length
     // Two partial-sum strategies per Lloyd iteration, chosen by MODEL size
@@ -891,9 +744,9 @@ object SimilarityOps {
     * scan speed and only training's bounded partials shuffle. Output:
     * (vec_id, cluster, cos to the assigned centroid, round 6). */
   def kmeansCluster(spark: SparkSession, emb: DataFrame, k: Int = 16,
-                    iters: Int = 5, init: String = "strided"): DataFrame = {
+                    iters: Int = 5): DataFrame = {
     GraftFunctions.register(spark)
-    val cs = trainKmeans(emb, k, iters, init = init)
+    val cs = trainKmeans(emb, k, iters)
     if (cs.isEmpty)
       return emb.select(col("vec_id"), lit(0).as("cluster"),
         lit(0.0).as("cos")).limit(0)

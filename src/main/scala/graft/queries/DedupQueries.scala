@@ -9,6 +9,11 @@ import graft.ops.TextOps.spreadScan
   * shingle, MinHash, SimHash and edit-distance pairs, cross-corpus and
   * incremental dedup. */
 object DedupQueries {
+  /** The reference side ("eval suite") of the cross-corpus entries. */
+  private val IsRef = col("source").isin("src0", "src1")
+  /** The new batch of the incremental entries; the rest is the existing corpus. */
+  private val InBatch = col("doc_id") % 5 =!= 0
+
   /** Shared by dedup_incremental and dedup_incremental_store: the store
     * path is defined to produce id-for-id identical survivors. */
   private val IncrementalDedupOracle: String =
@@ -37,7 +42,8 @@ object DedupQueries {
   val all: Seq[QuerySpec] = Seq(
     QuerySpec("dedup_exact", (s, d) => DedupOps.dedupExact(Tables.documents(s, d)),
       () => """SELECT md5(text) AS h, min(doc_id) AS canonical_id, count(*) AS n_copies
-         FROM documents GROUP BY md5(text)"""),
+         FROM documents GROUP BY md5(text)""",
+      planted = Some(Planted.exactGroups)),
     // the shingle family spreads a narrow scan itself, inside shingleDocs
     // (under its persist, so the spread exchange runs once); no call-site
     // spreadScan here or on the other shingle-family entries
@@ -53,7 +59,8 @@ object DedupQueries {
              any_value(a.nsh) AS na, any_value(b.nsh) AS nb
            FROM ex a JOIN ex b ON a.sg=b.sg AND a.doc_id<b.doc_id GROUP BY 1,2)
          SELECT a_id, b_id, round(inter/(na+nb-inter),6) AS jacc FROM pairs
-         WHERE round(inter/(na+nb-inter),6) >= 0.5"""),
+         WHERE round(inter/(na+nb-inter),6) >= 0.5""",
+      planted = Some(Planted.jaccardPairs(0.5))),
     QuerySpec("dedup_substring", (s, d) => DedupOps.substringDupSpans(Tables.documents(s, d)),
       () => """WITH doc AS (SELECT doc_id, text FROM documents WHERE length(text) >= 40),
          pos AS (SELECT unnest(generate_series(1, (SELECT max(length(text)) FROM doc) - 39)) AS pos),
@@ -72,7 +79,8 @@ object DedupQueries {
          SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
                 CAST(max(pos) + 39 AS BIGINT) AS span_end,
                 CAST(max(pos) + 39 - min(pos) + 1 AS BIGINT) AS span_len
-         FROM i GROUP BY doc_id, span"""),
+         FROM i GROUP BY doc_id, span""",
+      planted = Some(Planted.substringSpans(40))),
     QuerySpec("substring_dup_stats", (s, d) => DedupOps.substringDupStats(Tables.documents(s, d)),
       () => """WITH doc AS (SELECT doc_id, text FROM documents WHERE length(text) >= 40),
          pos AS (SELECT unnest(generate_series(1, (SELECT max(length(text)) FROM doc) - 39)) AS pos),
@@ -109,7 +117,8 @@ object DedupQueries {
              any_value(a.nsh) AS na, any_value(b.nsh) AS nb
            FROM ex a JOIN ex b ON a.sg=b.sg AND a.doc_id<b.doc_id GROUP BY 1,2)
          SELECT a_id, b_id, round(inter/(na+nb-inter),6) AS jacc FROM pairs
-         WHERE round(inter/(na+nb-inter),6) >= 0.8"""),
+         WHERE round(inter/(na+nb-inter),6) >= 0.8""",
+      planted = Some(Planted.jaccardPairs(0.8))),
     QuerySpec("dedup_groups", (s, d) => DedupOps.dedupGroups(Tables.documents(s, d)),
       () => """WITH RECURSIVE tok AS (SELECT doc_id,
              list_filter(string_split_regex(text,'\s+'), x->x<>'') AS t FROM documents),
@@ -139,7 +148,8 @@ object DedupQueries {
          SELECT a.doc_id AS a_id, b.doc_id AS b_id,
            CAST(levenshtein(a.pfx, b.pfx) AS BIGINT) AS dist
          FROM p a JOIN p b ON a.tok = b.tok AND a.doc_id < b.doc_id
-         WHERE levenshtein(a.pfx, b.pfx) <= 12"""),
+         WHERE levenshtein(a.pfx, b.pfx) <= 12""",
+      planted = Some(Planted.levenshteinPairs(12, 48))),
     // Under Verify the fingerprints are materialized to a
     // fixed path and the pair stage re-reads them, so the DuckDB oracle can
     // brute-force all-pairs hamming over the IDENTICAL fingerprint relation —
@@ -161,7 +171,8 @@ object DedupQueries {
           DedupOps.simhashFingerprints(Tables.documents(s, d)).coalesce(1)
             .write.mode("overwrite").parquet(fpDir)
           DedupOps.simhashPairsFromFingerprints(s.read.parquet(fpDir))
-        })
+        },
+        planted = Some(Planted.hammingPairs(DedupOps.simhashFingerprints, 6)))
     },
     // Idf-weighted twin: same dump pattern, the oracle brute-forces
     // all-pairs hamming over the WEIGHTED fingerprint relation (weight
@@ -180,7 +191,8 @@ object DedupQueries {
           DedupOps.simhashIdfFingerprints(Tables.documents(s, d)).coalesce(1)
             .write.mode("overwrite").parquet(fpDir)
           DedupOps.simhashPairsFromFingerprints(s.read.parquet(fpDir))
-        })
+        },
+        planted = Some(Planted.hammingPairs(DedupOps.simhashIdfFingerprints(_), 6)))
     },
     // The exact op's pre-flight volume guard is ARMED BY DEFAULT (2e8
     // candidate rows; SPARK_GRAFT_PPJOIN_BUDGET overrides, 0 disarms): a
@@ -205,7 +217,8 @@ object DedupQueries {
              any_value(a.nsh) AS na, any_value(b.nsh) AS nb
            FROM ex a JOIN ex b ON a.sg=b.sg AND a.doc_id<b.doc_id GROUP BY 1,2)
          SELECT a_id, b_id, round(inter/(na+nb-inter),6) AS jacc FROM pairs
-         WHERE round(inter/(na+nb-inter),6) >= 0.5"""),
+         WHERE round(inter/(na+nb-inter),6) >= 0.5""",
+      planted = Some(Planted.jaccardPairs(0.5))),
     QuerySpec("decontaminate", (s, d) => {
       val docs = Tables.documents(s, d)
       CurationPipeline.decontaminate(
@@ -271,7 +284,8 @@ object DedupQueries {
            WHERE a.source NOT IN ('src0','src1') AND b.source IN ('src0','src1')
            GROUP BY 1,2)
          SELECT corpus_id, ref_id, round(inter/(na+nb-inter),6) AS jacc FROM pairs
-         WHERE round(inter/(na+nb-inter),6) >= 0.8"""),
+         WHERE round(inter/(na+nb-inter),6) >= 0.8""",
+      planted = Some(Planted.crossPairs(0.8, IsRef))),
     // The LSH twin is output-identical at tau=0.8 (32x4-band recall 1.0 on
     // near-dup thresholds — the dedup_minhash_lsh precedent; candidates are
     // exact-Jaccard verified, so no unsound pair can appear).
@@ -293,7 +307,8 @@ object DedupQueries {
            WHERE a.source NOT IN ('src0','src1') AND b.source IN ('src0','src1')
            GROUP BY 1,2)
          SELECT corpus_id, ref_id, round(inter/(na+nb-inter),6) AS jacc FROM pairs
-         WHERE round(inter/(na+nb-inter),6) >= 0.8"""),
+         WHERE round(inter/(na+nb-inter),6) >= 0.8""",
+      planted = Some(Planted.crossPairs(0.8, IsRef))),
     // Both composites take the LSH candidate path (useLsh=true): output
     // identical to the exact form at tau=0.8 (CrossDedupSpec pins it; the
     // 500 k/5 M planted runs prove recall 1.0) and ~11x faster at sf1 —
@@ -320,7 +335,8 @@ object DedupQueries {
            WHERE round(inter/(na+nb-inter),6) >= 0.8)
          SELECT doc_id FROM documents
          WHERE source NOT IN ('src0','src1')
-           AND doc_id NOT IN (SELECT corpus_id FROM flagged)"""),
+           AND doc_id NOT IN (SELECT corpus_id FROM flagged)""",
+      planted = Some(Planted.decontaminated(0.8, IsRef))),
     // the dedup_groups recursive-CTE oracle with the split coin on top:
     // group_id is the component's canonical member, the coin is the same
     // Knuth multiplicative hash mixture_sample's oracle replays.
@@ -362,7 +378,8 @@ object DedupQueries {
       CurationPipeline.incrementalDedup(
         docs.filter(col("doc_id") % 5 =!= 0),
         docs.filter(col("doc_id") % 5 === 0))
-    }, () => IncrementalDedupOracle),
+    }, () => IncrementalDedupOracle,
+      planted = Some(Planted.incremental(0.8, InBatch))),
     // Same split, routed through the PERSISTED signature store (built here
     // from the existing side — the build is part of the query body, the
     // ivf_persisted convention). Survivors must be id-for-id identical to
@@ -374,7 +391,8 @@ object DedupQueries {
       DedupOps.minhashWriteStore(existing, store)
       CurationPipeline.incrementalDedupFromStore(
         docs.filter(col("doc_id") % 5 =!= 0), existing, store)
-    }, () => IncrementalDedupOracle),
+    }, () => IncrementalDedupOracle,
+      planted = Some(Planted.incremental(0.8, InBatch))),
     QuerySpec("contamination_report", (s, d) => {
       val docs = Tables.documents(s, d)
       CurationPipeline.contaminationReport(
@@ -416,6 +434,7 @@ object DedupQueries {
          SELECT doc_id, count(*)::BIGINT AS n_paras, sum(is_dup)::BIGINT AS n_dropped,
            coalesce(array_to_string(list(para ORDER BY idx) FILTER (WHERE is_dup = 0), ' '), '')
              AS text_clean
-         FROM m GROUP BY doc_id"""),
+         FROM m GROUP BY doc_id""",
+      planted = Some(Planted.paragraphFullDrop)),
   )
 }

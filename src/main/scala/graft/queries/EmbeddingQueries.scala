@@ -12,7 +12,8 @@ object EmbeddingQueries {
       () => """SELECT a.vec_id AS a_id, b.vec_id AS b_id,
          round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]),5) AS cos
          FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-         WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]),5) >= 0.4"""),
+         WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]),5) >= 0.4""",
+      planted = Some(Planted.cosinePairs(0.4))),
     QuerySpec("ann_bruteforce_topk", (s, d) => SimilarityOps.bruteForceTopK(s, Tables.embeddings(s, d)),
       () => """WITH scored AS (
            SELECT q.vec_id AS q_id, n.vec_id AS n_id,
@@ -145,7 +146,8 @@ object EmbeddingQueries {
             .coalesce(1).write.mode("overwrite").parquet(centroidDir)
           SimilarityOps.assignFromCentroidRelation(s, emb,
             s.read.parquet(centroidDir))
-        })
+        },
+        planted = Some(Planted.kmeansTwins(16)))
     },
     // floor(x+0.5) on BOTH engines (round() half-modes differ); max is
     // order-free; the cosine accumulates left-to-right in list order on
@@ -202,7 +204,8 @@ object EmbeddingQueries {
             .coalesce(1).write.mode("overwrite").parquet(centroidDir)
           CurationPipeline.clusterBalancedSampleFrom(s, emb,
             s.read.parquet(centroidDir))
-        })
+        },
+        planted = Some(Planted.balancedRanks(20)))
     },
     QuerySpec("dedup_semantic", (s, d) => SimilarityOps.semanticDedup(s, Tables.embeddings(s, d)),
       () => """WITH RECURSIVE pairs AS (
@@ -217,7 +220,8 @@ object EmbeddingQueries {
          lab AS (SELECT id, min(comp) AS comp FROM r GROUP BY id)
          SELECT v.vec_id, coalesce(l.comp, v.vec_id) AS group_id,
            v.vec_id = coalesce(l.comp, v.vec_id) AS keep
-         FROM embeddings v LEFT JOIN lab l ON v.vec_id = l.id"""),
+         FROM embeddings v LEFT JOIN lab l ON v.vec_id = l.id""",
+      planted = Some(Planted.semanticGroups(0.4, nearFloor = 1.0))),
     // ANN (sign-LSH) scale path of dedup_semantic: candidates from the
     // multi-table bucket self-join, exact-cosine verify, same CC tail.
     // Under Verify the (vec_id, bucket) relation is dumped and both sides
@@ -257,7 +261,10 @@ object EmbeddingQueries {
                 SimilarityOps.DefaultSemAnnPairBudget)._1)
             .coalesce(1).write.mode("overwrite").parquet(bucketDir)
           SimilarityOps.semanticDedupFromBuckets(s, emb, s.read.parquet(bucketDir))
-        })
+        },
+        // exact twins collide in every table; near ones ride the collision
+        // curve, so their recall has a floor, not a bar of 1.0
+        planted = Some(Planted.semanticGroups(0.4, nearFloor = 0.9)))
     },
   )
 }

@@ -15,13 +15,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * model) under a dump dir only this entry and its oracle read, and
   * recomputes the result from it, so DuckDB can replay the downstream
   * stages over the identical relation. `planMust` names a node the
-  * executed plan of the query Verify runs must contain. */
+  * executed plan of the query Verify runs must contain. `planted` is the
+  * rule Verify checks the written output against when the dir carries the
+  * planted truth of the table the query reads ([[Planted]]). */
 final case class QuerySpec(
     name: String,
     build: (SparkSession, String) => DataFrame,
     oracle: () => String,
     verify: Option[(SparkSession, String) => DataFrame] = None,
-    planMust: Option[String] = None) {
+    planMust: Option[String] = None,
+    planted: Option[Planted] = None) {
 
   /** Fails when `df`'s executed plan lacks the `planMust` node. */
   def checkPlan(df: DataFrame): Unit = planMust.foreach { node =>

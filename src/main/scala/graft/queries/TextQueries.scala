@@ -419,7 +419,8 @@ object TextQueries {
           val model = TextAnalysis.trainUnigram(docs)
           subwordCountsFromDump(s, docs, wordDir, "n_unigram_tokens",
             graft.functions.GraftFunctions.unigramEncode(_, model))
-        })
+        },
+        planted = Some(Planted.unigramLossless))
     },
     // fastText-style hashed-feature logistic classifier (label = the
     // stopword-density quality rule). Under Verify the trained weight vector and the

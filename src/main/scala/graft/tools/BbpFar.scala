@@ -20,9 +20,8 @@ import graft.ops.ComputeOps
   * 1000-executor wall-clock for 2^40 quoted in the ComputeOps docs. */
 object BbpFar {
   def main(args: Array[String]): Unit = {
+    val offsets = graft.GraftEnv.bbpOffsets()
     val spark = graft.GraftSessions.local(graft.GraftEnv.cpus(32))
-    val offsets = sys.env.getOrElse("SPARK_GRAFT_BBP_OFFSETS", "400000000,4294967296")
-      .split(",").map(_.trim.toLong)
     val results = offsets.map { d =>
       val t0 = System.nanoTime()
       val a = ComputeOps.hexDigitsAtFar(spark, d)

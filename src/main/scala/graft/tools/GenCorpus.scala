@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.sql.SparkSession
+
 import graft.ops.CorpusGen
 
 /** Materialize a realistic-vocabulary synthetic documents/embeddings family
@@ -28,17 +30,31 @@ import graft.ops.CorpusGen
   * Writes <outDir>/documents.parquet and <outDir>/embeddings.parquet with
   * the driver testdata schemas and the scaleup.py file-size convention
   * (~4 k rows per file on these families, so byte-range splitting gives the
-  * CPU-heavy per-row ops real scan parallelism — see scaleup.py).
+  * CPU-heavy per-row ops real scan parallelism — see scaleup.py), and next
+  * to each its planted truth (CorpusGen.plantedPairs at that table's row
+  * count, under CorpusGen.truthPath). The dir then carries its own truth:
+  * graft.Bench times the queries on it, and graft.Verify checks each
+  * query's planted rule against the truth.
   */
 object GenCorpus {
+  private val Usage = "usage: GenCorpus <outDir> <nDocs> <nVecs> [vocab=50000] [stopFrac=0.25]"
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: GenCorpus <outDir> <nDocs> <nVecs> [vocab] [stopFrac]")
-    val dir = args(0)
-    val nDocs = args(1).toLong
-    val nVecs = args(2).toLong
-    val vocab = if (args.length > 3) args(3).toInt else 50000
-    val stopFrac = if (args.length > 4) args(4).toDouble else 0.25
+    val parsed = scala.util.Try((args(0), args(1).toLong, args(2).toLong,
+      if (args.length > 3) args(3).toInt else 50000,
+      if (args.length > 4) args(4).toDouble else 0.25)).toOption
+    require(args.length <= 5 && parsed.exists { case (_, nDocs, nVecs, vocab, stopFrac) =>
+      nDocs >= 0 && nVecs >= 0 && vocab >= 1 && stopFrac >= 0 && stopFrac <= 1 }, Usage)
+    val (dir, nDocs, nVecs, vocab, stopFrac) = parsed.get
     val spark = graft.GraftSessions.local(graft.GraftEnv.cpus(32))
+    write(spark, dir, nDocs, nVecs, vocab, stopFrac)
+    println(s"GenCorpus: $nDocs docs (vocab $vocab, stopFrac $stopFrac), $nVecs vecs -> $dir")
+    spark.stop()
+  }
+
+  /** Writes the two tables and their truth under `dir` (see the object doc). */
+  def write(spark: SparkSession, dir: String, nDocs: Long, nVecs: Long,
+            vocab: Int = 50000, stopFrac: Double = 0.25): Unit = {
     def filesFor(n: Long): Int = math.max(1, math.min(4096, (n / 4096L).toInt))
     CorpusGen.documents(spark, nDocs, vocab = vocab, stopFrac = stopFrac)
       .repartition(filesFor(nDocs))
@@ -46,7 +62,8 @@ object GenCorpus {
     CorpusGen.embeddings(spark, nVecs)
       .repartition(filesFor(nVecs))
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    println(s"GenCorpus: $nDocs docs (vocab $vocab, stopFrac $stopFrac), $nVecs vecs -> $dir")
-    spark.stop()
+    for ((table, n) <- Seq("documents" -> nDocs, "embeddings" -> nVecs))
+      CorpusGen.plantedPairs(spark, n).coalesce(1)
+        .write.mode("overwrite").parquet(CorpusGen.truthPath(dir, table))
   }
 }

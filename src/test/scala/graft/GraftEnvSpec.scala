@@ -27,6 +27,23 @@ class GraftEnvSpec extends AnyFunSuite {
     assert(GraftEnv.ccLocalEdges(Map.empty) == 2000000L)
   }
 
+  test("SPARK_GRAFT_BBP_OFFSETS: a comma list of positive longs; anything else names the variable") {
+    for (v <- Seq("x", "4e8", "400000000,", "0", "-5", "1,,2")) {
+      val e = intercept[IllegalArgumentException](GraftEnv.bbpOffsets(Map("SPARK_GRAFT_BBP_OFFSETS" -> v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_BBP_OFFSETS") && e.getMessage.contains(s""""$v""""), e.getMessage)
+    }
+    assert(GraftEnv.bbpOffsets(Map("SPARK_GRAFT_BBP_OFFSETS" -> " 1, 4294967296")) == Seq(1L, 4294967296L))
+    assert(GraftEnv.bbpOffsets(Map.empty) == Seq(400000000L, 4294967296L))
+  }
+
+  test("GenCorpus rejects malformed arguments with its usage line, before any session starts") {
+    for (args <- Seq(Seq("/tmp/x"), Seq("/tmp/x", "ten", "5"), Seq("/tmp/x", "10", "5", "v"),
+                     Seq("/tmp/x", "10", "5", "100", "2.0"), Seq("/tmp/x", "-1", "5"))) {
+      val e = intercept[IllegalArgumentException](tools.GenCorpus.main(args.toArray))
+      assert(e.getMessage.contains("usage: GenCorpus <outDir> <nDocs> <nVecs>"), e.getMessage)
+    }
+  }
+
   test("SPARK_GRAFT_NO_COALESCE: unset or 1; anything else, 0 included, is rejected") {
     assert(!GraftEnv.noCoalesce(Map.empty))
     assert(GraftEnv.noCoalesce(Map("SPARK_GRAFT_NO_COALESCE" -> "1")))

@@ -79,46 +79,6 @@ class Round10Spec extends SparkSpecBase {
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
-  test("kmeans|| init: deterministic, k centers of the right shape, Lloyd " +
-    "still improves on it, and it recovers adversarial small clusters the " +
-    "strided pick misses") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val a = SimilarityOps.kmeansParallelInit(emb, k = 8)
-    val b = SimilarityOps.kmeansParallelInit(emb, k = 8)
-    assert(a.length == 8 && a.head.length == b.head.length)
-    assert(a.map(_.toSeq).toSeq == b.map(_.toSeq).toSeq, "init must be deterministic")
-    // Lloyd monotonicity from the parallel init (same gate as strided)
-    def obj(cs: Array[Array[Float]]): Double =
-      SimilarityOps.assignFromCentroidRelation(spark, emb,
-          SimilarityOps.kmeansCentroidRelation(spark, cs))
-        .agg(org.apache.spark.sql.functions.avg("cos")).collect()(0).getDouble(0)
-    val trained = SimilarityOps.trainKmeans(emb, k = 8, iters = 5, init = "parallel")
-    assert(obj(trained) >= obj(a) - 1e-6, "Lloyd must not worsen the parallel init")
-    // adversarial mixture: ids 0..89 in one tight mode near e1, ids 90..99 a
-    // tiny far mode near e2. A stride-31 pick of k=2 draws ids 0 and 31 —
-    // both from the big mode — while the distance-weighted oversampling
-    // must land a candidate in the small mode.
-    val adv = (0L until 100L).map { i =>
-      val base = if (i < 90) Array(1.0f, 0.0f, 0.01f * (i % 7))
-                 else Array(0.0f, 1.0f, 0.01f * (i % 7))
-      (i, base.toSeq)
-    }.toDF("vec_id", "embedding")
-    val strided = SimilarityOps.trainKmeans(adv, k = 2, iters = 0)
-    val par = SimilarityOps.trainKmeans(adv, k = 2, iters = 0, init = "parallel")
-    def hasSmallMode(cs: Array[Array[Float]]): Boolean =
-      cs.exists(c => c(1) > c(0)) // a center dominated by the e2 direction
-    assert(!hasSmallMode(strided), "precondition: strided init misses the small mode")
-    assert(hasSmallMode(par), "kmeans|| init must seed the small far mode")
-    assert(obj2(adv, par) > obj2(adv, strided) + 0.01,
-      "parallel init must beat strided on the adversarial mixture")
-  }
-
-  private def obj2(emb: org.apache.spark.sql.DataFrame,
-                   cs: Array[Array[Float]]): Double =
-    SimilarityOps.assignFromCentroidRelation(spark, emb,
-        SimilarityOps.kmeansCentroidRelation(spark, cs))
-      .agg(org.apache.spark.sql.functions.avg("cos")).collect()(0).getDouble(0)
-
   test("crossJaccardPairs maxRefDf guard: hot reference shingle fails " +
     "loudly; a clean reference passes with identical output") {
     val corpus = Seq((1L, "alpha beta gamma delta epsilon zeta"),
