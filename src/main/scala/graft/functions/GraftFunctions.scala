@@ -35,6 +35,8 @@ object GraftFunctions {
       e(1).eval().asInstanceOf[Number].intValue())),
     "shingles" -> (e => ShingleArray(e(0),
       e(1).eval().asInstanceOf[Number].intValue())),
+    "shingle_hashes" -> (e => ShingleHashes(e(0),
+      e(1).eval().asInstanceOf[Number].intValue())),
     "band_hashes" -> (e => BandHashes(e(0),
       e(1).eval().asInstanceOf[Number].intValue())),
     "rolling_min_hash" -> (e => RollingMinHash(e(0),
@@ -227,11 +229,17 @@ object GraftFunctions {
   def shingleArray(tokens: Column, n: Int): Column =
     call_function("shingles", tokens, org.apache.spark.sql.functions.lit(n))
 
+  /** Sorted xxhash64 values of a text's distinct word n-gram shingles
+    * (native expr, one pass over the text; see ShingleHashes). */
+  def shingleHashes(text: Column, n: Int): Column =
+    call_function("shingle_hashes", text, org.apache.spark.sql.functions.lit(n))
+
   /** LSH band hashes of a MinHash signature (native expr). */
   def bandHashes(sig: Column, bands: Int): Column =
     call_function("band_hashes", sig, org.apache.spark.sql.functions.lit(bands))
 
-  /** MinHash signature (array<bigint>) of pre-hashed shingles (native expr). */
+  /** MinHash signature (array<bigint>) of 64-bit shingle hashes (native
+    * expr; reduces each hash mod 2^31−1 itself — see MinHashSignature). */
   def minhashSig(hashes: Column, numPerms: Int): Column =
     call_function("minhash_sig", hashes, org.apache.spark.sql.functions.lit(numPerms))
 

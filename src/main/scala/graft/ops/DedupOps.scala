@@ -12,6 +12,12 @@ import graft.functions.GraftFunctions
   * deployed in large-scale dedup pipelines (e.g. Lee et al. 2022,
   * "Deduplicating Training Data Makes Language Models Better").
   *
+  * Every shingle-based op reads one persisted (doc_id, hv, sk) relation
+  * ([[shingleDocs]]): each document is tokenized and its shingles hashed
+  * once, in one native pass over the text (graft.functions.ShingleHashes),
+  * and every MinHash signature is computed once per document from those
+  * hashes, inside the one banding path ([[bandRows]]).
+  *
   * Scale shape (100 TB):
   *  - exact: one hash-shuffle on md5 — optimal.
   *  - minhash-LSH: signatures are computed MAP-SIDE per row (no explode of
@@ -27,8 +33,6 @@ import graft.functions.GraftFunctions
   */
 object DedupOps {
 
-  private val P = 2147483647L // 2^31-1, keeps perm arithmetic overflow-free under ANSI
-
   /** Word n-gram shingles (distinct) from an ALREADY-MATERIALIZED token
     * array column (native expression — the composable
     * array_distinct∘transform∘sequence form runs interpreted and costs
@@ -36,55 +40,40 @@ object DedupOps {
   def shinglesFromTokens(t: Column, n: Int = 3): Column =
     GraftFunctions.shingleArray(t, n)
 
-  /** (doc_id, s=shingle array) with tokens materialized in a separate
-    * projection, PERSISTed because every consumer (self-join sides,
-    * candidate verification) re-reads it — at 100 TB this is the standard
-    * "checkpoint the shingle relation" step of a dedup pipeline, sized
-    * ~tokens×n bytes, spilling to disk when needed.
+  /** (doc_id, hv, sk) shingle relation, PERSISTed because every consumer
+    * (posting lists, signatures, self-join sides, candidate verification)
+    * re-reads it — at 100 TB this is the standard "checkpoint the shingle
+    * relation" step of a dedup pipeline, spilling to disk when needed.
     *
-    * Columns: s = shingle strings; hs = pmod(xxhash64, P) base hashes for
-    * MinHash (domain [0,P) keeps perm arithmetic overflow-free); hv = SORTED
-    * full-64-bit hashes for candidate verification (8 B/element instead of
+    * Columns: hv = the SORTED 64-bit xxhash64 values of the doc's distinct
+    * word n-grams, from one native pass over the text
+    * ([[GraftFunctions.shingleHashes]], identical to array_sort∘transform
+    * (xxhash64) over [[shinglesFromTokens]]). Every consumer reads hv:
+    * posting lists key on it, MinHash reduces it mod P inside
+    * minhash_sig, and verification intersects it (8 B/element instead of
     * ~20 B strings through the pair joins, and a codegen'd two-pointer
     * intersect instead of per-row hash sets; 64-bit space makes a corpus
-    * collision ~1e-11 — irrelevant to the exact-match oracle).
-    *
-    * keepStrings=false drops the `s` string array from the PERSISTED
-    * relation for callers that never touch shingle strings (every op but
-    * crossJaccardPairs: signatures come from hs, posting lists and
-    * verification from hv/sk). The strings are the single largest column
-    * (~20 B/shingle vs 8 B hashes) — at 5 M docs dropping them roughly
-    * halves the persist/spill footprint of this relation, which is the
-    * single-box scale wall (NOTES_PERF r8). keepHs=false additionally drops
-    * the MinHash base-hash array for callers that never build signatures
-    * (the ngram and ppjoin posting lists and their verify run on hv).
+    * collision ~1e-11 — irrelevant to the exact-match oracle). sk = the
+    * 256-byte bucket-count sketch of hv, computed once per doc here:
+    * verifyPairs' pre-filter ships it per candidate pair instead of the
+    * ~KB hv arrays (see BucketCountSketch). No shingle strings persist.
     *
     * Work is done once, on every core:
     *  - a narrow scan is spread here, for every caller, by the
     *    [[TextOps.spreadScan]] rule (at most half as many scan partitions as
     *    cores), under the persist, so the spread exchange runs once;
-    *  - the empty-shingle filter tests the TEXT, before tokenizing:
-    *    size(shingles(t, n)) > 0 ⇔ size(t) ≥ n (see ShingleArray.compute)
-    *    ⇔ [[TextOps.hasTokens]]. Catalyst pushes any deterministic filter
+    *  - the empty-shingle filter tests the TEXT, before hashing:
+    *    size(shingle_hashes(text, n)) > 0 ⇔ the text holds ≥ n tokens ⇔
+    *    [[TextOps.hasTokens]]. Catalyst pushes any deterministic filter
     *    below the projections and the spread's exchange, copying the
-    *    expressions it references: a filter on the shingle column shingled
-    *    every doc twice, one on the token column tokenized it twice, the
-    *    first time on the scan's few tasks. hasTokens reads each text only
-    *    up to its n-th token. */
-  private def shingleDocs(docs: DataFrame, n: Int = 3,
-                          keepStrings: Boolean = true,
-                          keepHs: Boolean = true): DataFrame = {
+    *    expressions it references: a filter on the shingle column would
+    *    shingle every doc twice, the first time on the scan's few tasks.
+    *    hasTokens reads each text only up to its n-th token. */
+  private def shingleDocs(docs: DataFrame, n: Int = 3): DataFrame = {
     GraftFunctions.register(docs.sparkSession)
     TextOps.spreadScan(docs)
       .filter(TextOps.hasTokens(col("text"), n))
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
-      .select(col("doc_id"), shinglesFromTokens(col("t"), n).as("s"))
-      .select(col("doc_id") +: (if (keepStrings) Seq(col("s")) else Nil) ++:
-        (if (keepHs) Seq(transform(col("s"), x => pmod(xxhash64(x), lit(P))).as("hs")) else Nil) :+
-        array_sort(transform(col("s"), x => xxhash64(x))).as("hv"): _*)
-      // sk = 256-byte bucket-count sketch of hv, computed once per doc at
-      // shingle time: verifyPairs' pre-filter ships it per candidate pair
-      // instead of the ~KB hv arrays (see BucketCountSketch)
+      .select(col("doc_id"), GraftFunctions.shingleHashes(col("text"), n).as("hv"))
       .withColumn("sk", GraftFunctions.bucketCountSketch(col("hv")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
@@ -319,9 +308,8 @@ object DedupOps {
     // Posting lists are keyed on the 64-bit shingle hashes (hv), as in
     // ngramJaccardPairsPrefix: equal shingles hash equal, so the pair counts
     // are the string-keyed ones (barring a ~1e-11 corpus collision), and
-    // every posting row carries an 8-byte key instead of a ~25-byte string;
-    // the persisted relation keeps neither strings nor MinHash hashes.
-    val sh = shingleDocs(docs, keepStrings = false, keepHs = false)
+    // every posting row carries an 8-byte key instead of a ~25-byte string.
+    val sh = shingleDocs(docs)
     // §2.3 project before the exchange: posting rows carry ONLY (doc_id, h)
     // through the quadratic inverted-index join — the per-doc shingle
     // count attaches to the PAIR relation after the groupBy (two joins
@@ -390,13 +378,13 @@ object DedupOps {
     // row of the quadratic prefix join then carries an 8-byte long key
     // instead of a ~25-byte shingle string (the df shuffle, the prefix
     // persist, and the join's sort keys all shrink ~2×), and the persisted
-    // shingle relation drops its string column entirely (keepStrings=false
-    // — the single largest column, ~half the persist footprint, NOTES_PERF
-    // r8). Order note: the global prefix order becomes (df, h64) instead
-    // of (df, shingle-string) — any total order is admissible for the
+    // shingle relation holds no string column (the single largest column,
+    // ~half the persist footprint, NOTES_PERF r8). Order note: the global
+    // prefix order becomes (df, h64) instead of (df, shingle-string) — any
+    // total order is admissible for the
     // PPJoin theorem, but the selected prefixes differ, so the observe
     // counters below are not comparable to pre-r13 artifacts.
-    val sh = shingleDocs(docs, keepStrings = false, keepHs = false)
+    val sh = shingleDocs(docs)
     val ex = sh.select(col("doc_id"), explode(col("hv")).as("h"), size(col("hv")).as("nsh"))
     val dfs = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
     // Partitioned join (shuffle_hash on the df side, already hash-partitioned
@@ -467,30 +455,38 @@ object DedupOps {
     verifyPairs(cand, sh, tau)
   }
 
-  /** MinHash signature (array<bigint>, length numPerms) from pre-hashed
-    * shingles — map-side, no per-perm row explosion. Native expression: the
+  /** MinHash signature (array<bigint>, length numPerms) from 64-bit shingle
+    * hashes (hv) — map-side, no per-perm row explosion. Native expression: the
     * interpreted transform/array_min composition gets re-inlined by Catalyst
     * into downstream lambdas and re-evaluated per reference (see
     * graft.functions.MinHashSignature). */
   def minhashFromHashes(hashCol: Column, numPerms: Int = 128): Column =
     graft.functions.GraftFunctions.minhashSig(hashCol, numPerms)
 
+  /** (doc_id, band, band_sig) rows of a (doc_id, hv) relation: every
+    * banding site's one path from hashes to LSH bands. The signature and
+    * its band hashes stay ONE generator input expression, so each doc's
+    * signature is computed once: over an attribute input (a projected
+    * band-hash column) Catalyst infers the generator's size > 0 filter and
+    * pushes it below the projection with the alias substituted, which
+    * computes the signature twice per doc. */
+  private def bandRows(sh: DataFrame, numPerms: Int, bands: Int): DataFrame =
+    sh.select(col("doc_id"), posexplode(GraftFunctions.bandHashes(
+      minhashFromHashes(col("hv"), numPerms), bands)).as(Seq("band", "band_sig")))
+
   /** (doc_id, band, band_sig) LSH banding as one narrow per-row projection
     * chain (no persist, no shuffle), identical lane-for-lane to the banding
     * inside [[minhashLshPairs]] (same tokenizer, shingle n, perm family,
     * band hasher), so candidates found by one are candidates under the
-    * other. */
+    * other. The empty-shingle filter tests the text, as [[shingleDocs]]'
+    * does, so no doc is shingled twice. */
   def bandedMinhashSigs(docs: DataFrame, numPerms: Int = 128, bands: Int = 32): DataFrame = {
     require(numPerms % bands == 0,
       s"bandedMinhashSigs: bands=$bands must divide numPerms=$numPerms")
     GraftFunctions.register(docs.sparkSession)
-    docs.select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
-      .select(col("doc_id"), shinglesFromTokens(col("t"), 3).as("s"))
-      .filter(size(col("s")) > 0)
-      .select(col("doc_id"), transform(col("s"), x => pmod(xxhash64(x), lit(P))).as("hs"))
-      .select(col("doc_id"), minhashFromHashes(col("hs"), numPerms).as("sig"))
-      .select(col("doc_id"),
-        posexplode(GraftFunctions.bandHashes(col("sig"), bands)).as(Seq("band", "band_sig")))
+    bandRows(docs.filter(TextOps.hasTokens(col("text"), 3))
+      .select(col("doc_id"), GraftFunctions.shingleHashes(col("text"), 3).as("hv")),
+      numPerms, bands)
   }
 
   /** MinHash + LSH near-dup pairs, verified with exact Jaccard ≥ tau.
@@ -520,17 +516,12 @@ object DedupOps {
     require(numPerms % bands == 0,
       s"minhashLshPairs: bands=$bands must divide numPerms=$numPerms")
     GraftFunctions.register(docs.sparkSession)
-    val sh = shingleDocs(docs, keepStrings = false)
-    // signature in its own projection; band sigs computed ONCE as a small
-    // int array, THEN exploded — the explode carries (doc_id, band, sig32)
-    // only, never the shingle arrays or the 128-lane signature.
-    val sig = sh.select(col("doc_id"), minhashFromHashes(col("hs"), numPerms).as("sig"))
-    val bandSigs = sig.select(col("doc_id"),
-      GraftFunctions.bandHashes(col("sig"), bands).as("bsigs"))
-    // tiny relation (docs × bands × 3 ints) reused by both join sides —
-    // persist to block Catalyst from re-deriving the signature per side
-    val banded = bandSigs.select(col("doc_id"),
-        posexplode(col("bsigs")).as(Seq("band", "band_sig")))
+    val sh = shingleDocs(docs)
+    // the explode carries (doc_id, band, band_sig) only, never the shingle
+    // arrays or the 128-lane signature; this tiny relation (docs × bands ×
+    // 3 ints) is reused by both join sides — persist to block Catalyst from
+    // re-deriving the signature per side
+    val banded = bandRows(sh, numPerms, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val xSide =
       if (maxBucket <= 0) banded
@@ -575,25 +566,31 @@ object DedupOps {
     val sa = shingleDocs(corpus)
     val sb = shingleDocs(ref)
     // §2.3 (the ngramJaccardPairs shape): posting rows carry only (doc_id,
-    // sg) through the inverted-index join; per-doc sizes attach to the
-    // pair relation after the groupBy.
+    // h) through the inverted-index join, keyed on the 64-bit shingle
+    // hashes as ngramJaccardPairs' are; per-doc sizes attach to the pair
+    // relation after the groupBy.
     def ex(sh: DataFrame) =
-      sh.select(col("doc_id"), explode(col("s")).as("sg"))
+      sh.select(col("doc_id"), explode(col("hv")).as("h"))
     def sizes(sh: DataFrame, idCol: String, szCol: String) =
-      sh.select(col("doc_id").as(idCol), size(col("s")).as(szCol))
+      sh.select(col("doc_id").as(idCol), size(col("hv")).as(szCol))
     if (maxRefDf > 0L) {
-      val hot = ex(sb).groupBy(col("sg")).agg(count(lit(1)).as("df"))
+      val hot = ex(sb).groupBy(col("h")).agg(count(lit(1)).as("df"))
         .filter(col("df") > maxRefDf).orderBy(col("df").desc).limit(1).collect()
       require(hot.isEmpty, {
         val h = hot.head
-        s"crossJaccardPairs: reference shingle '${h.getString(0)}' appears in " +
+        // the relation holds hashes only: re-shingle the reference for the
+        // text of the hot one, on this failure path alone
+        val text = ref.select(explode(shinglesFromTokens(TextOps.tokens(col("text")))).as("sg"))
+          .filter(xxhash64(col("sg")) === h.getLong(0)).limit(1).collect()
+          .headOption.fold(s"#${h.getLong(0)}")(_.getString(0))
+        s"crossJaccardPairs: reference shingle '$text' appears in " +
         s"${h.getLong(1)} reference docs > maxRefDf=$maxRefDf — the inverted-" +
         s"index join would replicate every corpus occurrence per reference " +
         s"occurrence; dedupe/clean the reference, raise maxRefDf, or use the " +
         s"LSH twin crossMinhashPairs"
       })
     }
-    ex(sa).as("a").join(ex(sb).as("b"), col("a.sg") === col("b.sg"))
+    ex(sa).as("a").join(ex(sb).as("b"), col("a.h") === col("b.h"))
       .groupBy(col("a.doc_id").as("corpus_id"), col("b.doc_id").as("ref_id"))
       .agg(count(lit(1)).as("inter"))
       .join(sizes(sa, "corpus_id", "na"), "corpus_id")
@@ -618,13 +615,10 @@ object DedupOps {
     require(numPerms % bands == 0,
       s"crossMinhashPairs: bands=$bands must divide numPerms=$numPerms")
     GraftFunctions.register(corpus.sparkSession)
-    val sa = shingleDocs(corpus, keepStrings = false)
-    val sb = shingleDocs(ref, keepStrings = false)
-    def banded(sh: DataFrame) = sh
-      .select(col("doc_id"), minhashFromHashes(col("hs"), numPerms).as("sig"))
-      .select(col("doc_id"),
-        posexplode(GraftFunctions.bandHashes(col("sig"), bands)).as(Seq("band", "band_sig")))
-    val cand = banded(sa).as("x").join(banded(sb).as("y"),
+    val sa = shingleDocs(corpus)
+    val sb = shingleDocs(ref)
+    val cand = bandRows(sa, numPerms, bands).as("x")
+      .join(bandRows(sb, numPerms, bands).as("y"),
         col("x.band") === col("y.band") && col("x.band_sig") === col("y.band_sig"))
       .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
       .dropDuplicates("a_id", "b_id")
@@ -647,20 +641,16 @@ object DedupOps {
     require(numPerms % bands == 0,
       s"incrementalDropIds: bands=$bands must divide numPerms=$numPerms")
     GraftFunctions.register(newDocs.sparkSession)
-    val sa = shingleDocs(newDocs, keepStrings = false)
-    val sb = shingleDocs(existing, keepStrings = false)
-    def banded(sh: DataFrame) = sh
-      .select(col("doc_id"), minhashFromHashes(col("hs"), numPerms).as("sig"))
-      .select(col("doc_id"),
-        posexplode(GraftFunctions.bandHashes(col("sig"), bands)).as(Seq("band", "band_sig")))
+    val sa = shingleDocs(newDocs)
+    val sb = shingleDocs(existing)
     // NOT persisted pre-partitioned on the join key: that shape was
     // A/B-measured (sf0.1, OPTIMIZATION_r13.md §4) and REJECTED — the
     // partitioned cache pins 32 fixed partitions that AQE cannot coalesce,
     // so every downstream stage ran 32 tiny tasks (27 → 211 tasks, wall
     // 1.4 → 2.2 s) to save 2 jobs.
-    val bandedA = banded(sa)
+    val bandedA = bandRows(sa, numPerms, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bandedB = banded(sb)
+    val bandedB = bandRows(sb, numPerms, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Both candidate stages feed ONE tagged verify (b_org 0 = batch-self,
     // 1 = vs-existing): one dedup exchange over the union instead of one
@@ -730,11 +720,8 @@ object DedupOps {
     require(numPerms % bands == 0,
       s"incrementalDropIdsFromStore: bands=$bands must divide numPerms=$numPerms")
     GraftFunctions.register(newDocs.sparkSession)
-    val sa = shingleDocs(newDocs, keepStrings = false)
-    val bandedA = sa
-      .select(col("doc_id"), minhashFromHashes(col("hs"), numPerms).as("sig"))
-      .select(col("doc_id"),
-        posexplode(GraftFunctions.bandHashes(col("sig"), bands)).as(Seq("band", "band_sig")))
+    val sa = shingleDocs(newDocs)
+    val bandedA = bandRows(sa, numPerms, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Same tagged single-verify shape as [[incrementalDropIds]] (b_org 0 =
     // batch-self, 1 = vs-store): one candidate-dedup exchange, half the
@@ -752,8 +739,7 @@ object DedupOps {
         lit(1).as("b_org"))
       .dropDuplicates("a_id", "b_id")
     val candIds = crossCand.select(col("b_id").as("doc_id")).distinct()
-    val sbCand = shingleDocs(existing.join(candIds, Seq("doc_id"), "left_semi"),
-      keepStrings = false)
+    val sbCand = shingleDocs(existing.join(candIds, Seq("doc_id"), "left_semi"))
     val cand = selfCand.dropDuplicates("a_id", "b_id")
       .unionByName(crossCand)
     val out = verifyPairsTagged(cand, sa, sa, sbCand, tau)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
-import graft.functions.ShingleArray
+import graft.functions.{MinHashSignature, ShingleHashes}
 import graft.tools.ExplainAudit
 
 /** Plan contracts — the claims NOTES_PERF makes about plan quality, pinned
@@ -133,11 +133,32 @@ class PlanShapeSpec extends SparkSpecBase {
       // a file scan's data filters are pushdown candidates, not evaluated per row
       def shingling(r: InMemoryRelation) = operators(r.cachedPlan)
         .filterNot(_.isInstanceOf[FileSourceScanExec])
-        .count(_.expressions.exists(_.exists(_.isInstanceOf[ShingleArray])))
+        .count(_.expressions.exists(_.exists(_.isInstanceOf[ShingleHashes])))
       val counts = cachedRelations(plan).map(shingling).filter(_ > 0)
       assert(counts.nonEmpty, s"$name: no cached relation shingles:\n$plan")
       assert(counts.forall(_ == 1),
         s"$name: shingles() evaluated in ${counts.mkString(", ")} operators:\n$plan")
+      spark.catalog.clearCache()
+    }
+  }
+
+  test("near-dup signatures: the shingle persist holds no lambda, and " +
+    "dedup_minhash_lsh evaluates minhash_sig in exactly one operator") {
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    Seq("dedup_ngram_jaccard" -> 0, "dedup_minhash_lsh" -> 1).foreach { case (name, sigs) =>
+      val plan = ExplainAudit.finalPlan(SparkEntry.queries(name)(spark, sfDir))
+      // one plan per cached relation, however many scans read it
+      val cached = cachedRelations(plan).groupBy(_.cacheBuilder).values.map(_.head.cachedPlan).toSeq
+      def evaluating(p: SparkPlan, cls: Class[_]) = operators(p)
+        .filterNot(_.isInstanceOf[FileSourceScanExec])
+        .filter(_.expressions.exists(_.exists(cls.isInstance)))
+      val shingling = cached.filter(evaluating(_, classOf[ShingleHashes]).nonEmpty)
+      assert(shingling.nonEmpty, s"$name: no cached relation shingles:\n$plan")
+      assert(shingling.forall(evaluating(_, classOf[LambdaFunction]).isEmpty),
+        s"$name: a lambda runs under the shingle persist:\n$plan")
+      val signing = (plan +: cached).flatMap(evaluating(_, classOf[MinHashSignature]))
+      assert(signing.size == sigs,
+        s"$name: minhash_sig evaluated in ${signing.size} operators, want $sigs:\n$plan")
       spark.catalog.clearCache()
     }
   }

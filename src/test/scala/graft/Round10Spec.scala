@@ -91,8 +91,9 @@ class Round10Spec extends SparkSpecBase {
       DedupOps.crossJaccardPairs(corpus, hotRef, tau = 0.1, maxRefDf = 3).collect()
     }
     assert(e.getMessage.contains("maxRefDf") &&
-      e.getMessage.contains("crossMinhashPairs"),
-      s"guard message must name the knob and the LSH twin: ${e.getMessage}")
+      e.getMessage.contains("crossMinhashPairs") &&
+      e.getMessage.contains("'common words here'"),
+      s"guard message must name the hot shingle, the knob and the LSH twin: ${e.getMessage}")
     // guard satisfied -> output identical to the unguarded run
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
