@@ -24,7 +24,8 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
   *
   * "profile" carries each query's last-sample counters: `build_s` (the
   * builder call, eager work included), Spark jobs (each a blocking driver
-  * round trip), stages, tasks, executor CPU seconds (steal-immune, unlike
+  * round trip) and `build_jobs`, those of them started before the builder
+  * returned, stages, tasks, executor CPU seconds (steal-immune, unlike
   * wall seconds) and shuffle read/write MB.
   *
   * "plans" carries a canonicalized fingerprint of each query's physical
@@ -37,26 +38,36 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 object Bench {
 
   /** Spark counters over one sample. */
-  final case class Profile(jobs: Int = 0, stages: Int = 0, tasks: Int = 0, cpuNs: Long = 0L,
-                           shuffleReadB: Long = 0L, shuffleWriteB: Long = 0L)
+  final case class Profile(jobs: Int = 0, buildJobs: Int = 0, stages: Int = 0, tasks: Int = 0,
+                           cpuNs: Long = 0L, shuffleReadB: Long = 0L, shuffleWriteB: Long = 0L)
 
   /** Counts jobs started, and the tasks, executor CPU and shuffle bytes of
     * every stage completed, since the last [[reset]]. Listener events arrive
     * asynchronously on one bus thread, so both calls first wait for the bus
-    * to drain — keep them outside any timed region. */
+    * to drain — keep them outside any timed region. A job counts towards
+    * `buildJobs` when its start time (epoch ms, stamped by the scheduler)
+    * is before the `buildEndMs` given to [[snapshot]]. */
   final class JobCounters(sc: SparkContext) extends SparkListener {
     @volatile private var p = Profile()
+    @volatile private var jobStartMs = Vector.empty[Long]
 
-    override def onJobStart(j: SparkListenerJobStart): Unit = p = p.copy(jobs = p.jobs + 1)
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      p = p.copy(jobs = p.jobs + 1)
+      jobStartMs :+= j.time
+    }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
       val m = s.stageInfo.taskMetrics
-      p = Profile(p.jobs, p.stages + 1, p.tasks + s.stageInfo.numTasks,
-        p.cpuNs + m.executorCpuTime, p.shuffleReadB + m.shuffleReadMetrics.totalBytesRead,
-        p.shuffleWriteB + m.shuffleWriteMetrics.bytesWritten)
+      p = p.copy(stages = p.stages + 1, tasks = p.tasks + s.stageInfo.numTasks,
+        cpuNs = p.cpuNs + m.executorCpuTime,
+        shuffleReadB = p.shuffleReadB + m.shuffleReadMetrics.totalBytesRead,
+        shuffleWriteB = p.shuffleWriteB + m.shuffleWriteMetrics.bytesWritten)
     }
 
-    def reset(): Unit = { GraftBridge.drainListeners(sc); p = Profile() }
-    def snapshot(): Profile = { GraftBridge.drainListeners(sc); p }
+    def reset(): Unit = { GraftBridge.drainListeners(sc); p = Profile(); jobStartMs = Vector.empty }
+    def snapshot(buildEndMs: Long): Profile = {
+      GraftBridge.drainListeners(sc)
+      p.copy(buildJobs = jobStartMs.count(_ < buildEndMs))
+    }
   }
 
   /** One query's measurement: every timed sample (-1 for a failed one),
@@ -74,21 +85,24 @@ object Bench {
               build: (SparkSession, String) => DataFrame): Measurement = {
     var lastDf: DataFrame = null
     var buildS = -1.0
+    var buildEndMs = Long.MaxValue
     val samples = (1 to runs).map { _ =>
       counters.reset()
       lastDf = null
       buildS = -1.0
+      buildEndMs = Long.MaxValue
       val t0 = System.nanoTime()
       try {
         lastDf = build(spark, sfDir)
         buildS = (System.nanoTime() - t0) / 1e9
+        buildEndMs = System.currentTimeMillis()
         lastDf.write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       } catch { case NonFatal(e) =>
         System.err.println(s"[bench] $name failed: $e"); -1.0
       }
     }
-    Measurement(samples, buildS, counters.snapshot(), planHash(lastDf))
+    Measurement(samples, buildS, counters.snapshot(buildEndMs), planHash(lastDf))
   }
 
   /** Canonicalized static-plan fingerprint: changes when the planned shape
@@ -129,7 +143,7 @@ object Bench {
   /** MB are 10^6 bytes. */
   private def profileJson(m: Measurement): String = {
     val p = m.profile
-    s"""{"build_s":${fmt(m.buildS)},"jobs":${p.jobs},"stages":${p.stages},""" +
+    s"""{"build_s":${fmt(m.buildS)},"build_jobs":${p.buildJobs},"jobs":${p.jobs},"stages":${p.stages},""" +
     s""""tasks":${p.tasks},"cpu_s":${fmt(p.cpuNs / 1e9)},""" +
     s""""shuffle_read_mb":${fmt(p.shuffleReadB / 1e6)},"shuffle_write_mb":${fmt(p.shuffleWriteB / 1e6)}}"""
   }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.IO.readParquet
 
 /** Typed readers for the driver-generated star schema (see TESTDATA.md).
   *
@@ -15,7 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    readParquet(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame    = read(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = read(spark, dir, "nation")
@@ -28,14 +29,14 @@ object Tables {
     * changed across testdata generations (TIMESTAMP(NANOS) → timestamp[us]), so
     * never assume a unit the footer doesn't declare:
     *
-    *   1. Plain `spark.read.parquet` first. Footer inference yields a native
+    *   1. Plain `IO.readParquet` first. The footer's schema yields a native
     *      TimestampType for TIMESTAMP(MICROS)/MILLIS — done, no conversion.
     *   2. If inference surfaces `ts` as a raw LongType (a session with
     *      `spark.sql.legacy.parquet.nanosAsLong=true` reading NANOS), the raw
     *      int64 is nanoseconds — convert via `timestamp_micros(ts div 1000)`.
-    *   3. If inference *throws* (default session reading TIMESTAMP(NANOS),
-    *      which Spark's reader rejects), force a LongType schema to grab the
-    *      raw nanos and convert the same way.
+    *   3. If the footer's conversion *throws* (default session reading
+    *      TIMESTAMP(NANOS), which Spark's reader rejects), force a LongType
+    *      schema to grab the raw nanos and convert the same way.
     *
     * Reference analog: the InputFormat layer reads the same logical records
     * across on-disk encodings (TextInputFormat.java:1,
@@ -46,7 +47,7 @@ object Tables {
     val path = s"$dir/events.parquet"
     def nanosToTs(df: DataFrame): DataFrame =
       df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    scala.util.Try(spark.read.parquet(path)) match {
+    scala.util.Try(readParquet(spark, path)) match {
       case scala.util.Success(df) =>
         df.schema("ts").dataType match {
           case TimestampType => df

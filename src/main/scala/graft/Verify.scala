@@ -7,6 +7,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.ops.CorpusGen
 import graft.queries.{Planted, QuerySpec}
+import graft.sources.IO.readParquet
 
 /** Correctness dump for the DuckDB oracle compare (scripts/check.py):
   * `graft.Verify <sfDir> <outDir> [query ...]` writes each named query's
@@ -56,7 +57,7 @@ object Verify {
     * skip + row count instead of a hash. */
   private def writeDigest(spark: SparkSession,
                           outDir: String, name: String): Unit = {
-    val df = spark.read.parquet(s"$outDir/$name")
+    val df = readParquet(spark, s"$outDir/$name")
     val n = df.count()
     if (n > 200000) {
       Files.writeString(Paths.get(s"$outDir/$name.digest.json"),
@@ -90,8 +91,8 @@ object Verify {
                    outDir: String): Option[Planted.Verdict] =
     spec.planted.filter(p => exists(spark, CorpusGen.truthPath(sfDir, p.table))).map { p =>
       try p.check(
-        Planted.Corpus(spark, sfDir, spark.read.parquet(CorpusGen.truthPath(sfDir, p.table))),
-        spark.read.parquet(s"$outDir/${spec.name}"))
+        Planted.Corpus(spark, sfDir, readParquet(spark, CorpusGen.truthPath(sfDir, p.table))),
+        readParquet(spark, s"$outDir/${spec.name}"))
       catch { case NonFatal(e) => Planted.Verdict(ok = false, s"rule failed to run: $e") }
     }
 

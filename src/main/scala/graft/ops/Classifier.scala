@@ -4,6 +4,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.sources.IO.readParquet
 
 /** fastText-style linear quality/domain classifier over hashed bag-of-words
   * features (Joulin et al. 2016, "Bag of Tricks for Efficient Text
@@ -249,7 +250,7 @@ object Classifier {
         feats.select(col("doc_id"), col("idx"), col("v"))
           .coalesce(1).write.mode("overwrite").parquet(fDir)
         scoreJoined(docs.select(col("doc_id"), label.as("y")),
-          spark.read.parquet(fDir), d, w)
+          readParquet(spark, fDir), d, w)
       case None =>
         scoreMapSide(docs, label, w)
     }

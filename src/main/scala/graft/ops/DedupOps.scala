@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
+import graft.sources.IO.readParquet
 
 /** Deduplication family for LLM training-data pipelines.
   *
@@ -702,7 +703,7 @@ object DedupOps {
   /** The store's banded relation, as [[minhashWriteStore]] wrote it. */
   def readMinhashStore(spark: org.apache.spark.sql.SparkSession,
                        dir: String): DataFrame =
-    spark.read.parquet(s"$dir/bands")
+    readParquet(spark, s"$dir/bands")
 
   /** [[incrementalDropIds]] against a PERSISTED signature store instead of
     * re-banding the existing corpus: the new batch is shingled and banded

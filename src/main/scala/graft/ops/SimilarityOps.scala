@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 import graft.functions.GraftFunctions.{cosineSim, nearestCentroids}
+import graft.sources.IO.readParquet
 
 /** Similarity search over an embedding column (array<float>).
   *
@@ -826,7 +827,7 @@ object SimilarityOps {
   def ivfIndexProbes(spark: SparkSession, dir: String, queries: DataFrame,
                      nprobe: Int = 3): DataFrame = {
     GraftFunctions.register(spark)
-    val cents = spark.read.parquet(s"$dir/centroids").orderBy("cluster")
+    val cents = readParquet(spark, s"$dir/centroids").orderBy("cluster")
       .collect().map(r => r.getSeq[Float](r.fieldIndex("centroid")).toArray)
     val probeK = math.min(nprobe, cents.length)
     queries.select(col("vec_id").as("q_id"), col("embedding").as("qe"),
@@ -837,7 +838,7 @@ object SimilarityOps {
     * written whole by [[ivfWriteIndex]], so a bucket filter on it is a
     * PartitionFilters entry. */
   private[graft] def readIndexPostings(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/postings")
+    readParquet(spark, s"$dir/postings")
 
   /** Query a persisted IVF index: probe buckets → STATIC partition pruning
     * of the postings scan (the probe-bucket set is bounded by |queries| ×

@@ -2,6 +2,7 @@ package graft
 package queries
 
 import graft.ops._
+import graft.sources.IO.readParquet
 
 /** The SQL analytics surface (SURVEY.md §2.2): TPC-H-shaped queries, joins,
   * grouping sets, windows and event analytics. */
@@ -406,7 +407,7 @@ object AnalyticsQueries {
           val li = Tables.lineitem(s, d)
           AggOps.approxSketchRegisters(li).coalesce(1)
             .write.mode("overwrite").parquet(regDir)
-          AggOps.approxSketchFromRegisters(li, s.read.parquet(regDir))
+          AggOps.approxSketchFromRegisters(li, readParquet(s, regDir))
         })
     },
     QuerySpec("sessionize", (s, d) => AggOps.sessionize(Tables.events(s, d)),
@@ -565,7 +566,7 @@ object AnalyticsQueries {
         verify = Some { (s, d) =>
           AggOps.hllDailyRegisters(Tables.events(s, d)).coalesce(1)
             .write.mode("overwrite").parquet(regDir)
-          AggOps.hllReaggregateFromRegisters(s.read.parquet(regDir))
+          AggOps.hllReaggregateFromRegisters(readParquet(s, regDir))
         })
     },
     QuerySpec("events_hourly", (s, d) => AggOps.eventsHourly(Tables.events(s, d)),

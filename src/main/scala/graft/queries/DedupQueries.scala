@@ -4,6 +4,7 @@ package queries
 import org.apache.spark.sql.functions.col
 import graft.ops._
 import graft.ops.TextOps.spreadScan
+import graft.sources.IO.readParquet
 
 /** LLM-data-pipeline dedup and decontamination (SURVEY.md §2.3): exact,
   * shingle, MinHash, SimHash and edit-distance pairs, cross-corpus and
@@ -170,7 +171,7 @@ object DedupQueries {
         verify = Some { (s, d) =>
           DedupOps.simhashFingerprints(Tables.documents(s, d)).coalesce(1)
             .write.mode("overwrite").parquet(fpDir)
-          DedupOps.simhashPairsFromFingerprints(s.read.parquet(fpDir))
+          DedupOps.simhashPairsFromFingerprints(readParquet(s, fpDir))
         },
         planted = Some(Planted.hammingPairs(DedupOps.simhashFingerprints, 6)))
     },
@@ -190,7 +191,7 @@ object DedupQueries {
         verify = Some { (s, d) =>
           DedupOps.simhashIdfFingerprints(Tables.documents(s, d)).coalesce(1)
             .write.mode("overwrite").parquet(fpDir)
-          DedupOps.simhashPairsFromFingerprints(s.read.parquet(fpDir))
+          DedupOps.simhashPairsFromFingerprints(readParquet(s, fpDir))
         },
         planted = Some(Planted.hammingPairs(DedupOps.simhashIdfFingerprints(_), 6)))
     },

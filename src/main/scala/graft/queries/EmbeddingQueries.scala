@@ -3,6 +3,7 @@ package queries
 
 import org.apache.spark.sql.functions.col
 import graft.ops._
+import graft.sources.IO.readParquet
 
 /** Embedding operators (SURVEY.md §2.3): exact and approximate nearest
   * neighbours, k-means, quantization and semantic dedup. */
@@ -52,7 +53,7 @@ object EmbeddingQueries {
           buckets.coalesce(1).write.mode("overwrite").parquet(bucketDir)
           probes.coalesce(1).write.mode("overwrite").parquet(probeDir)
           SimilarityOps.topKFromBucketDumps(s, emb,
-            s.read.parquet(bucketDir), s.read.parquet(probeDir), k = 5)
+            readParquet(s, bucketDir), readParquet(s, probeDir), k = 5)
         })
     },
     {
@@ -76,7 +77,7 @@ object EmbeddingQueries {
           buckets.coalesce(1).write.mode("overwrite").parquet(bucketDir)
           probes.coalesce(1).write.mode("overwrite").parquet(probeDir)
           SimilarityOps.topKFromBucketDumps(s, emb,
-            s.read.parquet(bucketDir), s.read.parquet(probeDir), k = 5)
+            readParquet(s, bucketDir), readParquet(s, probeDir), k = 5)
         })
     },
     // The index build (centroids + bucket-partitioned postings) is part of
@@ -145,7 +146,7 @@ object EmbeddingQueries {
           SimilarityOps.kmeansCentroidRelation(s, cs)
             .coalesce(1).write.mode("overwrite").parquet(centroidDir)
           SimilarityOps.assignFromCentroidRelation(s, emb,
-            s.read.parquet(centroidDir))
+            readParquet(s, centroidDir))
         },
         planted = Some(Planted.kmeansTwins(16)))
     },
@@ -203,7 +204,7 @@ object EmbeddingQueries {
           SimilarityOps.kmeansCentroidRelation(s, cs)
             .coalesce(1).write.mode("overwrite").parquet(centroidDir)
           CurationPipeline.clusterBalancedSampleFrom(s, emb,
-            s.read.parquet(centroidDir))
+            readParquet(s, centroidDir))
         },
         planted = Some(Planted.balancedRanks(20)))
     },
@@ -260,7 +261,7 @@ object EmbeddingQueries {
               bits = SimilarityOps.selfJoinBitsMeasured(s, emb,
                 SimilarityOps.DefaultSemAnnPairBudget)._1)
             .coalesce(1).write.mode("overwrite").parquet(bucketDir)
-          SimilarityOps.semanticDedupFromBuckets(s, emb, s.read.parquet(bucketDir))
+          SimilarityOps.semanticDedupFromBuckets(s, emb, readParquet(s, bucketDir))
         },
         // exact twins collide in every table; near ones ride the collision
         // curve, so their recall has a floor, not a bar of 1.0

@@ -3,6 +3,7 @@ package queries
 
 import org.apache.spark.sql.functions.col
 import graft.ops._
+import graft.sources.IO.readParquet
 
 /** The Hadoop MapReduce examples and tools (SURVEY.md §2.1): word counts,
   * sorts, generators, distributed compute, streaming pipes, log analysis and
@@ -175,15 +176,22 @@ object MapReduceQueries {
       val out = QuerySpec.dumpDir("graft_relayout_dump")
       graft.sources.IO.relayout(s, s"$d/lineitem.parquet", out, Some("l_returnflag"))
       val cols = Tables.lineitem(s, d).columns
-      s.read.parquet(out).select(cols.head, cols.tail: _*)
+      readParquet(s, out).select(cols.head, cols.tail: _*)
     }, () => """SELECT * FROM lineitem"""),
     QuerySpec("compaction", (s, d) => {
       val frag = QuerySpec.dumpDir("graft_frag_dump")
       val out = QuerySpec.dumpDir("graft_compacted_dump")
-      val ev = s.read.parquet(s"$d/events.parquet")
-      ev.repartition(64).write.mode("overwrite").parquet(frag) // many-small-files input
+      val ev = readParquet(s, s"$d/events.parquet")
+      // many-small-files input: 64 part files of ⌈rows/64⌉ rows, each task
+      // writing 64/tasks of them (maxRecordsPerFile rolls the file), so the
+      // fixture costs one task per core instead of 64 one-file tasks. The
+      // task count divides 64, so an even round-robin split of at least
+      // 4,096 rows gives 64 files; fewer rows can give fewer.
+      val tasks = Integer.highestOneBit(math.min(s.sparkContext.defaultParallelism, 64))
+      ev.repartition(tasks).write.option("maxRecordsPerFile", (ev.count() + 63) / 64)
+        .mode("overwrite").parquet(frag)
       graft.sources.IO.compact(s, frag, out)
-      s.read.parquet(out).select(ev.columns.head, ev.columns.tail: _*)
+      readParquet(s, out).select(ev.columns.head, ev.columns.tail: _*)
     }, () => """SELECT * FROM events"""),
   )
 }

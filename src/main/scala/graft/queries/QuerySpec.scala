@@ -45,5 +45,5 @@ object QuerySpec {
     * process. */
   private val DumpBase = sys.env.getOrElse("SPARK_GRAFT_DUMP_BASE", "/tmp")
 
-  private[queries] def dumpDir(leaf: String): String = s"$DumpBase/$leaf"
+  private[graft] def dumpDir(leaf: String): String = s"$DumpBase/$leaf"
 }

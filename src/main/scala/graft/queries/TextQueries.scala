@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.ops._
 import graft.ops.TextOps.spreadScan
+import graft.sources.IO.readParquet
 
 /** LLM-data-pipeline text operators (SURVEY.md §2.3): per-document analysis,
   * sampling, tokenizers, sketches, classifiers and the curation pipelines. */
@@ -20,7 +21,7 @@ object TextQueries {
       .select(col("word"), size(encode(col("word"))).cast("long").as("n_sub"))
       .coalesce(1).write.mode("overwrite").parquet(wordDir)
     val agg = docs.select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("word"))
-      .join(s.read.parquet(wordDir), "word")
+      .join(readParquet(s, wordDir), "word")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"), sum(col("n_sub")).as(countCol))
     docs.select(col("doc_id")).join(agg, Seq("doc_id"), "left")
@@ -191,7 +192,7 @@ object TextQueries {
           docs.select(col("doc_id"),
               explode(graft.functions.GraftFunctions.rollingWindowHashes(col("text"), 16)).as("h"))
             .coalesce(1).write.mode("overwrite").parquet(hashDir)
-          s.read.parquet(hashDir)
+          readParquet(s, hashDir)
             .groupBy(col("doc_id")).agg(min(col("h")).as("rh"))
             .join(docs.select(col("doc_id"), length(col("text")).cast("long").as("n_chars")), "doc_id")
             .select(col("doc_id"), col("rh"), col("n_chars"))
@@ -482,7 +483,7 @@ object TextQueries {
               ops.TextOps.topKWords(docs).select(col("word")), 4, 2048)
             .coalesce(1).write.mode("overwrite").parquet(candDir)
           TextAnalysis.cmsHeavyHitters(docs,
-            matrixIn = Some(s.read.parquet(matrixDir)))
+            matrixIn = Some(readParquet(s, matrixDir)))
         })
     },
   )

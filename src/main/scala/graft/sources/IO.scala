@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions._
 
 /** Sources & sinks — the HDFS-surface analog.
@@ -13,6 +14,20 @@ import org.apache.spark.sql.functions._
   * pruning, bounded file counts, and target file sizes.
   */
 object IO {
+
+  /** The one parquet reader. `spark.read.parquet` infers the schema
+    * with a one-task Spark job that reads a single footer; this reads that
+    * same footer on the driver (the file inference would pick, converted
+    * under the session conf by Spark's own `readSchema`) and hands the
+    * schema to the scan, so building a DataFrame starts no job. Partition
+    * columns of `k=v` dirs are still inferred by Spark. A missing path or
+    * a dir with no data file goes to Spark's reader, which raises its own
+    * error. Nothing is cached: each call sees the files as they are. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    GraftParquetBridge.footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
 
   /** Distributed metadata batch change — the hadoop-extras DistCh analog
     * (hadoop-tools/hadoop-extras/src/main/java/org/apache/hadoop/tools/
@@ -197,7 +212,7 @@ object IO {
     * task copies a slice, no driver bottleneck. */
   def relayout(spark: SparkSession, inPath: String, outPath: String,
                partitionCol: Option[String] = None, filesPerPartition: Int = 8): Unit = {
-    val df = spark.read.parquet(inPath)
+    val df = readParquet(spark, inPath)
     val re = partitionCol match {
       case Some(c) =>
         // Salted write spread: hash-partitioning on the partition column
@@ -475,7 +490,7 @@ object IO {
     require(baseQ != outQ,
       s"upsertByRewrite: outPath == basePath ($baseQ) — Overwrite would delete the base " +
         "dataset while it is being read; write to a staging path and swap")
-    val base = spark.read.parquet(basePath)
+    val base = readParquet(spark, basePath)
     base.join(updates.select(col(key)), Seq(key), "left_anti")
       .unionByName(updates)
       .write.mode(SaveMode.Overwrite).parquet(outPath)
@@ -505,7 +520,7 @@ object IO {
     require(partitionCols.nonEmpty, "diffPartitions: no partition columns")
     val pcs = partitionCols.indices.map(i => s"_p$i")
     def fingerprint(side: String, path: String, cols: Seq[String]) = {
-      val df = spark.read.parquet(path)
+      val df = readParquet(spark, path)
       // hash over the SHARED column set in a fixed (sorted) order, so a
       // benign column-order difference between the two sides doesn't read
       // as a full rewrite
@@ -516,9 +531,9 @@ object IO {
     }
     def report(keyOf: String => Column, action: Column) =
       partitionCols.zip(pcs).map { case (c, p) => keyOf(p).as(c) } :+ action.as("action")
-    val srcCols = spark.read.parquet(sourcePath).columns.toSeq
+    val srcCols = readParquet(spark, sourcePath).columns.toSeq
     val tgtCols =
-      try spark.read.parquet(targetPath).columns.toSeq
+      try readParquet(spark, targetPath).columns.toSeq
       catch { case _: org.apache.spark.sql.AnalysisException => Seq.empty[String] }
     if (tgtCols.isEmpty) {
       // first sync: everything is a copy
@@ -566,7 +581,7 @@ object IO {
       .map(r => (0 until k).map(r.getString))
     val changed = of("copy", "rewrite")
     if (changed.nonEmpty) {
-      val src = spark.read.parquet(sourcePath)
+      val src = readParquet(spark, sourcePath)
       // exact per-column tuple match (no separator-collision risk a joined
       // string key would have); changed-partition count is bounded, so the
       // OR-of-ANDs predicate stays small
@@ -669,7 +684,7 @@ object IO {
     * scan), so it adapts at any SF. */
   def compact(spark: SparkSession, inPath: String, outPath: String,
               targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    val df = spark.read.parquet(inPath)
+    val df = readParquet(spark, inPath)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val nFiles = math.max(1, (bytes / BigInt(targetFileBytes)).toInt)
     df.repartition(nFiles).write.mode(SaveMode.Overwrite).parquet(outPath)

@@ -1,7 +1,8 @@
 package graft
 
 /** Bench's per-query measurement: one builder call per timed sample, the
-  * last sample's counters, and a plan fingerprint taken from the DataFrame
+  * last sample's counters (jobs started before the builder returned split
+  * out as `buildJobs`), and a plan fingerprint taken from the DataFrame
   * that sample built. */
 class BenchSpec extends SparkSpecBase {
 
@@ -20,6 +21,10 @@ class BenchSpec extends SparkSpecBase {
         assert(m.profile.jobs >= 1, s"$name: ${m.profile}")
         assert(m.profile.tasks >= m.profile.jobs, s"$name: ${m.profile}")
         assert(m.buildS >= 0 && m.buildS <= m.samples.last, s"$name: build ${m.buildS}")
+        // q6's builder only reads; compaction's writes its fixture and output
+        if (name == "compaction") assert(m.profile.buildJobs > 0, s"$name: ${m.profile}")
+        else assert(m.profile.buildJobs == 0, s"$name: ${m.profile}")
+        assert(m.profile.buildJobs < m.profile.jobs, s"$name: ${m.profile}")
         name -> m.planHash
       }.toMap
       val q6 = SparkEntry.queries("q6_forecast_revenue")(spark, sfDir)
