@@ -77,16 +77,20 @@ object Bench {
                                profile: Profile, planHash: String)
 
   /** Times `runs` samples of `build` followed by a noop write. Only the
-    * build and the write are timed; the counter resets, the drain and the
-    * plan fingerprint run outside the timed region, and the fingerprint
-    * comes from the last sample's own DataFrame, so the builder runs
-    * exactly `runs` times. */
+    * build and the write are timed; the counter resets, the drain, the
+    * plan fingerprint and the cache release run outside the timed region.
+    * The fingerprint comes from the last sample's own DataFrame, so the
+    * builder runs exactly `runs` times. Every sample ends by releasing
+    * every cached relation and persisted RDD, as perfbench does, so no
+    * sample reuses a persist of an earlier sample or query, and the
+    * fingerprint sees only what its own builder cached. */
   def measure(spark: SparkSession, sfDir: String, name: String, runs: Int, counters: JobCounters,
               build: (SparkSession, String) => DataFrame): Measurement = {
     var lastDf: DataFrame = null
     var buildS = -1.0
     var buildEndMs = Long.MaxValue
-    val samples = (1 to runs).map { _ =>
+    var hash = "err"
+    val samples = (1 to runs).map { i =>
       counters.reset()
       lastDf = null
       buildS = -1.0
@@ -100,9 +104,18 @@ object Bench {
         (System.nanoTime() - t0) / 1e9
       } catch { case NonFatal(e) =>
         System.err.println(s"[bench] $name failed: $e"); -1.0
+      } finally {
+        if (i == runs) hash = planHash(lastDf)
+        releaseCache(spark)
       }
     }
-    Measurement(samples, buildS, counters.snapshot(buildEndMs), planHash(lastDf))
+    Measurement(samples, buildS, counters.snapshot(buildEndMs), hash)
+  }
+
+  /** Drops every cached relation and persisted RDD, blocking until gone. */
+  private def releaseCache(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
 
   /** Canonicalized static-plan fingerprint: changes when the planned shape

@@ -36,6 +36,9 @@ object GraftSessions {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // local writes set modes and owners in-process, not by a chmod
+      // process per file (graft.sources.GraftLocalFileSystem)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.GraftLocalFileSystem].getName)
     extra.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")

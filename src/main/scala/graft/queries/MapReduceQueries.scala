@@ -4,6 +4,7 @@ package queries
 import org.apache.spark.sql.functions.col
 import graft.ops._
 import graft.sources.IO.readParquet
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 
 /** The Hadoop MapReduce examples and tools (SURVEY.md §2.1): word counts,
   * sorts, generators, distributed compute, streaming pipes, log analysis and
@@ -174,21 +175,24 @@ object MapReduceQueries {
     // the IO specs; the gate proves the data survived.
     QuerySpec("distcp_relayout", (s, d) => {
       val out = QuerySpec.dumpDir("graft_relayout_dump")
-      graft.sources.IO.relayout(s, s"$d/lineitem.parquet", out, Some("l_returnflag"))
-      val cols = Tables.lineitem(s, d).columns
-      readParquet(s, out).select(cols.head, cols.tail: _*)
+      val li = Tables.lineitem(s, d)
+      graft.sources.IO.relayout(li, out, Some("l_returnflag"))
+      readParquet(s, out).select(li.columns.head, li.columns.tail: _*)
     }, () => """SELECT * FROM lineitem"""),
     QuerySpec("compaction", (s, d) => {
       val frag = QuerySpec.dumpDir("graft_frag_dump")
       val out = QuerySpec.dumpDir("graft_compacted_dump")
-      val ev = readParquet(s, s"$d/events.parquet")
+      val events = s"$d/events.parquet"
+      val ev = readParquet(s, events)
       // many-small-files input: 64 part files of ⌈rows/64⌉ rows, each task
       // writing 64/tasks of them (maxRecordsPerFile rolls the file), so the
       // fixture costs one task per core instead of 64 one-file tasks. The
       // task count divides 64, so an even round-robin split of at least
-      // 4,096 rows gives 64 files; fewer rows can give fewer.
+      // 4,096 rows gives 64 files; fewer rows can give fewer. The row count
+      // comes from the footers, read on the driver: no count job.
+      val rows = GraftParquetBridge.footerRowCount(s, events)
       val tasks = Integer.highestOneBit(math.min(s.sparkContext.defaultParallelism, 64))
-      ev.repartition(tasks).write.option("maxRecordsPerFile", (ev.count() + 63) / 64)
+      ev.repartition(tasks).write.option("maxRecordsPerFile", (rows + 63) / 64)
         .mode("overwrite").parquet(frag)
       graft.sources.IO.compact(s, frag, out)
       readParquet(s, out).select(ev.columns.head, ev.columns.tail: _*)

@@ -206,13 +206,12 @@ object IO {
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
   }
 
-  /** distcp analog: copy a dataset into a new layout — optionally partitioned
+  /** distcp analog: copy `df` into a new layout — optionally partitioned
     * by a column (→ directory pruning) with a bounded file count per
     * partition. A distributed copy is "read → (re)partition → write": every
     * task copies a slice, no driver bottleneck. */
-  def relayout(spark: SparkSession, inPath: String, outPath: String,
+  def relayout(df: DataFrame, outPath: String,
                partitionCol: Option[String] = None, filesPerPartition: Int = 8): Unit = {
-    val df = readParquet(spark, inPath)
     val re = partitionCol match {
       case Some(c) =>
         // Salted write spread: hash-partitioning on the partition column

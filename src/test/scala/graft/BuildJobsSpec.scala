@@ -4,7 +4,8 @@ import graft.queries.QuerySpec
 
 /** Builders that only read start no Spark job before they return (the
   * parquet schema comes from the footer on the driver), and `compaction`
-  * writes its many-small-files fixture with at most one task per core. */
+  * writes its many-small-files fixture with at most one task per core,
+  * sized from the footers' row counts instead of a count job. */
 class BuildJobsSpec extends SparkSpecBase {
 
   test("read-only builders start 0 jobs at sf0.001") {
@@ -18,6 +19,16 @@ class BuildJobsSpec extends SparkSpecBase {
         name -> counters.snapshot(System.currentTimeMillis()).buildJobs
       }
       assert(jobs.forall(_._2 == 0), jobs)
+    } finally spark.sparkContext.removeSparkListener(counters)
+  }
+
+  test("compaction's builder starts 4 jobs: two writes, each a shuffle and a write, and no count") {
+    val counters = new Bench.JobCounters(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counters)
+    try {
+      counters.reset()
+      SparkEntry.queries("compaction")(spark, sfDir)
+      assert(counters.snapshot(System.currentTimeMillis()).buildJobs == 4)
     } finally spark.sparkContext.removeSparkListener(counters)
   }
 

@@ -34,7 +34,7 @@ class ParquetReaderSpec extends SparkSpecBase {
     tables.foreach(t => sameAsSpark(s"$sfDir/$t"))
 
     val relayout = "/tmp/graft_test_reader_relayout"
-    IO.relayout(spark, s"$sfDir/lineitem.parquet", relayout, Some("l_returnflag"))
+    IO.relayout(IO.readParquet(spark, s"$sfDir/lineitem.parquet"), relayout, Some("l_returnflag"))
     assert(new java.io.File(relayout).list().exists(_.startsWith("l_returnflag=")))
     sameAsSpark(relayout)
 

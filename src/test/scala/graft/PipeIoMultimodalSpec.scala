@@ -37,7 +37,7 @@ class PipeIoMultimodalSpec extends SparkSpecBase {
     val tmp = Files.createTempDirectory("graft_io").toString
     val src = s"$tmp/src"; val dst = s"$tmp/dst"
     IO.writeParquet(Tables.lineitem(spark, sfDir), src)
-    IO.relayout(spark, src, dst, partitionCol = Some("l_returnflag"), filesPerPartition = 2)
+    IO.relayout(IO.readParquet(spark, src), dst, partitionCol = Some("l_returnflag"), filesPerPartition = 2)
     val back = spark.read.parquet(dst)
     assert(back.count() == Tables.lineitem(spark, sfDir).count())
     val dirs = new java.io.File(dst).listFiles().filter(_.isDirectory).map(_.getName)
