@@ -35,11 +35,6 @@ object GraftEnv {
   def ppjoinBudget(env: Env = sys.env): Long =
     read(env, "SPARK_GRAFT_PPJOIN_BUDGET", 200000000L)(_.trim.toDouble.toLong)
 
-  /** SPARK_GRAFT_CC_LOCAL_EDGES: the edge budget of
-    * `DedupOps.connectedComponents`' driver union-find fast path (0 disarms). */
-  def ccLocalEdges(env: Env = sys.env): Long =
-    read(env, "SPARK_GRAFT_CC_LOCAL_EDGES", 2000000L)(_.trim.toLong)
-
   /** SPARK_GRAFT_NO_COALESCE: unset, or 1 to make [[Verify]] write each
     * query's partitions as they are instead of one file. */
   def noCoalesce(env: Env = sys.env): Boolean =
@@ -57,7 +52,7 @@ object GraftEnv {
       offsets
     }
 
-  /** Parses the settings queries read while they are built, so a malformed
-    * one stops a main before its first query. */
-  def check(env: Env = sys.env): Unit = { ppjoinBudget(env); ccLocalEdges(env) }
+  /** Parses [[ppjoinBudget]], the one setting queries read while they are
+    * built, so a malformed value stops a main before its first query. */
+  def check(env: Env = sys.env): Unit = ppjoinBudget(env)
 }

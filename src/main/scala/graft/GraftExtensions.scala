@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import graft.functions.GraftFunctions
 import graft.plans.TopKStrategy
 
-/** SparkSessionExtensions entry point — the production registration path:
+/** SparkSessionExtensions entry point — the only way graft's functions get
+  * into a session:
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions …
@@ -15,10 +16,9 @@ import graft.plans.TopKStrategy
   *
   * Injects the TopKPerGroup planner strategies, the row_number top-k
   * rewrite, and every graft native function (GraftFunctions.builders) so
-  * they are available from SQL text as well as the Column API.
-  * (GraftFunctions.register remains the per-session fallback used inside the
-  * ops so library calls work on vanilla sessions too; on a session built
-  * with these extensions it finds every function present and does nothing.)
+  * they are available from SQL text as well as the Column API. Every op
+  * that calls a graft function needs a session built with these extensions;
+  * `GraftSessions.local` sets them.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

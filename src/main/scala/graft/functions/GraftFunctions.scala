@@ -1,19 +1,19 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 
-/** Registration + Column-level API for graft's native Catalyst expressions.
+/** Function table + Column-level API for graft's native Catalyst expressions.
   *
-  * Registered in the session FunctionRegistry so they work from both the
-  * Column API (via call_function) and plain SQL (`SELECT cosine_sim(a, b)`).
-  * One table, [[builders]], feeds both registration paths: GraftExtensions
-  * injects it when the session is built, and [[register]] adds whatever a
-  * session does not hold yet.
+  * [[builders]] is the one table of graft functions, and
+  * [[graft.GraftExtensions]] is the only code that puts it into a session:
+  * it injects every entry when the session is built, so the functions
+  * resolve from both the Column API (via call_function) and plain SQL
+  * (`SELECT cosine_sim(a, b)`). The Column forms below therefore need a
+  * session built with that extension, which `graft.GraftSessions.local`
+  * provides.
   */
 object GraftFunctions {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
   import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
   /** Every graft native function: (SQL name, expression builder). */
@@ -65,18 +65,6 @@ object GraftFunctions {
       e(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression()),
     "nearest_centroids" -> (e => NearestCentroids(e(0), evalCentroids(e(1)),
       e(2).eval().asInstanceOf[Number].intValue())),
-    "zorder64" -> (e => Zorder64(e(0), e(1))),
-    "rank_bucket" -> (e => RankBucket(e(0), {
-      import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType}
-      val arr = e(1).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      e(1).dataType match {
-        case ArrayType(DoubleType, _) => arr.toDoubleArray()
-        case ArrayType(dt: DecimalType, _) => arr.toObjectArray(dt)
-          .map(_.asInstanceOf[org.apache.spark.sql.types.Decimal].toDouble)
-        case other => throw new IllegalArgumentException(
-          s"rank_bucket expects array<double> boundaries, got $other")
-      }
-      })),
     "bloom_build" -> (e => BloomBuildAgg(e(0),
       e(1).eval().asInstanceOf[Number].intValue(),
       e(2).eval().asInstanceOf[Number].intValue()).toAggregateExpression()),
@@ -94,19 +82,6 @@ object GraftFunctions {
 
   private[graft] def info(name: String): ExpressionInfo =
     new ExpressionInfo("graft.functions", name)
-
-  /** Registers every graft function the session's registry does not hold
-    * yet — a no-op when GraftExtensions injected them or an earlier call
-    * registered them. Ops call this per use, so re-registering each time
-    * would replace all of them (and log a WARN per function) on every call.
-    * Never replaces a function the registry already holds. */
-  def register(spark: SparkSession): Unit = register(spark.sessionState.functionRegistry)
-
-  private[graft] def register(reg: FunctionRegistry): Unit =
-    builders.foreach { case (name, build) =>
-      val id = FunctionIdentifier(name)
-      if (!reg.functionExists(id)) reg.registerFunction(id, info(name), build)
-    }
 
   /** Fold a foldable array<array<string>> merge-table argument into the
     * (left, right) merge pairs for [[BpeEncode]]. */
@@ -300,17 +275,6 @@ object GraftFunctions {
     call_function("nearest_centroids", vec,
       org.apache.spark.sql.functions.typedlit(centroids.map(_.toSeq).toSeq),
       org.apache.spark.sql.functions.lit(k))
-
-  /** 64-bit Morton (Z-order) interleave of two long keys — the
-    * multi-dimensional layout key (see graft.sources.IO.zorderWrite). */
-  def zorder64(a: Column, b: Column): Column = call_function("zorder64", a, b)
-
-  /** Quantile-bucket index of a double against sorted boundaries (native
-    * binary search — the codegen'd replacement for the interpreted
-    * size(filter(...)) HOF scan). */
-  def rankBucket(v: Column, boundaries: Array[Double]): Column =
-    call_function("rank_bucket", v,
-      org.apache.spark.sql.functions.typedlit(boundaries.toSeq))
 
   /** Multi-table sign-LSH bucket ids (array<int>, namespaced per table) —
     * map-side bucketing for the LSH-ANN path. `probes` > 0 additionally

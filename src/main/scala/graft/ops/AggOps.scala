@@ -561,24 +561,8 @@ object AggOps {
       .agg(sum(col("k")).as("sum_k"), count(col("k")).as("n_with_k"),
            min(col("k")).as("min_k"), max(col("k")).as("max_k"))
 
-  /** Sketch-based approximations: HLL++ distinct + quantile sketch. Engine-
-    * specific estimates (no DuckDB twin) — accuracy spec'd in OpsSpec; the
-    * 100 TB substitute for exact distinct/percentile. */
-  def approxSketch(lineitem: DataFrame): DataFrame =
-    lineitem.agg(
-      approx_count_distinct(col("l_partkey"), 0.02).as("approx_parts"),
-      approx_count_distinct(col("l_orderkey"), 0.02).as("approx_orders"),
-      expr("approx_percentile(l_extendedprice, array(0.5, 0.95, 0.99), 1000)")
-        .as("price_quantiles"))
-      // Scalar quantile columns (not an array) so row-level comparers that
-      // hash cell values can handle the output.
-      .select(col("approx_parts"), col("approx_orders"),
-        round(col("price_quantiles")(0), 2).as("q50"),
-        round(col("price_quantiles")(1), 2).as("q95"),
-        round(col("price_quantiles")(2), 2).as("q99"))
-
-  /** Transparent twin of [[approxSketch]] — same shape (2 approx distinct
-    * counts + 3 price quantiles), every stage re-runnable by any engine:
+  /** Sketch-based approximations: 2 approx distinct counts + 3 price
+    * quantiles, every stage re-runnable by any engine:
     *   - distincts: the p=12 register-relation HLL (see [[hllDailyRegisters]])
     *     over l_partkey / l_orderkey — registers dump as rows, the estimate
     *     is the published Flajolet harmonic-mean formula;
@@ -687,31 +671,19 @@ object AggOps {
       .agg(count(lit(1)).as("n_returned"))
   }
 
-  /** Mergeable-sketch re-aggregation: per-day HLL sketches of the user set,
-    * unioned up to per-event-type totals — the pre-aggregated-rollup pattern
-    * (store tiny daily sketches, answer month queries by register-max union,
-    * never rescan raw events). HLL union is lossless, so the re-aggregated
-    * estimate is IDENTICAL to the single-pass estimate — the spec asserts
-    * equality, the driver checks rows-only (estimates aren't
-    * oracle-matchable against DuckDB's different HLL). */
-  def hllReaggregate(events: DataFrame): DataFrame = {
-    val daily = events.groupBy(to_date(col("ts")).as("day"), col("event_type"))
-      .agg(hll_sketch_agg(col("user_id")).as("sk"))
-    daily.groupBy(col("event_type"))
-      .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est_users"),
-        count(lit(1)).as("n_days"))
-  }
-
-  /** Transparent HLL (p=12, m=4096 registers): the same mergeable-sketch
-    * rollup as [[hllReaggregate]], but the daily sketch is an EXPLICIT
-    * register relation (day, event_type, bucket, r) — exactly what an HLL
-    * stores, as rows. Union across days is max-per-bucket and the estimate
-    * is the published harmonic-mean formula (Flajolet et al. 2007, with
-    * linear-counting small-range correction), so any engine can both merge
-    * and read these sketches — register relations are portable sketch
-    * storage, and the whole pipeline becomes oracle-checkable (DuckDB
-    * re-aggregates the dumped registers and recomputes the estimate with
-    * the identical arithmetic). rho needs no custom expression: the
+  /** Mergeable-sketch re-aggregation with a transparent HLL (p=12, m=4096
+    * registers): per-day sketches of the user set, unioned up to
+    * per-event-type totals — the pre-aggregated-rollup pattern (store tiny
+    * daily sketches, answer month queries by register-max union, never
+    * rescan raw events). The daily sketch is an EXPLICIT register relation
+    * (day, event_type, bucket, r) — exactly what an HLL stores, as rows.
+    * Union across days is max-per-bucket and the estimate is the published
+    * harmonic-mean formula (Flajolet et al. 2007, with linear-counting
+    * small-range correction), so any engine can both merge and read these
+    * sketches — register relations are portable sketch storage, and the
+    * whole pipeline becomes oracle-checkable (DuckDB re-aggregates the
+    * dumped registers and recomputes the estimate with the identical
+    * arithmetic). rho needs no custom expression: the
     * leftmost-1-bit position comes from the codegen'd smear/popcount
     * identity bit_count(smear(w)) = 64 − clz(w). */
   private val HllP = 12

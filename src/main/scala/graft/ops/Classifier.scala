@@ -220,7 +220,6 @@ object Classifier {
   /** Production scoring: one Scan+Project, weights inside the plan. */
   def scoreMapSide(docs: DataFrame, label: org.apache.spark.sql.Column,
                    w: Array[Double]): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val margin = graft.functions.GraftFunctions.hashedLinearMargin(col("text"), w)
     docs.select(col("doc_id"), label.cast("int").as("y"),
       round(margin, 5).as("margin"),

@@ -24,7 +24,6 @@ object CorpusGen {
   def documents(spark: SparkSession, n: Long, vocab: Int = 50000,
                 seed: Long = 6L, numPartitions: Int = 64,
                 stopFrac: Double = 0.0): DataFrame = {
-    GraftFunctions.register(spark)
     spark.range(0, n, 1, numPartitions)
       .select(col("id").as("doc_id"),
         GraftFunctions.syntheticDocText(col("id"), vocab, seed, stopFrac).as("text"))
@@ -46,7 +45,6 @@ object CorpusGen {
   def embeddings(spark: SparkSession, n: Long, dim: Int = 64,
                  nClusters: Int = 2000, seed: Long = 6L,
                  numPartitions: Int = 64): DataFrame = {
-    GraftFunctions.register(spark)
     spark.range(0, n, 1, numPartitions)
       .select(col("id").as("vec_id"),
         GraftFunctions.syntheticEmbedding(col("id"), dim, nClusters, seed).as("embedding"),

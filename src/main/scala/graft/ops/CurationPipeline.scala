@@ -81,7 +81,6 @@ object CurationPipeline {
     * anti join. Returns surviving (doc_id) rows. */
   def decontaminate(corpus: DataFrame, benchmark: DataFrame,
                     n: Int = 3, minOverlap: Long = 5): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     def grams(df: DataFrame) = df.select(col("doc_id"),
       explode(graft.functions.GraftFunctions.shingleArray(
         TextOps.tokens(col("text")), n)).as("gram"))
@@ -111,7 +110,6 @@ object CurationPipeline {
   def decontaminateBloom(corpus: DataFrame, benchmark: DataFrame,
                          n: Int = 3, minOverlap: Long = 5,
                          bitsPerGram: Int = 10, numHashes: Int = 7): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     def grams(df: DataFrame) = df.select(col("doc_id"),
       explode(graft.functions.GraftFunctions.shingleArray(
         TextOps.tokens(col("text")), n)).as("gram"))
@@ -415,7 +413,7 @@ object CurationPipeline {
   def clusterBalancedSample(spark: org.apache.spark.sql.SparkSession,
                             emb: DataFrame, quota: Long = 20, k: Int = 16,
                             iters: Int = 5, partitions: Int = 32): DataFrame =
-    balancedRank(SimilarityOps.kmeansCluster(spark, emb, k, iters)
+    balancedRank(SimilarityOps.kmeansCluster(emb, k, iters)
       .select(col("vec_id"), col("cluster")), quota, partitions)
 
   /** Cluster-balanced sampling from a materialized centroid relation — the
@@ -424,7 +422,7 @@ object CurationPipeline {
   def clusterBalancedSampleFrom(spark: org.apache.spark.sql.SparkSession,
                                 emb: DataFrame, cents: DataFrame,
                                 quota: Long = 20, partitions: Int = 32): DataFrame =
-    balancedRank(SimilarityOps.assignFromCentroidRelation(spark, emb, cents)
+    balancedRank(SimilarityOps.assignFromCentroidRelation(emb, cents)
       .select(col("vec_id"), col("cluster")), quota, partitions)
 
   /** Corpus snapshot diff — the doc-level distcp -diff analog (the

@@ -71,7 +71,6 @@ object DedupOps {
     *    shingle every doc twice, the first time on the scan's few tasks.
     *    hasTokens reads each text only up to its n-th token. */
   private def shingleDocs(docs: DataFrame, n: Int = 3): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     TextOps.spreadScan(docs)
       .filter(TextOps.hasTokens(col("text"), n))
       .select(col("doc_id"), GraftFunctions.shingleHashes(col("text"), n).as("hv"))
@@ -118,27 +117,11 @@ object DedupOps {
   /** Two-relation form: a_id keys into shA, b_id into shB (self-join ops
     * pass the same relation twice; cross-corpus ops pass corpus + ref). */
   private def verifyPairsAB(cand: DataFrame, shA: DataFrame, shB: DataFrame,
-                            tau: Double): DataFrame = {
-    val tauEff = tau - 1e-6
-    def meta(sh: DataFrame) = sh.select(col("doc_id"), size(col("hv")).as("nsh"), col("sk"))
-    val pruned = cand.select(col("a_id"), col("b_id"))
-      .join(meta(shA).select(col("doc_id").as("a_id"), col("nsh").as("na"), col("sk").as("ska")), "a_id")
-      .join(meta(shB).select(col("doc_id").as("b_id"), col("nsh").as("nb"), col("sk").as("skb")), "b_id")
-      .filter(least(col("na"), col("nb")).cast("double") >=
-        greatest(col("na"), col("nb")) * lit(tauEff) - lit(1e-9))
-      .withColumn("ub", GraftFunctions.sketchIntersectUB(col("ska"), col("skb")))
-      .filter(col("ub") === -1 ||
-        col("ub").cast("double") >= (col("na") + col("nb")) * lit(tauEff / (1.0 + tauEff)) - lit(1e-9))
-      .select(col("a_id"), col("b_id"))
-    pruned
-      .join(shA.select(col("doc_id").as("a_id"), col("hv").as("ha")), "a_id")
-      .join(shB.select(col("doc_id").as("b_id"), col("hv").as("hb")), "b_id")
-      .withColumn("inter", GraftFunctions.sortedIntersectCount(col("ha"), col("hb")))
-      .withColumn("jacc", round(col("inter") /
-        (size(col("ha")) + size(col("hb")) - col("inter")), 6))
-      .filter(col("jacc") >= tau)
-      .select(col("a_id"), col("b_id"), col("jacc"))
-  }
+                            tau: Double): DataFrame =
+    verifyPairsCore(cand, shA,
+      shB.select(col("doc_id").as("b_id"), size(col("hv")).as("nb"), col("sk").as("skb")),
+      shB.select(col("doc_id").as("b_id"), col("hv").as("hb")),
+      Seq("b_id"), tau)
 
   /** Tagged single-pass form of [[verifyPairsAB]]: candidates carry a
     * `b_org` column selecting which b-side shingle relation the pair
@@ -152,31 +135,43 @@ object DedupOps {
   private def verifyPairsTagged(cand: DataFrame, shA: DataFrame,
                                 shB0: DataFrame, shB1: DataFrame,
                                 tau: Double): DataFrame = {
-    val tauEff = tau - 1e-6
     def metaB(sh: DataFrame, org: Int) = sh.select(col("doc_id").as("b_id"),
       size(col("hv")).as("nb"), col("sk").as("skb"), lit(org).as("b_org"))
     def hvB(sh: DataFrame, org: Int) = sh.select(col("doc_id").as("b_id"),
       col("hv").as("hb"), lit(org).as("b_org"))
-    val bMeta = metaB(shB0, 0).unionByName(metaB(shB1, 1))
-    val bHv = hvB(shB0, 0).unionByName(hvB(shB1, 1))
-    val pruned = cand.select(col("a_id"), col("b_id"), col("b_org"))
+    verifyPairsCore(cand, shA,
+      metaB(shB0, 0).unionByName(metaB(shB1, 1)),
+      hvB(shB0, 0).unionByName(hvB(shB1, 1)),
+      Seq("b_id", "b_org"), tau)
+  }
+
+  /** The length and sketch pre-filters and the Jaccard step shared by
+    * [[verifyPairsAB]] and [[verifyPairsTagged]]. The b side comes as two
+    * relations keyed by `bKeys`: `bMeta` (nb, skb) and `bHv` (hb). Output:
+    * (a_id, bKeys…, jacc). */
+  private def verifyPairsCore(cand: DataFrame, shA: DataFrame, bMeta: DataFrame,
+                              bHv: DataFrame, bKeys: Seq[String],
+                              tau: Double): DataFrame = {
+    val tauEff = tau - 1e-6
+    val pairKeys = (Seq("a_id") ++ bKeys).map(col)
+    val pruned = cand.select(pairKeys: _*)
       .join(shA.select(col("doc_id").as("a_id"), size(col("hv")).as("na"),
         col("sk").as("ska")), "a_id")
-      .join(bMeta, Seq("b_id", "b_org"))
+      .join(bMeta, bKeys)
       .filter(least(col("na"), col("nb")).cast("double") >=
         greatest(col("na"), col("nb")) * lit(tauEff) - lit(1e-9))
       .withColumn("ub", GraftFunctions.sketchIntersectUB(col("ska"), col("skb")))
       .filter(col("ub") === -1 ||
         col("ub").cast("double") >= (col("na") + col("nb")) * lit(tauEff / (1.0 + tauEff)) - lit(1e-9))
-      .select(col("a_id"), col("b_id"), col("b_org"))
+      .select(pairKeys: _*)
     pruned
       .join(shA.select(col("doc_id").as("a_id"), col("hv").as("ha")), "a_id")
-      .join(bHv, Seq("b_id", "b_org"))
+      .join(bHv, bKeys)
       .withColumn("inter", GraftFunctions.sortedIntersectCount(col("ha"), col("hb")))
       .withColumn("jacc", round(col("inter") /
         (size(col("ha")) + size(col("hb")) - col("inter")), 6))
       .filter(col("jacc") >= tau)
-      .select(col("a_id"), col("b_id"), col("b_org"), col("jacc"))
+      .select(pairKeys :+ col("jacc"): _*)
   }
 
   /** Exact dedup: content-hash groupBy; canonical copy = min doc_id. */
@@ -226,10 +221,8 @@ object DedupOps {
     * per hash upstream if that corpus shape is possible. Output spans,
     * not cleaned text: removal policy (drop span / keep first occurrence)
     * is a separate cheap map over spans. */
-  def substringDupSpans(docs: DataFrame, winLen: Int = 40,
-                        bloomPrefilter: Boolean = true): DataFrame = {
+  def substringDupSpans(docs: DataFrame, winLen: Int = 40): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(docs.sparkSession)
     val L = winLen
     val longEnough = docs.filter(length(col("text")) >= L)
     // (doc_id, pos, h, text): text rides along UNSHUFFLED (whole-stage
@@ -253,24 +246,20 @@ object DedupOps {
       .select(col("doc_id"), col("text"),
         posexplode(winHashes).as(Seq("pos0", "h")))
       .select(col("doc_id"), col("text"), (col("pos0") + 1).as("pos"), col("h"))
+    val dupH = wins.groupBy(col("h")).agg(count(lit(1)).as("c"))
+      .filter(col("c") > 1).select(col("h"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // sizing count materializes the persisted relation the bloom build
+    // re-reads (decontaminateBloom's sizing idiom)
+    val nDup = math.max(1L, dupH.count())
     val cand =
-      if (bloomPrefilter) {
-        val dupH = wins.groupBy(col("h")).agg(count(lit(1)).as("c"))
-          .filter(col("c") > 1).select(col("h"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // sizing count materializes the persisted relation the bloom build
-        // re-reads (decontaminateBloom's sizing idiom)
-        val nDup = math.max(1L, dupH.count())
-        val pre =
-          if (nDup * 10 <= (1L << 30)) {
-            val numBits = math.max(1024L, nDup * 10).toInt
-            val blob = dupH.agg(GraftFunctions.bloomBuild(col("h"), numBits, 7).as("blob"))
-              .head().getAs[Array[Byte]](0)
-            wins.filter(GraftFunctions.bloomMightContain(col("h"), blob))
-          } else wins
-        dupH.unpersist()
-        pre
+      if (nDup * 10 <= (1L << 30)) {
+        val numBits = math.max(1024L, nDup * 10).toInt
+        val blob = dupH.agg(GraftFunctions.bloomBuild(col("h"), numBits, 7).as("blob"))
+          .head().getAs[Array[Byte]](0)
+        wins.filter(GraftFunctions.bloomMightContain(col("h"), blob))
       } else wins
+    dupH.unpersist()
     val byWin = Window.partitionBy(col("win"))
     val occ = cand
       .withColumn("win", col("text").substr(col("pos"), lit(L)))
@@ -484,7 +473,6 @@ object DedupOps {
   def bandedMinhashSigs(docs: DataFrame, numPerms: Int = 128, bands: Int = 32): DataFrame = {
     require(numPerms % bands == 0,
       s"bandedMinhashSigs: bands=$bands must divide numPerms=$numPerms")
-    GraftFunctions.register(docs.sparkSession)
     bandRows(docs.filter(TextOps.hasTokens(col("text"), 3))
       .select(col("doc_id"), GraftFunctions.shingleHashes(col("text"), 3).as("hv")),
       numPerms, bands)
@@ -516,7 +504,6 @@ object DedupOps {
     import org.apache.spark.sql.expressions.Window
     require(numPerms % bands == 0,
       s"minhashLshPairs: bands=$bands must divide numPerms=$numPerms")
-    GraftFunctions.register(docs.sparkSession)
     val sh = shingleDocs(docs)
     // the explode carries (doc_id, band, band_sig) only, never the shingle
     // arrays or the 128-lane signature; this tiny relation (docs × bands ×
@@ -615,7 +602,6 @@ object DedupOps {
                         numPerms: Int = 128, bands: Int = 32): DataFrame = {
     require(numPerms % bands == 0,
       s"crossMinhashPairs: bands=$bands must divide numPerms=$numPerms")
-    GraftFunctions.register(corpus.sparkSession)
     val sa = shingleDocs(corpus)
     val sb = shingleDocs(ref)
     val cand = bandRows(sa, numPerms, bands).as("x")
@@ -641,7 +627,6 @@ object DedupOps {
                          bands: Int = 32): DataFrame = {
     require(numPerms % bands == 0,
       s"incrementalDropIds: bands=$bands must divide numPerms=$numPerms")
-    GraftFunctions.register(newDocs.sparkSession)
     val sa = shingleDocs(newDocs)
     val sb = shingleDocs(existing)
     // NOT persisted pre-partitioned on the join key: that shape was
@@ -720,7 +705,6 @@ object DedupOps {
                                   numPerms: Int = 128, bands: Int = 32): DataFrame = {
     require(numPerms % bands == 0,
       s"incrementalDropIdsFromStore: bands=$bands must divide numPerms=$numPerms")
-    GraftFunctions.register(newDocs.sparkSession)
     val sa = shingleDocs(newDocs)
     val bandedA = bandRows(sa, numPerms, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -818,10 +802,10 @@ object DedupOps {
     // propagate rounds × (join + agg + checkpoint + check) driver actions
     // — at bench SF that was ~90 of dedup_semantic's 97 Spark jobs. The
     // budget is edge-count-gated (default 2 M directed edge rows ≈ ~32 MB
-    // of (Long, Long) tuples on the driver, SPARK_GRAFT_CC_LOCAL_EDGES
-    // overrides; the gate is probed by one bounded per-partition counting
-    // job below — no full count pass on huge graphs) with the distributed
-    // loop below as the unchanged any-scale fallback — the same
+    // of (Long, Long) tuples on the driver; the gate is probed by one
+    // bounded per-partition counting job below — no full count pass on
+    // huge graphs) with the distributed loop below as the unchanged
+    // any-scale fallback — the same
     // bounded-collect-or-distributed split as dedupParagraphs'
     // broadcastDropMax. Long-id graphs only (every in-repo pair relation);
     // anything else takes the loop.
@@ -972,11 +956,10 @@ object DedupOps {
   }
 
   /** Default edge budget for [[connectedComponents]]'s driver union-find
-    * fast path (0 disarms; SPARK_GRAFT_CC_LOCAL_EDGES overrides): 2 M
-    * directed edge rows ≈ tens of MB on the driver — the bounded-collect-
-    * or-distributed split of dedupParagraphs' broadcastDropMax, sized per
-    * deployment. */
-  def DefaultCcLocalEdges: Long = graft.GraftEnv.ccLocalEdges()
+    * fast path (a `localEdgeMax` of 0 disarms it): 2 M directed edge rows ≈
+    * tens of MB on the driver — the bounded-collect-or-distributed split of
+    * dedupParagraphs' broadcastDropMax. */
+  final val DefaultCcLocalEdges = 2000000L
 
   /** "Rooted at" = equal or a proper child PATH after URI normalization —
     * never a raw substring match, which would let requested /tmp/a match an
@@ -1045,7 +1028,6 @@ object DedupOps {
   }
 
   def levenshteinPairs(docs: DataFrame, maxDist: Int = 12, prefixLen: Int = 48): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val w = math.max(1, maxDist)
     val p = docs.select(col("doc_id"),
         substring(col("text"), 1, prefixLen).as("pfx"),
@@ -1090,7 +1072,6 @@ object DedupOps {
 
   /** SimHash fingerprints per doc (map-side, native expression). */
   def simhashFingerprints(docs: DataFrame): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       GraftFunctions.simhash64(TextOps.tokens(col("text"))).as("fp"))
   }
@@ -1133,7 +1114,6 @@ object DedupOps {
     * machinery downstream, fingerprint relation schema unchanged. */
   def simhashIdfFingerprints(docs: DataFrame, maxTable: Int = 1 << 18,
                              minDf: Long = 2): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val (words, weights, dflt) = idfWeights(docs, maxTable, minDf)
     docs.select(col("doc_id"),
       GraftFunctions.simhash64Weighted(
@@ -1187,7 +1167,6 @@ object DedupOps {
 
   def simhashPairsFromFingerprints(fp: DataFrame, maxHamming: Int = 6): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 64, s"maxHamming=$maxHamming out of [0,64)")
-    GraftFunctions.register(fp.sparkSession)
     val nBands = maxHamming + 1
     val docs = fp.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val distinctFp = docs.select(col("fp")).distinct()
@@ -1288,7 +1267,6 @@ object DedupOps {
                       numHashes: Int = 7,
                       broadcastDropMax: Long = 5000000L): DataFrame = {
     require(paraWords >= 1 && minDocs >= 2)
-    GraftFunctions.register(docs.sparkSession)
     val w = TextOps.tokens(col("text"))
     // in-row framing: (doc_id, paras) — the rebuild source, never exploded.
     // PERSISTED: three consumers walk this relation (the candidate-hash

@@ -16,8 +16,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: Catalyst auto-broadcasts below the threshold; we hint
   * explicitly where the dim is known-small at any SF. AQE converts SMJ→BHJ
-  * at runtime when a side turns out small, and splits skewed partitions. For
-  * known-hot keys, saltedJoin spreads one key across `buckets` sub-keys.
+  * at runtime when a side turns out small, and splits skewed partitions.
   */
 object JoinOps {
 
@@ -96,18 +95,5 @@ object JoinOps {
     rangeJoinBucketed(events.select(col("event_id"), col("value")), "value", intervals)
       .groupBy(col("interval_id"))
       .agg(count(lit(1)).as("n_points"), round(sum(col("value")), 2).as("sum_value"))
-  }
-
-  /** Skew-mitigation pattern: salt the hot side's key into `buckets` sub-keys
-    * and explode the small side across all buckets. Semantically an inner
-    * equi-join; physically the hot key's rows spread over `buckets` tasks.
-    * (With AQE skew-join on, Spark does this adaptively; this is the explicit
-    * form for pathological keys.) */
-  def saltedJoin(big: DataFrame, bigKey: String, small: DataFrame, smallKey: String,
-                 buckets: Int = 16): DataFrame = {
-    val salted = big.withColumn("_salt", pmod(hash(col(bigKey), monotonically_increasing_id()), lit(buckets)))
-    val exploded = small.withColumn("_salt", explode(sequence(lit(0), lit(buckets - 1))))
-    salted.join(exploded, salted(bigKey) === exploded(smallKey) &&
-      salted("_salt") === exploded("_salt")).drop("_salt")
   }
 }

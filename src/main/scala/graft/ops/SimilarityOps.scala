@@ -78,7 +78,6 @@ object SimilarityOps {
     * their π/2 assignment angle only widens radii, which is conservative.) */
   def embeddingNearDup(spark: SparkSession, emb: DataFrame, tau: Double = 0.4,
                        nlist: Int = 0, centroidStride: Int = 0): DataFrame = {
-    GraftFunctions.register(spark)
     // nlist <= 0 → adaptive ~sqrt(N): with FIXED nlist, bucket sizes grow
     // linearly with the corpus and bucket-pair verification quadratically —
     // measured 83x cost for 10x data at sf1. sqrt(N) buckets keep both the
@@ -246,9 +245,8 @@ object SimilarityOps {
     * [[lshBucketRelations]] factored out so the ANN dedup path and the
     * top-k path bucket identically (same plane family, same namespacing).
     * Map-side only: one codegen'd column, no shuffle. */
-  def lshIndexRelation(spark: SparkSession, emb: DataFrame, tables: Int = 8,
+  def lshIndexRelation(emb: DataFrame, tables: Int = 8,
                        bits: Int = 4, seed: Long = 42L): DataFrame = {
-    GraftFunctions.register(spark)
     val dimRow = emb.select(size(col("embedding"))).limit(1).collect()
     if (dimRow.isEmpty)
       return emb.select(col("vec_id"), lit(0).cast("int").as("bucket")).limit(0)
@@ -272,9 +270,9 @@ object SimilarityOps {
     * cluster stays transitively connected (every later member pairs with
     * the first ones). Default 0 = exact uncapped bucket join (the
     * oracle-checked gate shape). */
-  def semanticDedupFromBuckets(spark: SparkSession, emb: DataFrame, buckets: DataFrame,
+  def semanticDedupFromBuckets(emb: DataFrame, buckets: DataFrame,
                                tau: Double = 0.4, maxBucket: Int = 0): DataFrame = {
-    val pairs = semAnnCandidatePairs(spark, emb, buckets, tau, maxBucket)
+    val pairs = semAnnCandidatePairs(emb, buckets, tau, maxBucket)
     val comp = DedupOps.connectedComponents(pairs)
     emb.select(col("vec_id"))
       .join(comp.select(col("id").as("vec_id"), col("comp")), Seq("vec_id"), "left")
@@ -286,10 +284,9 @@ object SimilarityOps {
     * factored so plan audits can assert on the OPERATOR's join (not a
     * re-implementation): bucket equi-self-join (capped per `maxBucket`),
     * stateless dedup, exact verify at `tau`. Returns verified (a_id, b_id). */
-  private[graft] def semAnnCandidatePairs(spark: SparkSession, emb: DataFrame,
+  private[graft] def semAnnCandidatePairs(emb: DataFrame,
                                           buckets: DataFrame, tau: Double,
                                           maxBucket: Int): DataFrame = {
-    GraftFunctions.register(spark)
     val aSide =
       if (maxBucket <= 0) buckets
       else buckets.withColumn("rnk", row_number().over(
@@ -345,17 +342,17 @@ object SimilarityOps {
     * budget's recall price is the measured check, not a silent loss.
     * Pass bits > 0 to pin (the 0-arg gate shape at sf0.01 resolves to the
     * same 4 bits either way). */
-  def semanticDedupAnn(spark: SparkSession, emb: DataFrame, tau: Double = 0.4,
+  def semanticDedupAnn(emb: DataFrame, tau: Double = 0.4,
                        tables: Int = 8, bits: Int = 0, seed: Long = 42L,
                        maxBucket: Int = 0,
                        maxCandidatePairs: Long = DefaultSemAnnPairBudget): DataFrame = {
     // with a maxBucket cap the join volume is bounded by the cap itself,
     // so an over-budget measured bound is survivable — size best-effort
     val b = if (bits > 0) bits
-      else selfJoinBitsMeasured(spark, emb, maxCandidatePairs, tables, seed,
+      else selfJoinBitsMeasured(emb, maxCandidatePairs, tables, seed,
         allowOverBudget = maxBucket > 0)._1
-    semanticDedupFromBuckets(spark, emb,
-      lshIndexRelation(spark, emb, tables, b, seed), tau, maxBucket)
+    semanticDedupFromBuckets(emb,
+      lshIndexRelation(emb, tables, b, seed), tau, maxBucket)
   }
 
   /** Default candidate-pair budget for [[semanticDedupAnn]]'s measured
@@ -393,12 +390,12 @@ object SimilarityOps {
     * same-bucket in EVERY table at any bits) fails LOUDLY with the
     * measured bound unless `allowOverBudget` (the maxBucket-capped caller,
     * whose join volume the cap bounds regardless). */
-  def selfJoinBitsMeasured(spark: SparkSession, emb: DataFrame,
+  def selfJoinBitsMeasured(emb: DataFrame,
                            maxPairs: Long, tables: Int = 8,
                            seed: Long = 42L,
                            allowOverBudget: Boolean = false): (Int, Long) = {
     def bound(bits: Int): Long = DedupOps.pairBound(
-      lshIndexRelation(spark, emb, tables, bits, seed)
+      lshIndexRelation(emb, tables, bits, seed)
         .groupBy(col("bucket")).agg(count(lit(1)).as("nb")), "nb")
     var bits = selfJoinBits(emb.count())
     var b = bound(bits)
@@ -426,9 +423,8 @@ object SimilarityOps {
 
   /** Brute-force top-k neighbours for the query set (vec_id < nQueries).
     * Broadcast the small query side; rank with a deterministic tie-break. */
-  def bruteForceTopK(spark: SparkSession, emb: DataFrame,
+  def bruteForceTopK(emb: DataFrame,
                      nQueries: Int = 10, k: Int = 5): DataFrame = {
-    GraftFunctions.register(spark)
     val queries = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
     val cands = emb.select(col("vec_id").as("n_id"), col("embedding").as("ne"))
@@ -446,9 +442,8 @@ object SimilarityOps {
     * it IS the dumped relation). dropDuplicates is a no-op for IVF (one
     * bucket per neighbour, distinct probes) and required for multi-table
     * LSH; both sides of the compare apply it, so the paths stay in parity. */
-  def topKFromBucketDumps(spark: SparkSession, emb: DataFrame,
+  def topKFromBucketDumps(emb: DataFrame,
                           buckets: DataFrame, probes: DataFrame, k: Int): DataFrame = {
-    GraftFunctions.register(spark)
     val candKeys = buckets.join(broadcast(probes), Seq("bucket"))
       .filter(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"))
@@ -468,10 +463,9 @@ object SimilarityOps {
 
   /** (n_id, bucket) assignment + (q_id, bucket) probe relations of the IVF
     * index — the Verify-mode dump feeding topKFromBucketDumps + its oracle. */
-  def ivfBucketRelations(spark: SparkSession, emb: DataFrame, nQueries: Int = 10,
+  def ivfBucketRelations(emb: DataFrame, nQueries: Int = 10,
                          nlist: Int = 16, nprobe: Int = 3,
                          centroidStride: Int = 50): (DataFrame, DataFrame) = {
-    GraftFunctions.register(spark)
     val centroids = trainCentroids(emb, nlist, centroidStride)
     // empty-corpus early return mirroring ivfTopK's guard — without it the
     // dump path would evaluate nearestCentroids over an empty model while
@@ -496,10 +490,9 @@ object SimilarityOps {
     * (bucket ids are table-namespaced) — Verify-mode dump counterpart.
     * The probe side multi-probes (`flips` lowest-margin bit flips per
     * table); the index side never does — same asymmetry as annLshTopK. */
-  def lshBucketRelations(spark: SparkSession, emb: DataFrame, nQueries: Int = 10,
+  def lshBucketRelations(emb: DataFrame, nQueries: Int = 10,
                          tables: Int = 8, bits: Int = 4,
                          seed: Long = 42L, flips: Int = 2): (DataFrame, DataFrame) = {
-    GraftFunctions.register(spark)
     val dimRow = emb.select(size(col("embedding"))).limit(1).collect()
     // same degenerate-input guard as ivfBucketRelations / annLshTopK
     if (dimRow.isEmpty) return emptyBucketRelations(emb)
@@ -528,10 +521,9 @@ object SimilarityOps {
     * table — Lv et al. 2007): candidate volume grows only with
     * nQueries·flips while the N-row index stays one bucket per table, so
     * recall rises like extra tables at none of the index-build cost. */
-  def annLshTopK(spark: SparkSession, emb: DataFrame, nQueries: Int = 10, k: Int = 5,
+  def annLshTopK(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
                  tables: Int = 8, bits: Int = 4, seed: Long = 42L,
                  flips: Int = 2): DataFrame = {
-    GraftFunctions.register(spark)
     val dimRow = emb.select(size(col("embedding"))).limit(1).collect()
     if (dimRow.isEmpty) return emptyTopK(emb)
     val planes = graft.functions.HyperplaneLsh.genPlanes(tables * bits, dimRow(0).getInt(0), seed)
@@ -563,9 +555,8 @@ object SimilarityOps {
     * (query, neighbour) candidate arises at most once (one bucket per
     * neighbour × distinct probe buckets), so no dedup pass is needed.
     * Same output schema as bruteForceTopK — recall measured in the spec. */
-  def ivfTopK(spark: SparkSession, emb: DataFrame, nQueries: Int = 10, k: Int = 5,
+  def ivfTopK(emb: DataFrame, nQueries: Int = 10, k: Int = 5,
               nlist: Int = 16, nprobe: Int = 3, centroidStride: Int = 50): DataFrame = {
-    GraftFunctions.register(spark)
     val centroids = trainCentroids(emb, nlist, centroidStride)
     if (centroids.isEmpty) return emptyTopK(emb)
     val probeK = math.min(nprobe, centroids.length)
@@ -600,7 +591,6 @@ object SimilarityOps {
     * spec pins direct-vs-relation assignment parity. */
   private[graft] def trainKmeans(emb: DataFrame, k: Int = 16, iters: Int = 5,
                                  centroidStride: Int = 31): Array[Array[Float]] = {
-    GraftFunctions.register(emb.sparkSession)
     var cs = trainCentroids(emb, k, centroidStride)
     if (cs.isEmpty) return cs
     val dim = cs.head.length
@@ -728,9 +718,8 @@ object SimilarityOps {
     * DuckDB oracle run THIS recovery over the identical parquet, so the
     * assignment+scoring+ranking stages are oracle-checked; at scale the
     * map-side [[kmeansCluster]] argmax form replaces the ×k join. */
-  def assignFromCentroidRelation(spark: SparkSession, emb: DataFrame,
+  def assignFromCentroidRelation(emb: DataFrame,
                                  cents: DataFrame): DataFrame = {
-    GraftFunctions.register(spark)
     val scored = emb.select(col("vec_id"), col("embedding"))
       .crossJoin(broadcast(cents))
       .withColumn("cos", round(cosineSim(col("embedding"), col("centroid")), 6))
@@ -744,9 +733,8 @@ object SimilarityOps {
     * assignment column — no join, no window; at 100 TB assignment runs at
     * scan speed and only training's bounded partials shuffle. Output:
     * (vec_id, cluster, cos to the assigned centroid, round 6). */
-  def kmeansCluster(spark: SparkSession, emb: DataFrame, k: Int = 16,
+  def kmeansCluster(emb: DataFrame, k: Int = 16,
                     iters: Int = 5): DataFrame = {
-    GraftFunctions.register(spark)
     val cs = trainKmeans(emb, k, iters)
     if (cs.isEmpty)
       return emb.select(col("vec_id"), lit(0).as("cluster"),
@@ -782,7 +770,6 @@ object SimilarityOps {
     // downstream aggregate — the array was re-quantized per reference
     // (measured 7 s for 20 k rows at sf1; the native form is scan-bound).
     // Arithmetic is order-identical, so outputs are bit-for-bit unchanged.
-    GraftFunctions.register(emb.sparkSession)
     val qs = GraftFunctions.quantizeStats(col("embedding"))
     emb.select(col("vec_id"), qs.as("q"))
       .select(col("vec_id"),
@@ -805,7 +792,6 @@ object SimilarityOps {
   def ivfWriteIndex(spark: SparkSession, emb: DataFrame, dir: String,
                     nlist: Int = 16, iters: Int = 2,
                     centroidStride: Int = 50): Unit = {
-    GraftFunctions.register(spark)
     val cs = trainKmeans(emb, nlist, iters, centroidStride)
     require(cs.nonEmpty, "empty corpus: nothing to index")
     // A rebuild replaces the whole index: clear the root first, so the dir
@@ -826,7 +812,6 @@ object SimilarityOps {
     * floats — collected once per batch, the trainCentroids convention). */
   def ivfIndexProbes(spark: SparkSession, dir: String, queries: DataFrame,
                      nprobe: Int = 3): DataFrame = {
-    GraftFunctions.register(spark)
     val cents = readParquet(spark, s"$dir/centroids").orderBy("cluster")
       .collect().map(r => r.getSeq[Float](r.fieldIndex("centroid")).toArray)
     val probeK = math.min(nprobe, cents.length)

@@ -77,7 +77,6 @@ object TextAnalysis {
     * windows — the content-defined-chunking primitive (rows-only: the hash
     * is engine-internal; properties spec'd in OpsSpec). */
   def rollingFingerprint(docs: DataFrame, k: Int = 16): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       graft.functions.GraftFunctions.rollingMinHash(col("text"), k).as("rh"),
       length(col("text")).cast("long").as("n_chars"))
@@ -150,7 +149,6 @@ object TextAnalysis {
     * scale the partial aggregation absorbs the explosion before the
     * exchange, and minDocs prunes the long tail map-side of the sink. */
   def ngramCounts(docs: DataFrame, n: Int = 2, minDocs: Long = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(explode(
         graft.functions.GraftFunctions.shingleArray(TextOps.tokens(col("text")), n))
         .as("ngram"))
@@ -286,7 +284,6 @@ object TextAnalysis {
     * map-side projection (the merge model ships inside the native
     * expression), scan-speed at any corpus size. */
   def bpeEncode(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       graft.functions.GraftFunctions.bpeEncode(col("text"), merges).as("bpe_tokens"))
   }
@@ -294,7 +291,6 @@ object TextAnalysis {
   /** The token-accounting view every training-budget calculation needs:
     * whitespace tokens vs BPE subword tokens per document. */
   def bpeTokenCount(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"),
       size(graft.functions.GraftFunctions.bpeEncode(col("text"), merges))
@@ -320,7 +316,6 @@ object TextAnalysis {
   /** Per-doc unigram subword tokenization — map-side Viterbi under the
     * trained piece model (ships inside the native expression). */
   def unigramEncode(docs: DataFrame, model: Seq[(String, Double)]): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       graft.functions.GraftFunctions.unigramEncode(col("text"), model).as("unigram_tokens"))
   }
@@ -328,7 +323,6 @@ object TextAnalysis {
   /** Token accounting under the unigram tokenizer — the [[bpeTokenCount]]
     * twin, so budget calculations can compare both subword families. */
   def unigramTokenCount(docs: DataFrame, model: Seq[(String, Double)]): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"),
       size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"),
       size(graft.functions.GraftFunctions.unigramEncode(col("text"), model))

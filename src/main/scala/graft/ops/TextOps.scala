@@ -96,7 +96,6 @@ object TextOps {
     * exactness for the O(capacity) bound (SketchSpec covers the error
     * contract). */
   def spaceSavingTopWords(docs: DataFrame, capacity: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.select(explode(tokens(col("text"))).as("word"))
       .agg(graft.functions.GraftFunctions.spacesavingTopK(col("word"), capacity).as("top"))
       .select(explode(col("top")).as("e"))

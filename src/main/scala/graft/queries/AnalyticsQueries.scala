@@ -364,9 +364,7 @@ object AnalyticsQueries {
     // Transparent sketch (register-relation HLL + deterministic-sample
     // order-statistic quantiles): under Verify the registers are dumped and
     // the result recomputed FROM the dump, so distinct estimates AND
-    // quantiles are oracle-checked end to end. The Spark-native
-    // approx_count_distinct/approx_percentile variant stays as the
-    // production API (AggOps.approxSketch, accuracy-spec'd in SketchSpec).
+    // quantiles are oracle-checked end to end.
     // Recomputes BOTH halves: the HLL estimates from the dumped register
     // relation (identical Flajolet arithmetic, same pattern as
     // hll_reaggregate) and the quantiles from scratch — the md5 1/16
@@ -538,8 +536,7 @@ object AnalyticsQueries {
     // relation is dumped and the result recomputed FROM the dump, so the
     // max-union re-aggregation AND the harmonic-mean estimate are
     // oracle-checked (DuckDB runs the identical arithmetic over the same
-    // registers). The DataSketches-builtin variant stays as the production
-    // API (AggOps.hllReaggregate, spec-compared).
+    // registers).
     // The oracle re-aggregates the DUMPED daily register relation with the
     // identical published arithmetic (Flajolet harmonic mean + linear-counting
     // correction) — the union algebra and the estimate are cross-engine-

@@ -15,7 +15,7 @@ object EmbeddingQueries {
          FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
          WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]),5) >= 0.4""",
       planted = Some(Planted.cosinePairs(0.4))),
-    QuerySpec("ann_bruteforce_topk", (s, d) => SimilarityOps.bruteForceTopK(s, Tables.embeddings(s, d)),
+    QuerySpec("ann_bruteforce_topk", (s, d) => SimilarityOps.bruteForceTopK(Tables.embeddings(s, d)),
       () => """WITH scored AS (
            SELECT q.vec_id AS q_id, n.vec_id AS n_id,
              round(list_cosine_similarity(q.embedding::DOUBLE[], n.embedding::DOUBLE[]),6) AS cos
@@ -35,7 +35,7 @@ object EmbeddingQueries {
     {
       val bucketDir = QuerySpec.dumpDir("graft_ivf_buckets")
       val probeDir = QuerySpec.dumpDir("graft_ivf_probes")
-      QuerySpec("ann_ivf_topk", (s, d) => SimilarityOps.ivfTopK(s, Tables.embeddings(s, d)),
+      QuerySpec("ann_ivf_topk", (s, d) => SimilarityOps.ivfTopK(Tables.embeddings(s, d)),
         () => s"""WITH b AS (SELECT n_id, bucket FROM read_parquet('$bucketDir/*.parquet')),
            p AS (SELECT q_id, bucket FROM read_parquet('$probeDir/*.parquet')),
            cand AS (SELECT DISTINCT p.q_id, b.n_id
@@ -49,17 +49,17 @@ object EmbeddingQueries {
          SELECT q_id, n_id, cos, rn FROM ranked WHERE rn <= 5""",
         verify = Some { (s, d) =>
           val emb = Tables.embeddings(s, d)
-          val (buckets, probes) = SimilarityOps.ivfBucketRelations(s, emb)
+          val (buckets, probes) = SimilarityOps.ivfBucketRelations(emb)
           buckets.coalesce(1).write.mode("overwrite").parquet(bucketDir)
           probes.coalesce(1).write.mode("overwrite").parquet(probeDir)
-          SimilarityOps.topKFromBucketDumps(s, emb,
+          SimilarityOps.topKFromBucketDumps(emb,
             readParquet(s, bucketDir), readParquet(s, probeDir), k = 5)
         })
     },
     {
       val bucketDir = QuerySpec.dumpDir("graft_lsh_buckets")
       val probeDir = QuerySpec.dumpDir("graft_lsh_probes")
-      QuerySpec("ann_lsh_topk", (s, d) => SimilarityOps.annLshTopK(s, Tables.embeddings(s, d)),
+      QuerySpec("ann_lsh_topk", (s, d) => SimilarityOps.annLshTopK(Tables.embeddings(s, d)),
         () => s"""WITH b AS (SELECT n_id, bucket FROM read_parquet('$bucketDir/*.parquet')),
            p AS (SELECT q_id, bucket FROM read_parquet('$probeDir/*.parquet')),
            cand AS (SELECT DISTINCT p.q_id, b.n_id
@@ -73,10 +73,10 @@ object EmbeddingQueries {
          SELECT q_id, n_id, cos, rn FROM ranked WHERE rn <= 5""",
         verify = Some { (s, d) =>
           val emb = Tables.embeddings(s, d)
-          val (buckets, probes) = SimilarityOps.lshBucketRelations(s, emb)
+          val (buckets, probes) = SimilarityOps.lshBucketRelations(emb)
           buckets.coalesce(1).write.mode("overwrite").parquet(bucketDir)
           probes.coalesce(1).write.mode("overwrite").parquet(probeDir)
-          SimilarityOps.topKFromBucketDumps(s, emb,
+          SimilarityOps.topKFromBucketDumps(emb,
             readParquet(s, bucketDir), readParquet(s, probeDir), k = 5)
         })
     },
@@ -130,7 +130,7 @@ object EmbeddingQueries {
     // Lloyd trainer itself stays spec-covered — it IS the dumped relation.
     {
       val centroidDir = QuerySpec.dumpDir("graft_kmeans_centroids")
-      QuerySpec("kmeans_cluster", (s, d) => SimilarityOps.kmeansCluster(s, Tables.embeddings(s, d)),
+      QuerySpec("kmeans_cluster", (s, d) => SimilarityOps.kmeansCluster(Tables.embeddings(s, d)),
         () => s"""WITH c AS (SELECT cluster, centroid
              FROM read_parquet('$centroidDir/*.parquet')),
            scored AS (SELECT e.vec_id, c.cluster,
@@ -145,7 +145,7 @@ object EmbeddingQueries {
           val cs = SimilarityOps.trainKmeans(emb)
           SimilarityOps.kmeansCentroidRelation(s, cs)
             .coalesce(1).write.mode("overwrite").parquet(centroidDir)
-          SimilarityOps.assignFromCentroidRelation(s, emb,
+          SimilarityOps.assignFromCentroidRelation(emb,
             readParquet(s, centroidDir))
         },
         planted = Some(Planted.kmeansTwins(16)))
@@ -235,7 +235,7 @@ object EmbeddingQueries {
     // replayed by an independent engine over the identical relation.
     {
       val bucketDir = QuerySpec.dumpDir("graft_sem_ann_buckets")
-      QuerySpec("dedup_semantic_ann", (s, d) => SimilarityOps.semanticDedupAnn(s, Tables.embeddings(s, d)),
+      QuerySpec("dedup_semantic_ann", (s, d) => SimilarityOps.semanticDedupAnn(Tables.embeddings(s, d)),
         () => s"""WITH RECURSIVE bk AS (
            SELECT vec_id, bucket FROM read_parquet('$bucketDir/*.parquet')),
          cand AS (SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
@@ -257,11 +257,11 @@ object EmbeddingQueries {
           val emb = Tables.embeddings(s, d)
           // same measured-walk bits AND budget as the operator, so the
           // dumped relation IS the one the direct path buckets with
-          SimilarityOps.lshIndexRelation(s, emb,
-              bits = SimilarityOps.selfJoinBitsMeasured(s, emb,
+          SimilarityOps.lshIndexRelation(emb,
+              bits = SimilarityOps.selfJoinBitsMeasured(emb,
                 SimilarityOps.DefaultSemAnnPairBudget)._1)
             .coalesce(1).write.mode("overwrite").parquet(bucketDir)
-          SimilarityOps.semanticDedupFromBuckets(s, emb, readParquet(s, bucketDir))
+          SimilarityOps.semanticDedupFromBuckets(emb, readParquet(s, bucketDir))
         },
         // exact twins collide in every table; near ones ride the collision
         // curve, so their recall has a floor, not a bar of 1.0

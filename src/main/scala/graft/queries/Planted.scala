@@ -24,7 +24,6 @@ object Planted {
 
   /** The corpus dir a rule reads, with the truth of the rule's table. */
   final case class Corpus(spark: SparkSession, dir: String, truth: DataFrame) {
-    GraftFunctions.register(spark)
     def docs: DataFrame = Tables.documents(spark, dir)
     def emb: DataFrame = Tables.embeddings(spark, dir)
   }
@@ -309,7 +308,7 @@ object Planted {
     val near = j.filter(col("kind") === "near")
     val nearFrac = near.filter(col("va") === col("vb")).count() / math.max(1.0, near.count().toDouble)
     val trained = out.agg(avg("cos")).head().getDouble(0)
-    val init = SimilarityOps.assignFromCentroidRelation(c.spark, c.emb,
+    val init = SimilarityOps.assignFromCentroidRelation(c.emb,
         SimilarityOps.kmeansCentroidRelation(c.spark, SimilarityOps.trainKmeans(c.emb, k, iters = 0)))
       .agg(avg("cos")).head().getDouble(0)
     verdict(exBad == 0 && trained >= init - 1e-6)(

@@ -16,7 +16,6 @@ object TextQueries {
   private def subwordCountsFromDump(s: SparkSession, docs: DataFrame, wordDir: String,
                                     countCol: String, encode: Column => Column): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, count, explode, lit, size, sum}
-    graft.functions.GraftFunctions.register(s)
     docs.select(explode(TextOps.tokens(col("text"))).as("word")).distinct()
       .select(col("word"), size(encode(col("word"))).cast("long").as("n_sub"))
       .coalesce(1).write.mode("overwrite").parquet(wordDir)
@@ -188,7 +187,6 @@ object TextQueries {
         verify = Some { (s, d) =>
           import org.apache.spark.sql.functions.{explode, length, min}
           val docs = Tables.documents(s, d)
-          graft.functions.GraftFunctions.register(s)
           docs.select(col("doc_id"),
               explode(graft.functions.GraftFunctions.rollingWindowHashes(col("text"), 16)).as("h"))
             .coalesce(1).write.mode("overwrite").parquet(hashDir)

@@ -617,67 +617,6 @@ object IO {
                      partitionCol: String, deleteOrphans: Boolean = true): DataFrame =
     syncPartitions(spark, sourcePath, targetPath, Seq(partitionCol), deleteOrphans)
 
-  /** Z-order layout: sort the dataset by the Morton interleave of two keys
-    * and write a bounded file count. Each output file then covers a small
-    * RECTANGLE of (a, b) space, so parquet min/max stats prune scans
-    * filtering on EITHER column — unlike a linear sort, which only prunes
-    * the leading key.
-    *
-    * Both keys are min/max-normalized to the same bit width first — with
-    * unequal widths the interleave degenerates to a linear sort on the
-    * wider key (its high bits own every top z-bit). The min/max pass is one
-    * tiny aggregate; at 100 TB swap in quantile normalization for skewed
-    * domains (same shape: small model + map-side scale). */
-  def zorderWrite(df: DataFrame, outPath: String, colA: String, colB: String,
-                  files: Int = 16, bits: Int = 20): Unit = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    val r = df.agg(min(col(colA)).cast("double"), max(col(colA)).cast("double"),
-      min(col(colB)).cast("double"), max(col(colB)).cast("double")).head()
-    if (r.isNullAt(0) || r.isNullAt(2)) { // empty (or all-null-key) input
-      df.write.mode(SaveMode.Overwrite).parquet(outPath)
-      return
-    }
-    val top = (1L << bits) - 1
-    def scaled(c: String, lo: Double, hi: Double) =
-      if (hi <= lo) lit(0L)
-      else ((col(c).cast("double") - lo) * (top / (hi - lo))).cast("long")
-    df.withColumn("_z", graft.functions.GraftFunctions.zorder64(
-        scaled(colA, r.getDouble(0), r.getDouble(1)),
-        scaled(colB, r.getDouble(2), r.getDouble(3))))
-      .repartitionByRange(files, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.mode(SaveMode.Overwrite).parquet(outPath)
-  }
-
-  /** Quantile-normalized z-order — the skew-robust form: each key is mapped
-    * to its approximate rank bucket (approxQuantile boundaries, a bounded
-    * driver-side model like the IVF centroids) before interleaving, so a
-    * power-law key can't collapse most rows into a few Morton cells. Rank
-    * space is uniform by construction ⇒ the range partition on z is
-    * balanced ⇒ file sizes are even AND both dims stay rectangular in rank
-    * space. The boundary lookup is a native binary-search expression
-    * (RankBucket) — codegen'd O(log buckets) per row. */
-  def zorderWriteQuantile(df: DataFrame, outPath: String, colA: String, colB: String,
-                          files: Int = 16, bits: Int = 8): Unit = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    val nb = 1 << bits
-    val probs = (1 until nb).map(_.toDouble / nb).toArray
-    val Array(qa, qb) = df.stat.approxQuantile(
-      Array(colA, colB), probs, 0.001)
-    // native binary-search bucket (codegen'd, O(log n)) instead of the
-    // interpreted size(filter(...)) HOF scan — NOTES_PERF §1. Null keys
-    // rank as bucket 0, same as the previous filter-count form.
-    def bucket(c: String, bounds: Array[Double]) = coalesce(
-      graft.functions.GraftFunctions.rankBucket(col(c).cast("double"), bounds), lit(0L))
-    df.withColumn("_z", graft.functions.GraftFunctions.zorder64(
-        bucket(colA, qa), bucket(colB, qb)))
-      .repartitionByRange(files, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.mode(SaveMode.Overwrite).parquet(outPath)
-  }
-
   /** HAR analog: compact a many-small-files dataset to ~targetFileBytes
     * files. File count derived from the actual input size (cheap metadata
     * scan), so it adapts at any SF. */

@@ -67,7 +67,6 @@ class BpeSpec extends SparkSpecBase {
   test("whole-text encoding equals per-word encoding recomposed (the " +
     "dump-path identity the oracle relies on)") {
     val merges = TextAnalysis.trainBpe(docs, numMerges = 100)
-    graft.functions.GraftFunctions.register(spark)
     val direct = TextAnalysis.bpeTokenCount(docs, merges)
       .select("doc_id", "n_bpe_tokens").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap

@@ -90,8 +90,8 @@ class CurationR9Spec extends SparkSpecBase {
     "== centroid-relation recovery; Lloyd beats strided init") {
     val emb = Tables.embeddings(spark, sfDir)
     val cs = SimilarityOps.trainKmeans(emb)
-    val direct = SimilarityOps.kmeansCluster(spark, emb)
-    val viaRel = SimilarityOps.assignFromCentroidRelation(spark, emb,
+    val direct = SimilarityOps.kmeansCluster(emb)
+    val viaRel = SimilarityOps.assignFromCentroidRelation(emb,
       SimilarityOps.kmeansCentroidRelation(spark, cs))
     assert(direct.collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq ==
       viaRel.collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq)

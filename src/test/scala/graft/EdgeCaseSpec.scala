@@ -36,8 +36,8 @@ class EdgeCaseSpec extends SparkSpecBase {
     // empty embedding table: every ANN/near-dup path returns empty, no crash
     val emptyEmb = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
     assert(SimilarityOps.embeddingNearDup(spark, emptyEmb).count() == 0)
-    assert(SimilarityOps.ivfTopK(spark, emptyEmb).count() == 0)
-    assert(SimilarityOps.annLshTopK(spark, emptyEmb).count() == 0)
+    assert(SimilarityOps.ivfTopK(emptyEmb).count() == 0)
+    assert(SimilarityOps.annLshTopK(emptyEmb).count() == 0)
     // non-convergence on the DISTRIBUTED loop is an error, never a silently
     // partial grouping (localEdgeMax = 0 disarms the r12 driver union-find
     // fast path, which solves any in-budget graph without iterating)

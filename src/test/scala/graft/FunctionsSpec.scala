@@ -7,7 +7,6 @@ import org.apache.spark.unsafe.types.UTF8String
 class FunctionsSpec extends SparkSpecBase {
 
   test("cosine_sim matches a reference computation and handles edge cases") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Array(1.0f, 0.0f, 2.0f), Array(2.0f, 1.0f, 0.0f)),
@@ -35,7 +34,6 @@ class FunctionsSpec extends SparkSpecBase {
   }
 
   test("simhash64 is deterministic, order-insensitive to vote ties, and local") {
-    GraftFunctions.register(spark)
     val a = spark.sql("SELECT simhash64(array('alpha','beta','gamma'))").head.getLong(0)
     val b = spark.sql("SELECT simhash64(array('alpha','beta','gamma'))").head.getLong(0)
     assert(a == b)
@@ -58,12 +56,13 @@ class FunctionsSpec extends SparkSpecBase {
   }
 
   test("extensions injection ALONE resolves every graft function from SQL") {
-    // fresh session: extensions re-apply from config, temp-function
-    // registrations from GraftFunctions.register do NOT carry over — this
-    // exercises the production spark.sql.extensions path in isolation
+    // fresh session: its registry is built from the spark.sql.extensions
+    // config alone, the one path that puts graft functions into a session
     val fresh = spark.newSession()
-    assert(fresh.sql("SELECT zorder64(3, 5) AS z").head.getLong(0) ==
-      graft.functions.Zorder64.interleave(3L, 5L))
+    val reg = fresh.sessionState.functionRegistry
+    val missing = GraftFunctions.builders.map(_._1)
+      .filterNot(n => reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"graft functions the extension did not inject: $missing")
     val top = fresh.sql(
       "SELECT spacesaving_topk(w, 4) AS t FROM VALUES ('a'), ('a'), ('b') v(w)")
       .head.getAs[scala.collection.Seq[org.apache.spark.sql.Row]](0)
@@ -75,36 +74,5 @@ class FunctionsSpec extends SparkSpecBase {
     assert(fresh.sql(
       "SELECT hyperplane_lsh(array(cast(1.0 AS float)), array(array(0.5)), 1, 1) AS b")
       .head.getAs[scala.collection.Seq[Int]](0).length == 1)
-  }
-
-  test("register adds each graft function once: a second call leaves the registry unchanged") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-    // an entry is (info, builder), compared by identity: re-registering a
-    // function stores a new entry even when it is built the same way
-    def snapshot(reg: FunctionRegistry) = reg.listFunction()
-      .map(id => id -> (reg.lookupFunction(id).get, reg.lookupFunctionBuilder(id).get)).toMap
-    def assertUnchanged(before: Map[FunctionIdentifier, (AnyRef, AnyRef)],
-                        after: Map[FunctionIdentifier, (AnyRef, AnyRef)]): Unit = {
-      assert(after.keySet == before.keySet)
-      before.foreach { case (id, (info, build)) =>
-        assert((after(id)._1 eq info) && (after(id)._2 eq build), s"$id was re-registered")
-      }
-    }
-    val graftIds = GraftFunctions.builders.map { case (n, _) => FunctionIdentifier(n) }
-    // a vanilla registry: the first call adds every graft function
-    val vanilla = FunctionRegistry.builtin.clone()
-    GraftFunctions.register(vanilla)
-    assert(graftIds.forall(vanilla.functionExists))
-    val first = snapshot(vanilla)
-    GraftFunctions.register(vanilla)
-    assertUnchanged(first, snapshot(vanilla))
-    // a session built with GraftExtensions already holds them all
-    val reg = spark.sessionState.functionRegistry
-    assert(graftIds.forall(reg.functionExists))
-    val injected = snapshot(reg)
-    GraftFunctions.register(spark)
-    GraftFunctions.register(spark)
-    assertUnchanged(injected, snapshot(reg))
   }
 }

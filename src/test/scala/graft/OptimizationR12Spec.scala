@@ -60,7 +60,7 @@ class OptimizationR12Spec extends SparkSpecBase {
         math.abs(c(1) - m(1)) < 1e-5),
         s"expected a centroid at (${m(0)}, ${m(1)}), got ${cs.map(_.toSeq).toSeq}")
     }
-    val assigned = SimilarityOps.assignFromCentroidRelation(spark, emb,
+    val assigned = SimilarityOps.assignFromCentroidRelation(emb,
         SimilarityOps.kmeansCentroidRelation(spark, cs))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert((0L until 8L).map(assigned).distinct.length == 1)

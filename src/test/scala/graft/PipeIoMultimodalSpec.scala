@@ -107,50 +107,6 @@ class PipeIoMultimodalSpec extends SparkSpecBase {
     assert(got == Map(1L -> "a", 2L -> "B2", 3L -> "c", 4L -> "d"), s"got $got")
   }
 
-  test("zorderWrite clusters BOTH key columns per file (multi-dim pruning layout)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zorder").toString + "/z"
-    val li = Tables.lineitem(spark, sfDir)
-    IO.zorderWrite(li, tmp, "l_partkey", "l_suppkey", files = 16)
-    // per-file min/max ranges of each key ≈ parquet footer stats: with
-    // z-order both dimensions must be narrow; a linear sort on l_partkey
-    // would leave l_suppkey ranges at ~full width in every file
-    val perFile = spark.read.parquet(tmp)
-      .groupBy(input_file_name().as("f"))
-      .agg((max("l_partkey") - min("l_partkey")).as("pw"),
-        (max("l_suppkey") - min("l_suppkey")).as("sw"))
-      .collect()
-    assert(perFile.length >= 8, s"expected ~16 files, got ${perFile.length}")
-    val (globalP, globalS) = {
-      val r = li.agg(max("l_partkey") - min("l_partkey"),
-        max("l_suppkey") - min("l_suppkey")).head
-      (r.getLong(0).toDouble, r.getLong(1).toDouble)
-    }
-    val avgP = perFile.map(_.getLong(1)).sum.toDouble / perFile.length / globalP
-    val avgS = perFile.map(_.getLong(2)).sum.toDouble / perFile.length / globalS
-    assert(avgP <= 0.6 && avgS <= 0.6,
-      f"z-order must narrow both dims: partkey width $avgP%.2f, suppkey width $avgS%.2f of global")
-    // row preservation
-    assert(spark.read.parquet(tmp).count() == li.count())
-  }
-
-  test("quantile z-order keeps file sizes balanced under a power-law key") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(13)
-    // heavily skewed a (power-law-ish), uniform b: min/max normalization
-    // would map ~90% of rows into a sliver of a-space
-    val skewed = (0 until 20000).map { _ =>
-      (math.pow(10, rnd.nextDouble() * 4), rnd.nextDouble() * 100) }
-      .toDF("a", "b")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zq").toString + "/z"
-    IO.zorderWriteQuantile(skewed, tmp, "a", "b", files = 8)
-    val sizes = spark.read.parquet(tmp)
-      .groupBy(input_file_name()).count().collect().map(_.getLong(1))
-    assert(sizes.length >= 6, s"expected ~8 files, got ${sizes.length}")
-    assert(sizes.max.toDouble / sizes.min <= 2.0,
-      s"rank-normalized z-order must balance files; sizes=${sizes.sorted.mkString(",")}")
-    assert(spark.read.parquet(tmp).count() == 20000L)
-  }
-
   test("combineRead bounds task count over a many-small-files directory") {
     val tmp = Files.createTempDirectory("graft_combine").toString + "/many"
     Tables.lineitem(spark, sfDir).repartition(200).write.parquet(tmp)

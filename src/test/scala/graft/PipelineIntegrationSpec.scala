@@ -97,7 +97,7 @@ class PipelineIntegrationSpec extends SparkSpecBase {
     // is the schema/kernel compatibility, not the threshold
     assert(pairs.columns.toSeq == Seq("a_id", "b_id", "cos"))
     assert(pairs.count() >= 0)
-    val topk = SimilarityOps.bruteForceTopK(spark, feats, nQueries = 3, k = 2)
+    val topk = SimilarityOps.bruteForceTopK(feats, nQueries = 3, k = 2)
     assert(topk.groupBy("q_id").count().collect().forall(_.getLong(1) == 2))
   }
 }

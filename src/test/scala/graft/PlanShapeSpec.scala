@@ -73,10 +73,9 @@ class PlanShapeSpec extends SparkSpecBase {
     "a nested loop (the pair graph feeding CC is checkpointed, so the plan " +
     "to audit is the OPERATOR's candidate/verify stage, pre-CC)") {
     val emb = Tables.embeddings(spark, sfDir)
-    val buckets = graft.ops.SimilarityOps.lshIndexRelation(spark, emb,
+    val buckets = graft.ops.SimilarityOps.lshIndexRelation(emb,
       bits = graft.ops.SimilarityOps.selfJoinBits(emb.count()))
-    val pairs = graft.ops.SimilarityOps.semAnnCandidatePairs(
-      spark, emb, buckets, tau = 0.4, maxBucket = 0)
+    val pairs = graft.ops.SimilarityOps.semAnnCandidatePairs(emb, buckets, tau = 0.4, maxBucket = 0)
     val plan = formatted(pairs)
     assert(!plan.contains("BroadcastNestedLoop") && !plan.contains("CartesianProduct"),
       s"operator candidate/verify stage must stay equi-join bucketed:\n$plan")

@@ -160,7 +160,6 @@ class Round11Spec extends SparkSpecBase {
     "like the parsed model (no false negatives, identical decisions)") {
     import spark.implicits._
     import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     val hashes = (1L to 2000L).map(i => i * 0x9E3779B97F4A7C15L)
     val df = hashes.toDF("h")
     val numBits = 9000000 // ~1.1 MB blob — over the 1 MB literal gate
@@ -218,7 +217,7 @@ class Round11Spec extends SparkSpecBase {
     }.toDF("vec_id", "embedding")
     def norm(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1).toSeq
-    val ann = norm(SimilarityOps.semanticDedupAnn(spark, emb))
+    val ann = norm(SimilarityOps.semanticDedupAnn(emb))
     val exact = norm(SimilarityOps.semanticDedup(spark, emb))
     assert(exact.map(_._2).distinct.length == 4, "fixture must form 4 exact groups")
     assert(ann == exact, "ANN path must equal the exact path on this corpus")
@@ -228,7 +227,7 @@ class Round11Spec extends SparkSpecBase {
     "the exact grouping (ANN pairs are a verified subset), shape invariants " +
     "hold, and the dump-relation recovery is path-identical") {
     val emb = Tables.embeddings(spark, sfDir)
-    val ann = SimilarityOps.semanticDedupAnn(spark, emb).collect()
+    val ann = SimilarityOps.semanticDedupAnn(emb).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     assert(ann.length == emb.count(), "one row per vector")
     assert(ann.forall { case (id, g, k) => k == (id == g) && g <= id },
@@ -244,9 +243,9 @@ class Round11Spec extends SparkSpecBase {
     assert(ann.exists { case (id, g, _) => id != g },
       "testdata should contain semantic near-dups the ANN path finds")
     // dump-relation recovery (the Verify shape) is the same computation
-    val viaDump = SimilarityOps.semanticDedupFromBuckets(spark, emb,
-      SimilarityOps.lshIndexRelation(spark, emb,
-        bits = SimilarityOps.selfJoinBitsMeasured(spark, emb,
+    val viaDump = SimilarityOps.semanticDedupFromBuckets(emb,
+      SimilarityOps.lshIndexRelation(emb,
+        bits = SimilarityOps.selfJoinBitsMeasured(emb,
           SimilarityOps.DefaultSemAnnPairBudget)._1)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1).toSeq
     assert(viaDump == ann.sortBy(_._1).toSeq)
@@ -257,7 +256,7 @@ class Round11Spec extends SparkSpecBase {
     import spark.implicits._
     val emb = (0L until 50L).map(i =>
       (i, Array.tabulate(8)(d => (d + 1).toFloat))).toDF("vec_id", "embedding")
-    val out = SimilarityOps.semanticDedupAnn(spark, emb, maxBucket = 5).collect()
+    val out = SimilarityOps.semanticDedupAnn(emb, maxBucket = 5).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(out.length == 50 && out.map(_._2).distinct.toSeq == Seq(0L),
       "saturation pairing must keep the identical cluster in one component")
@@ -272,12 +271,12 @@ class Round11Spec extends SparkSpecBase {
     val emb = (0L until 400L).map(i =>
       (i, Array.tabulate(8)(d => (d + 1).toFloat))).toDF("vec_id", "embedding")
     val ex = intercept[IllegalStateException] {
-      SimilarityOps.semanticDedupAnn(spark, emb, maxCandidatePairs = 1000L).count()
+      SimilarityOps.semanticDedupAnn(emb, maxCandidatePairs = 1000L).count()
     }
     assert(ex.getMessage.contains("candidate bound") && ex.getMessage.contains("maxBucket"),
       s"must carry the measured bound and the remediation: ${ex.getMessage}")
     // with the cap the same corpus completes and still groups fully
-    val out = SimilarityOps.semanticDedupAnn(spark, emb,
+    val out = SimilarityOps.semanticDedupAnn(emb,
         maxBucket = 5, maxCandidatePairs = 1000L)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(out.length == 400 && out.map(_._2).distinct.toSeq == Seq(0L))

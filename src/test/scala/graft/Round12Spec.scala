@@ -85,14 +85,14 @@ class Round12Spec extends SparkSpecBase {
     val emb = (0 until 400).map(i =>
       (i.toLong, Array.tabulate(8)(d => (d + 1).toFloat))).toDF("vec_id", "embedding")
     val seed = SimilarityOps.selfJoinBits(400)
-    val (bits, bound) = SimilarityOps.selfJoinBitsMeasured(spark, emb,
+    val (bits, bound) = SimilarityOps.selfJoinBitsMeasured(emb,
       maxPairs = 1000L, allowOverBudget = true)
     assert(bound > 1000L, "the bound is genuinely over budget")
     assert(bits <= seed + 2,
       s"advisory walk must stop at the plateau (got $bits bits, seed $seed)")
     // strict mode on the same corpus still fails loud (unchanged contract)
     val ex = intercept[IllegalStateException] {
-      SimilarityOps.selfJoinBitsMeasured(spark, emb, maxPairs = 1000L)
+      SimilarityOps.selfJoinBitsMeasured(emb, maxPairs = 1000L)
     }
     assert(ex.getMessage.contains("candidate bound"))
   }

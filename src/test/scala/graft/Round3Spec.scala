@@ -65,7 +65,6 @@ class Round3Spec extends SparkSpecBase {
   }
 
   test("bounded_levenshtein via SQL matches builtin levenshtein on documents") {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, sfDir).select(substring(col("text"), 1, 48).as("pfx"))
       .createOrReplaceTempView("r3_pfx")
     val bad = spark.sql(
@@ -166,27 +165,6 @@ class Round3Spec extends SparkSpecBase {
     val factScans = "lineitem\\.parquet".r.findAllIn(plan).length
     assert(factScans == 1, s"q2 must scan the fact once, found $factScans:\n$plan")
     assert(plan.contains("Window"), "q2 min-per-part must be the window form")
-  }
-
-  // ---- rank_bucket: native binary search == interpreted HOF filter-count ----
-
-  test("rank_bucket matches the filter-count HOF form on random values") {
-    import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    val rnd = new Random(11)
-    val bounds = (1 to 255).map(_ => rnd.nextDouble() * 100).sorted.toArray
-    // include exact boundary hits and out-of-range values
-    // NaN: SQL `<=` orders NaN above all doubles, so the HOF form yields
-    // bounds.length — the native expression must agree (ADVICE r3).
-    val vals = (1 to 500).map(_ => rnd.nextDouble() * 120 - 10) ++
-      bounds.take(20).toSeq ++ Seq(-1e9, 1e9, Double.NaN)
-    val df = vals.toDF("v")
-    val hof = size(filter(typedlit(bounds.toSeq), b => b <= col("v"))).cast("long")
-    val bad = df.select(col("v"),
-        graft.functions.GraftFunctions.rankBucket(col("v"), bounds).as("native"),
-        hof.as("hofv"))
-      .filter(col("native") =!= col("hofv"))
-    assert(bad.isEmpty, "binary-search bucket must equal the filter-count form")
   }
 
   // ---- spacesaving_topk as a query: exact at capacity >= vocabulary ----

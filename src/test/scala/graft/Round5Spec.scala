@@ -181,13 +181,13 @@ class Round5Spec extends SparkSpecBase {
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
 
-    val (ib, ip) = graft.ops.SimilarityOps.ivfBucketRelations(spark, emb)
-    assert(rows(graft.ops.SimilarityOps.topKFromBucketDumps(spark, emb, ib, ip, k = 5)) ==
-      rows(graft.ops.SimilarityOps.ivfTopK(spark, emb)), "IVF dump path diverged")
+    val (ib, ip) = graft.ops.SimilarityOps.ivfBucketRelations(emb)
+    assert(rows(graft.ops.SimilarityOps.topKFromBucketDumps(emb, ib, ip, k = 5)) ==
+      rows(graft.ops.SimilarityOps.ivfTopK(emb)), "IVF dump path diverged")
 
-    val (lb, lp) = graft.ops.SimilarityOps.lshBucketRelations(spark, emb)
-    assert(rows(graft.ops.SimilarityOps.topKFromBucketDumps(spark, emb, lb, lp, k = 5)) ==
-      rows(graft.ops.SimilarityOps.annLshTopK(spark, emb)), "LSH dump path diverged")
+    val (lb, lp) = graft.ops.SimilarityOps.lshBucketRelations(emb)
+    assert(rows(graft.ops.SimilarityOps.topKFromBucketDumps(emb, lb, lp, k = 5)) ==
+      rows(graft.ops.SimilarityOps.annLshTopK(emb)), "LSH dump path diverged")
   }
 
   test("rolling window hashes stay in lockstep with rolling_min_hash (min == fingerprint)") {

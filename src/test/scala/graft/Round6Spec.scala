@@ -17,7 +17,6 @@ class Round6Spec extends SparkSpecBase {
 
   test("sketch_intersect_ub upper-bounds the true intersection on random hash sets") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(6L)
     // sets drawn from a small pool so intersections are non-trivial
     val pool = Array.fill(4000)(rnd.nextLong())
@@ -248,7 +247,6 @@ class Round6Spec extends SparkSpecBase {
   test("multi-probe LSH: probe set supersets probes=0, flips lowest-margin bits, lifts recall") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val dim = 32
     val planes = graft.functions.HyperplaneLsh.genPlanes(4 * 8, dim, 42L)
     // structural: first tables ids identical; flipped ids differ by exactly
@@ -282,7 +280,7 @@ class Round6Spec extends SparkSpecBase {
     }
     val planted = rows.toDF("vec_id", "embedding")
     def hits(flips: Int): Int =
-      graft.ops.SimilarityOps.annLshTopK(spark, planted, nQueries = 200, k = 1,
+      graft.ops.SimilarityOps.annLshTopK(planted, nQueries = 200, k = 1,
           tables = 1, bits = 8, flips = flips)
         .select("q_id", "n_id").collect()
         .count(r => r.getLong(1) == r.getLong(0) + 1000L)
@@ -294,7 +292,6 @@ class Round6Spec extends SparkSpecBase {
   test("bloom filter: distributed build has no false negatives, sane FPR, merge=OR") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val members = (0L until 5000L).map(i => s"gram-$i")
     val blob = members.toDF("g").repartition(8) // force partial-buffer merges
       .agg(graft.functions.GraftFunctions.bloomBuild(xxhash64(col("g")), 50000, 7))

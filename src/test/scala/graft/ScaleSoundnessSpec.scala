@@ -50,7 +50,6 @@ class ScaleSoundnessSpec extends SparkSpecBase {
 
   test("IVF assignment stage is map-side: no join/window/exchange before the probe join") {
     val emb = Tables.embeddings(spark, sfDir)
-    GraftFunctions.register(spark)
     val centroids = SimilarityOps.trainCentroids(emb, 16, 50)
     val assigned = emb.select(col("vec_id"),
       GraftFunctions.nearestCentroids(col("embedding"), centroids, 1)(0).as("bucket"))
@@ -68,7 +67,6 @@ class ScaleSoundnessSpec extends SparkSpecBase {
     val vecs = (0L until 50L).map(i => (i, Array.fill(8)(rnd.nextFloat() - 0.5f)))
     val centroids = (0 until 5).map(_ => Array.fill(8)(rnd.nextFloat() - 0.5f)).toArray
     val df = vecs.toDF("vec_id", "embedding")
-    GraftFunctions.register(spark)
     val got = df.select(col("vec_id"),
         GraftFunctions.nearestCentroids(col("embedding"), centroids, 2).as("nc"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap

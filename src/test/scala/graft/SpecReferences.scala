@@ -13,7 +13,6 @@ object SpecReferences {
   /** The quadratic all-pairs baseline of [[graft.ops.SimilarityOps.embeddingNearDup]]:
     * the bucketed form is the operator; this one exists to prove it exact. */
   def embeddingNearDupAllPairs(spark: SparkSession, emb: DataFrame, tau: Double = 0.4): DataFrame = {
-    GraftFunctions.register(spark)
     val a = emb.select(col("vec_id").as("a_id"), col("embedding").as("ea"))
     val b = emb.select(col("vec_id").as("b_id"), col("embedding").as("eb"))
     a.join(b, col("a_id") < col("b_id"))

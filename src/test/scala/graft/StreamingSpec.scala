@@ -11,7 +11,6 @@ class StreamingSpec extends SparkSpecBase {
   test("SpaceSaving sketch aggregates incrementally in a streaming query") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val input = MemoryStream[String]
     val q = input.toDF().select(org.apache.spark.sql.functions.col("value").as("w"))
       .groupBy()

@@ -93,7 +93,6 @@ class SubstringDedupSpec extends SparkSpecBase {
     }
     val k = 7
     val df = texts.toDF("doc_id", "text")
-    graft.functions.GraftFunctions.register(spark)
     val rolled = df
       .select(col("doc_id"),
         posexplode(graft.functions.GraftFunctions

@@ -13,7 +13,6 @@ class UnigramSpec extends SparkSpecBase {
 
   private def encode(text: String, model: Seq[(String, Double)]): Seq[String] = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     Seq(text).toDF("text")
       .select(GraftFunctions.unigramEncode(col("text"), model).as("p"))
       .collect().head.getSeq[String](0)
@@ -75,7 +74,6 @@ class UnigramSpec extends SparkSpecBase {
   test("dump-path identity: per-word encodings joined on tokens rebuild " +
        "the per-doc counts exactly (the oracle's contract)") {
     val model = TextAnalysis.trainUnigram(docs)
-    GraftFunctions.register(spark)
     val perWord = docs.select(explode(TextOps.tokens(col("text"))).as("word")).distinct()
       .select(col("word"),
         size(GraftFunctions.unigramEncode(col("word"), model)).cast("long").as("n_sub"))
