@@ -5,7 +5,8 @@ import java.util.Locale
 import scala.util.control.NonFatal
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 
 /** Benchmark main — runs SparkEntry queries against SPARK_GRAFT_SF_DIR,
@@ -26,7 +27,9 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
   * builder call, eager work included), Spark jobs (each a blocking driver
   * round trip) and `build_jobs`, those of them started before the builder
   * returned, stages, tasks, executor CPU seconds (steal-immune, unlike
-  * wall seconds) and shuffle read/write MB.
+  * wall seconds), shuffle read/write MB, the largest execution memory one
+  * task held (`peak_task_mem_mb`: Tungsten pages, so it shows the page
+  * size) and the JVM GC seconds the tasks saw (`gc_s`).
   *
   * "plans" carries a canonicalized fingerprint of each query's physical
   * plan (expression ids / plan ids / file paths masked), so cross-round
@@ -39,10 +42,12 @@ object Bench {
 
   /** Spark counters over one sample. */
   final case class Profile(jobs: Int = 0, buildJobs: Int = 0, stages: Int = 0, tasks: Int = 0,
-                           cpuNs: Long = 0L, shuffleReadB: Long = 0L, shuffleWriteB: Long = 0L)
+                           cpuNs: Long = 0L, shuffleReadB: Long = 0L, shuffleWriteB: Long = 0L,
+                           peakTaskMemB: Long = 0L, gcMs: Long = 0L)
 
-  /** Counts jobs started, and the tasks, executor CPU and shuffle bytes of
-    * every stage completed, since the last [[reset]]. Listener events arrive
+  /** Counts jobs started, the tasks, executor CPU and shuffle bytes of
+    * every stage completed, and the peak execution memory and GC time of
+    * every task ended, since the last [[reset]]. Listener events arrive
     * asynchronously on one bus thread, so both calls first wait for the bus
     * to drain — keep them outside any timed region. A job counts towards
     * `buildJobs` when its start time (epoch ms, stamped by the scheduler)
@@ -61,6 +66,11 @@ object Bench {
         cpuNs = p.cpuNs + m.executorCpuTime,
         shuffleReadB = p.shuffleReadB + m.shuffleReadMetrics.totalBytesRead,
         shuffleWriteB = p.shuffleWriteB + m.shuffleWriteMetrics.bytesWritten)
+    }
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      val m = t.taskMetrics // null for a task that failed before reporting
+      if (m != null) p = p.copy(peakTaskMemB = math.max(p.peakTaskMemB, m.peakExecutionMemory),
+        gcMs = p.gcMs + m.jvmGCTime)
     }
 
     def reset(): Unit = { GraftBridge.drainListeners(sc); p = Profile(); jobStartMs = Vector.empty }
@@ -158,7 +168,8 @@ object Bench {
     val p = m.profile
     s"""{"build_s":${fmt(m.buildS)},"build_jobs":${p.buildJobs},"jobs":${p.jobs},"stages":${p.stages},""" +
     s""""tasks":${p.tasks},"cpu_s":${fmt(p.cpuNs / 1e9)},""" +
-    s""""shuffle_read_mb":${fmt(p.shuffleReadB / 1e6)},"shuffle_write_mb":${fmt(p.shuffleWriteB / 1e6)}}"""
+    s""""shuffle_read_mb":${fmt(p.shuffleReadB / 1e6)},"shuffle_write_mb":${fmt(p.shuffleWriteB / 1e6)},""" +
+    s""""peak_task_mem_mb":${fmt(p.peakTaskMemB / 1e6)},"gc_s":${fmt(p.gcMs / 1e3)}}"""
   }
 
   /** Corpus stamp of the documents and embeddings tables under `dir`:

@@ -39,9 +39,31 @@ object GraftSessions {
       // local writes set modes and owners in-process, not by a chmod
       // process per file (graft.sources.GraftLocalFileSystem)
       .config("spark.hadoop.fs.file.impl", classOf[graft.sources.GraftLocalFileSystem].getName)
+      .config("spark.buffer.pageSize", pageSizeBytes(Runtime.getRuntime.maxMemory).toString)
     extra.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The Tungsten page size for a JVM whose heap is `heapBytes`: the
+    * smallest power of two of at least 1 MiB whose 8192 pages (the
+    * `TaskMemoryManager` page table) cover the whole heap, so no task runs
+    * out of page slots before it runs out of memory. Spark's own default,
+    * `nextPow2(execution memory / cores / 16)` capped at 64 MB, is the cap
+    * at a 7-8g heap and `local[4]`: the first row into each hash aggregate,
+    * sort, window and hash join build allocated and zeroed a 64 MB page,
+    * which on sf0.01 queries of a few rows was almost all of the task's
+    * memory (measured: q1_pricing_summary peaked at 64.25 MB per task, and
+    * the near-dup band join's broadcast relation, 22 MB of rows, kept its
+    * 64 MB page on the heap after the query). A record larger than a page
+    * still gets a page of its own. */
+  private[graft] def pageSizeBytes(heapBytes: Long): Long = {
+    val minPage = 1L << 20
+    val need = heapBytes / PageTableSize + (if (heapBytes % PageTableSize == 0) 0 else 1)
+    if (need <= minPage) minPage else java.lang.Long.highestOneBit(need - 1) << 1
+  }
+
+  /** Pages one task can address: `TaskMemoryManager.PAGE_TABLE_SIZE`. */
+  private[graft] val PageTableSize = 8192L
 }

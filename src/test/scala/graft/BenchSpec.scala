@@ -3,14 +3,16 @@ package graft
 /** Bench's per-query measurement: one builder call per timed sample, the
   * last sample's counters (jobs started before the builder returned split
   * out as `buildJobs`), and a plan fingerprint taken from the DataFrame
-  * that sample built. */
+  * that sample built. `q1_pricing_summary`'s largest task holds at most
+  * two of the session's Tungsten pages. */
 class BenchSpec extends SparkSpecBase {
 
   test("measure: builder runs once per sample; counters and plan hash come from the last one") {
     val counters = new Bench.JobCounters(spark.sparkContext)
     spark.sparkContext.addSparkListener(counters)
     try {
-      val hashes = Seq("q6_forecast_revenue", "compaction").map { name =>
+      val pageB = spark.sparkContext.getConf.getSizeAsBytes("spark.buffer.pageSize")
+      val hashes = Seq("q6_forecast_revenue", "compaction", "q1_pricing_summary").map { name =>
         var calls = 0
         val m = Bench.measure(spark, sfDir, name, 2, counters, { (s, d) =>
           calls += 1
@@ -25,6 +27,11 @@ class BenchSpec extends SparkSpecBase {
         if (name == "compaction") assert(m.profile.buildJobs > 0, s"$name: ${m.profile}")
         else assert(m.profile.buildJobs == 0, s"$name: ${m.profile}")
         assert(m.profile.buildJobs < m.profile.jobs, s"$name: ${m.profile}")
+        // q1's hash aggregate takes one page and its hash table: 64.25 MB
+        // per task under Spark's own 64 MB page
+        if (name == "q1_pricing_summary")
+          assert(m.profile.peakTaskMemB > 0 && m.profile.peakTaskMemB <= 2 * pageB,
+            s"$name: peak ${m.profile.peakTaskMemB} B against a $pageB B page")
         name -> m.planHash
       }.toMap
       val q6 = SparkEntry.queries("q6_forecast_revenue")(spark, sfDir)

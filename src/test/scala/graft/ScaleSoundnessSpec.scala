@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import graft.functions.{BandHashes, GraftFunctions, NearestCentroids}
+import graft.functions.{BandHashes, GraftFunctions}
 import graft.ops.{DedupOps, SimilarityOps}
 
 /** Round-2 soundness fixes, each proven by construction:

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{GraftFunctions, UnigramEncode, UnigramTrainer}
+import graft.functions.{GraftFunctions, UnigramTrainer}
 import graft.ops.{TextAnalysis, TextOps}
 
 /** Specs for the unigram-LM (SentencePiece-style) tokenizer: Viterbi
