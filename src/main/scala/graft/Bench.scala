@@ -8,6 +8,10 @@ import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
   SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Benchmark main — runs SparkEntry queries against SPARK_GRAFT_SF_DIR,
   * forcing FULL materialization through the noop sink (count() would let
@@ -29,7 +33,10 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
   * returned, stages, tasks, executor CPU seconds (steal-immune, unlike
   * wall seconds), shuffle read/write MB, the largest execution memory one
   * task held (`peak_task_mem_mb`: Tungsten pages, so it shows the page
-  * size) and the JVM GC seconds the tasks saw (`gc_s`).
+  * size), the JVM GC seconds the tasks saw (`gc_s`), and the broadcast
+  * exchanges of the final adaptive plan (`broadcasts`) with the summed size
+  * of the relations they built (`broadcast_mb`): which joins AQE's size
+  * gate sent the broadcast way, and what they held on the driver.
   *
   * "plans" carries a canonicalized fingerprint of each query's physical
   * plan (expression ids / plan ids / file paths masked), so cross-round
@@ -43,7 +50,8 @@ object Bench {
   /** Spark counters over one sample. */
   final case class Profile(jobs: Int = 0, buildJobs: Int = 0, stages: Int = 0, tasks: Int = 0,
                            cpuNs: Long = 0L, shuffleReadB: Long = 0L, shuffleWriteB: Long = 0L,
-                           peakTaskMemB: Long = 0L, gcMs: Long = 0L)
+                           peakTaskMemB: Long = 0L, gcMs: Long = 0L,
+                           broadcasts: Int = 0, broadcastB: Long = 0L)
 
   /** Counts jobs started, the tasks, executor CPU and shuffle bytes of
     * every stage completed, and the peak execution memory and GC time of
@@ -88,9 +96,10 @@ object Bench {
 
   /** Times `runs` samples of `build` followed by a noop write. Only the
     * build and the write are timed; the counter resets, the drain, the
-    * plan fingerprint and the cache release run outside the timed region.
-    * The fingerprint comes from the last sample's own DataFrame, so the
-    * builder runs exactly `runs` times. Every sample ends by releasing
+    * plan fingerprint, the broadcast sizes and the cache release run
+    * outside the timed region. The fingerprint and the broadcasts come from
+    * the last sample's own DataFrame and write, so the builder runs exactly
+    * `runs` times. Every sample ends by releasing
     * every cached relation and persisted RDD, as perfbench does, so no
     * sample reuses a persist of an earlier sample or query, and the
     * fingerprint sees only what its own builder cached. */
@@ -100,26 +109,75 @@ object Bench {
     var buildS = -1.0
     var buildEndMs = Long.MaxValue
     var hash = "err"
+    var broadcast = Seq.empty[BroadcastExchangeExec]
     val samples = (1 to runs).map { i =>
       counters.reset()
       lastDf = null
       buildS = -1.0
       buildEndMs = Long.MaxValue
+      broadcast = Seq.empty
+      var ran: FinalPlan = null
       val t0 = System.nanoTime()
       try {
         lastDf = build(spark, sfDir)
         buildS = (System.nanoTime() - t0) / 1e9
         buildEndMs = System.currentTimeMillis()
+        if (i == runs) ran = new FinalPlan(lastDf)
         lastDf.write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       } catch { case NonFatal(e) =>
         System.err.println(s"[bench] $name failed: $e"); -1.0
       } finally {
+        // its own try: a listener that times out costs the broadcast
+        // fields, never the sample's time
+        if (ran != null) {
+          try broadcast = broadcasts(ran.await())
+          catch { case NonFatal(e) => System.err.println(s"[bench] $name: no final plan: $e") }
+          finally ran.close()
+        }
         if (i == runs) hash = planHash(lastDf)
         releaseCache(spark)
       }
     }
-    Measurement(samples, buildS, counters.snapshot(buildEndMs), hash)
+    val profile = counters.snapshot(buildEndMs).copy(broadcasts = broadcast.size,
+      broadcastB = broadcast.map(_.metrics("dataSize").value).sum)
+    Measurement(samples, buildS, profile, hash)
+  }
+
+  /** The physical plan that the next write of `df` runs: for an adaptive
+    * query the final plan, with the join strategies and partition counts
+    * AQE chose at run time. Register it before the write; only the write of
+    * `df` itself counts (its command wraps `df`'s analyzed plan), not the
+    * end of an earlier query still queued on the listener bus. [[await]]
+    * waits for the listener bus, so call it outside any timed region, and
+    * [[close]] afterwards. */
+  final class FinalPlan(df: DataFrame) extends QueryExecutionListener with AutoCloseable {
+    private val target = df.queryExecution.analyzed
+    private val ran = scala.concurrent.Promise[QueryExecution]()
+    private def ours(qe: QueryExecution) = qe.logical.find(_ eq target).isDefined
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      if (ours(qe)) ran.trySuccess(qe)
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+      if (ours(qe)) ran.tryFailure(e)
+    df.sparkSession.listenerManager.register(this)
+
+    def await(): SparkPlan = {
+      import scala.concurrent.duration._
+      scala.concurrent.Await.result(ran.future, 60.seconds).executedPlan
+    }
+    def close(): Unit = df.sparkSession.listenerManager.unregister(this)
+  }
+
+  /** The broadcast exchanges a physical plan ran, through AQE's wrappers
+    * and query stages, each once: a reused exchange is not counted again.
+    * Each one's `dataSize` metric is the size of the relation it built. */
+  def broadcasts(plan: SparkPlan): Seq[BroadcastExchangeExec] = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case _ => p.children.flatMap(walk)
+    })
+    walk(plan).collect { case b: BroadcastExchangeExec => b }.distinct
   }
 
   /** Drops every cached relation and persisted RDD, blocking until gone. */
@@ -169,7 +227,8 @@ object Bench {
     s"""{"build_s":${fmt(m.buildS)},"build_jobs":${p.buildJobs},"jobs":${p.jobs},"stages":${p.stages},""" +
     s""""tasks":${p.tasks},"cpu_s":${fmt(p.cpuNs / 1e9)},""" +
     s""""shuffle_read_mb":${fmt(p.shuffleReadB / 1e6)},"shuffle_write_mb":${fmt(p.shuffleWriteB / 1e6)},""" +
-    s""""peak_task_mem_mb":${fmt(p.peakTaskMemB / 1e6)},"gc_s":${fmt(p.gcMs / 1e3)}}"""
+    s""""peak_task_mem_mb":${fmt(p.peakTaskMemB / 1e6)},"gc_s":${fmt(p.gcMs / 1e3)},""" +
+    s""""broadcasts":${p.broadcasts},"broadcast_mb":${fmt(p.broadcastB / 1e6)}}"""
   }
 
   /** Corpus stamp of the documents and embeddings tables under `dir`:

@@ -13,11 +13,12 @@ import graft.sources.IO.readParquet
   * deployed in large-scale dedup pipelines (e.g. Lee et al. 2022,
   * "Deduplicating Training Data Makes Language Models Better").
   *
-  * Every shingle-based op reads one persisted (doc_id, hv, sk) relation
-  * ([[shingleDocs]]): each document is tokenized and its shingles hashed
-  * once, in one native pass over the text (graft.functions.ShingleHashes),
-  * and every MinHash signature is computed once per document from those
-  * hashes, inside the one banding path ([[bandRows]]).
+  * Every shingle-based op reads one persisted (doc_id, hv[, sk]) relation
+  * ([[shingleDocs]]), hash-partitioned by doc_id: each document is
+  * tokenized and its shingles hashed once, in one native pass over the text
+  * (graft.functions.ShingleHashes), and every MinHash signature is computed
+  * once per document from those hashes, inside the one banding path
+  * ([[bandRows]]).
   *
   * Scale shape (100 TB):
   *  - exact: one hash-shuffle on md5 — optimal.
@@ -41,7 +42,7 @@ object DedupOps {
   def shinglesFromTokens(t: Column, n: Int = 3): Column =
     GraftFunctions.shingleArray(t, n)
 
-  /** (doc_id, hv, sk) shingle relation, PERSISTed because every consumer
+  /** (doc_id, hv[, sk]) shingle relation, PERSISTed because every consumer
     * (posting lists, signatures, self-join sides, candidate verification)
     * re-reads it — at 100 TB this is the standard "checkpoint the shingle
     * relation" step of a dedup pipeline, spilling to disk when needed.
@@ -54,27 +55,46 @@ object DedupOps {
     * minhash_sig, and verification intersects it (8 B/element instead of
     * ~20 B strings through the pair joins, and a codegen'd two-pointer
     * intersect instead of per-row hash sets; 64-bit space makes a corpus
-    * collision ~1e-11 — irrelevant to the exact-match oracle). sk = the
-    * 256-byte bucket-count sketch of hv, computed once per doc here:
-    * verifyPairs' pre-filter ships it per candidate pair instead of the
-    * ~KB hv arrays (see BucketCountSketch). No shingle strings persist.
+    * collision ~1e-11 — irrelevant to the exact-match oracle). No shingle
+    * strings persist.
     *
-    * Work is done once, on every core:
-    *  - a narrow scan is spread here, for every caller, by the
-    *    [[TextOps.spreadScan]] rule (at most half as many scan partitions as
-    *    cores), under the persist, so the spread exchange runs once;
-    *  - the empty-shingle filter tests the TEXT, before hashing:
-    *    size(shingle_hashes(text, n)) > 0 ⇔ the text holds ≥ n tokens ⇔
-    *    [[TextOps.hasTokens]]. Catalyst pushes any deterministic filter
-    *    below the projections and the spread's exchange, copying the
-    *    expressions it references: a filter on the shingle column would
-    *    shingle every doc twice, the first time on the scan's few tasks.
-    *    hasTokens reads each text only up to its n-th token. */
-  private def shingleDocs(docs: DataFrame, n: Int = 3): DataFrame = {
-    TextOps.spreadScan(docs)
-      .filter(TextOps.hasTokens(col("text"), n))
+    * `verify` marks the ops that run [[verifyPairsCore]]; for them only:
+    *  - sk = the 256-byte bucket-count sketch of hv, computed once per doc
+    *    here: the verify pre-filter ships it per candidate pair instead of
+    *    the ~KB hv arrays (see BucketCountSketch). The inverted-index ops
+    *    never read it.
+    *  - the relation is PARTITIONED BY doc_id at the session's shuffle
+    *    width, the layout verification reads it in (Hadoop's map-side join
+    *    over inputs partitioned on the join key; the partition-local
+    *    verification of REPOSE): the joins that attach hv arrays key on
+    *    doc_id, so they read it in place and shuffle only the candidate
+    *    pairs that survive the pre-filters. Left to Catalyst, which sizes
+    *    an array column as one element, both of those joins broadcast the
+    *    whole (doc_id, hv) relation, and the driver kept those hash
+    *    relations on its heap after the query — memory that grew with the
+    *    corpus (~120 MB at 10k docs). The exchange moves (doc_id, text),
+    *    before shingling, under the persist, so it runs once and the
+    *    shingle kernel runs on every partition at any input split.
+    *    The inverted-index ops gain nothing from a doc_id layout (their
+    *    pair relation comes out of a groupBy on the pair), so they keep
+    *    [[TextOps.spreadScan]]: a narrow scan is spread (at most half as
+    *    many scan partitions as cores), a split one is read as it arrives.
+    *
+    * The empty-shingle filter tests the TEXT, before hashing:
+    * size(shingle_hashes(text, n)) > 0 ⇔ the text holds ≥ n tokens ⇔
+    * [[TextOps.hasTokens]]. Catalyst pushes any deterministic filter below
+    * the projections and the exchange, copying the expressions it
+    * references: a filter on the shingle column would shingle every doc
+    * twice, the first time on the scan's few tasks. hasTokens reads each
+    * text only up to its n-th token. */
+  private def shingleDocs(docs: DataFrame, verify: Boolean, n: Int = 3): DataFrame = {
+    val in =
+      if (verify) docs.select(col("doc_id"), col("text"))
+        .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions, col("doc_id"))
+      else TextOps.spreadScan(docs)
+    val sh = in.filter(TextOps.hasTokens(col("text"), n))
       .select(col("doc_id"), GraftFunctions.shingleHashes(col("text"), n).as("hv"))
-      .withColumn("sk", GraftFunctions.bucketCountSketch(col("hv")))
+    (if (verify) sh.withColumn("sk", GraftFunctions.bucketCountSketch(col("hv"))) else sh)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
@@ -88,13 +108,22 @@ object DedupOps {
     * corpus), and the broadcast stays on the heap after the query
     * (~550 MB). Partitioned, each task builds a hash table over its key
     * range only. Shared by the ngram inverted index and the ppjoin
-    * prefix join. */
+    * prefix join; the band joins of [[minhashLshPairs]] and
+    * [[crossMinhashPairs]] and the verify joins that attach hv arrays are
+    * pinned the same way, for the same reason. */
   private def postingSelfJoin(postings: DataFrame, key: String): DataFrame =
     postings.as("a").hint("shuffle_hash").join(postings.as("b"),
       col(s"a.$key") === col(s"b.$key") && col("a.doc_id") < col("b.doc_id"))
 
   /** Jaccard verification of candidate (a_id, b_id) pairs against the
     * persisted shingle relation, over sorted 64-bit hash arrays.
+    *
+    * The two joins that attach the hv arrays are partitioned (shuffle_hash,
+    * building on the pair side): the shingle relation is already
+    * partitioned by doc_id, so it is read in place and never broadcast,
+    * and only the pre-filter survivors are shuffled — to a_id, then, with
+    * their a-side arrays, to b_id. The (nsh, sk) pre-filter joins carry no
+    * arrays and are left to Catalyst.
     *
     * Two EXACT-admissible pre-filters run before the hv arrays attach —
     * they drop only pairs that provably cannot reach τ, so the output is
@@ -127,9 +156,11 @@ object DedupOps {
     * `b_org` column selecting which b-side shingle relation the pair
     * verifies against (0 ⇒ shB0, 1 ⇒ shB1), so two candidate stages that
     * share the same a-side (incremental dedup's batch-self and
-    * batch-vs-existing stages) run ONE verify pipeline — 4 joins and 4
-    * broadcast builds instead of 8 at bench SF, one pair stream instead of
-    * two at scale. B-side lookups are keyed by (b_id, b_org), so an id
+    * batch-vs-existing stages) run ONE verify pipeline — 4 joins instead of
+    * 8, one pair stream instead of two. The b-side hv join keys on
+    * (b_id, b_org), which the doc_id partitioning does not cover, so it
+    * shuffles the union of the two b-side relations; the a side is read in
+    * place. B-side lookups are keyed by (b_id, b_org), so an id
     * present in both relations can never cross-match — per-tag semantics
     * are exactly verifyPairsAB's. Output: (a_id, b_id, b_org, jacc). */
   private def verifyPairsTagged(cand: DataFrame, shA: DataFrame,
@@ -164,8 +195,9 @@ object DedupOps {
       .filter(col("ub") === -1 ||
         col("ub").cast("double") >= (col("na") + col("nb")) * lit(tauEff / (1.0 + tauEff)) - lit(1e-9))
       .select(pairKeys: _*)
-    pruned
+    pruned.hint("shuffle_hash")
       .join(shA.select(col("doc_id").as("a_id"), col("hv").as("ha")), "a_id")
+      .hint("shuffle_hash")
       .join(bHv, bKeys)
       .withColumn("inter", GraftFunctions.sortedIntersectCount(col("ha"), col("hb")))
       .withColumn("jacc", round(col("inter") /
@@ -299,7 +331,7 @@ object DedupOps {
     // ngramJaccardPairsPrefix: equal shingles hash equal, so the pair counts
     // are the string-keyed ones (barring a ~1e-11 corpus collision), and
     // every posting row carries an 8-byte key instead of a ~25-byte string.
-    val sh = shingleDocs(docs)
+    val sh = shingleDocs(docs, verify = false)
     // §2.3 project before the exchange: posting rows carry ONLY (doc_id, h)
     // through the quadratic inverted-index join — the per-doc shingle
     // count attaches to the PAIR relation after the groupBy (two joins
@@ -374,7 +406,7 @@ object DedupOps {
     // total order is admissible for the
     // PPJoin theorem, but the selected prefixes differ, so the observe
     // counters below are not comparable to pre-r13 artifacts.
-    val sh = shingleDocs(docs)
+    val sh = shingleDocs(docs, verify = true)
     val ex = sh.select(col("doc_id"), explode(col("hv")).as("h"), size(col("hv")).as("nsh"))
     val dfs = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
     // Partitioned join (shuffle_hash on the df side, already hash-partitioned
@@ -504,12 +536,24 @@ object DedupOps {
     import org.apache.spark.sql.expressions.Window
     require(numPerms % bands == 0,
       s"minhashLshPairs: bands=$bands must divide numPerms=$numPerms")
-    val sh = shingleDocs(docs)
+    val sh = shingleDocs(docs, verify = true)
     // the explode carries (doc_id, band, band_sig) only, never the shingle
     // arrays or the 128-lane signature; this tiny relation (docs × bands ×
     // 3 ints) is reused by both join sides — persist to block Catalyst from
-    // re-deriving the signature per side
+    // re-deriving the signature per side. It persists PARTITIONED on the
+    // band key and the self-join is pinned partitioned, so both sides are
+    // read in place: one exchange of the band rows, and no broadcast
+    // (unpinned, AQE broadcast it from the cached scan's size: ~55 MB held
+    // on the driver's heap after the query at 10k docs). The price: with no
+    // shuffle stage under the join, AQE's skew rule cannot split a hot
+    // bucket, so one task emits that bucket's pairs; `maxBucket` is what
+    // bounds it. (Exchanging both sides instead keeps the skew split but
+    // shuffles the band rows twice: AQE never reuses an exchange over a
+    // cached scan. NOTES_PERF.md, "Near-dup verify reads the shingle
+    // relation in place".)
     val banded = bandRows(sh, numPerms, bands)
+      .repartition(sh.sparkSession.sessionState.conf.numShufflePartitions,
+        col("band"), col("band_sig"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val xSide =
       if (maxBucket <= 0) banded
@@ -519,7 +563,7 @@ object DedupOps {
           sum(when(col("rnk") > maxBucket, 1L).otherwise(0L)).as("overflow_rows"))
         .filter(col("rnk") <= maxBucket)
         .drop("rnk")
-    val cand = xSide.as("x").join(banded.as("y"),
+    val cand = xSide.as("x").hint("shuffle_hash").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.band_sig") === col("y.band_sig") &&
         col("x.doc_id") < col("y.doc_id"))
       .observe("lsh_band_join", count(lit(1)).as("cand_rows_pre_dedup"))
@@ -551,8 +595,8 @@ object DedupOps {
     * small side, so the guard scan is cheap. */
   def crossJaccardPairs(corpus: DataFrame, ref: DataFrame, tau: Double = 0.8,
                         maxRefDf: Long = 0L): DataFrame = {
-    val sa = shingleDocs(corpus)
-    val sb = shingleDocs(ref)
+    val sa = shingleDocs(corpus, verify = false)
+    val sb = shingleDocs(ref, verify = false)
     // §2.3 (the ngramJaccardPairs shape): posting rows carry only (doc_id,
     // h) through the inverted-index join, keyed on the 64-bit shingle
     // hashes as ngramJaccardPairs' are; per-doc sizes attach to the pair
@@ -594,18 +638,19 @@ object DedupOps {
     * candidates come from the (band, band_sig) equi-join — at τ ≥ ~0.8 with
     * 32×4 bands recall is 1.0 for the same reason as [[minhashLshPairs]] —
     * and exact Jaccard verification makes every emitted pair sound. The
-    * reference side is typically tiny (an eval suite) next to the corpus, so
-    * the banded join is effectively a semi-broadcast probe of the corpus's
-    * band stream. Output identical to [[crossJaccardPairs]] when recall
-    * holds (spec-pinned on the gate corpus). */
+    * banded join is pinned to a partitioned join building on the reference
+    * side, typically the small one (an eval suite): unpinned, AQE
+    * broadcast the reference's exploded band rows, a relation that grows
+    * with the reference corpus. Output identical to [[crossJaccardPairs]]
+    * when recall holds (spec-pinned on the gate corpus). */
   def crossMinhashPairs(corpus: DataFrame, ref: DataFrame, tau: Double = 0.8,
                         numPerms: Int = 128, bands: Int = 32): DataFrame = {
     require(numPerms % bands == 0,
       s"crossMinhashPairs: bands=$bands must divide numPerms=$numPerms")
-    val sa = shingleDocs(corpus)
-    val sb = shingleDocs(ref)
+    val sa = shingleDocs(corpus, verify = true)
+    val sb = shingleDocs(ref, verify = true)
     val cand = bandRows(sa, numPerms, bands).as("x")
-      .join(bandRows(sb, numPerms, bands).as("y"),
+      .join(bandRows(sb, numPerms, bands).as("y").hint("shuffle_hash"),
         col("x.band") === col("y.band") && col("x.band_sig") === col("y.band_sig"))
       .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
       .dropDuplicates("a_id", "b_id")
@@ -627,13 +672,15 @@ object DedupOps {
                          bands: Int = 32): DataFrame = {
     require(numPerms % bands == 0,
       s"incrementalDropIds: bands=$bands must divide numPerms=$numPerms")
-    val sa = shingleDocs(newDocs)
-    val sb = shingleDocs(existing)
-    // NOT persisted pre-partitioned on the join key: that shape was
-    // A/B-measured (sf0.1, OPTIMIZATION_r13.md §4) and REJECTED — the
-    // partitioned cache pins 32 fixed partitions that AQE cannot coalesce,
-    // so every downstream stage ran 32 tiny tasks (27 → 211 tasks, wall
-    // 1.4 → 2.2 s) to save 2 jobs.
+    val sa = shingleDocs(newDocs, verify = true)
+    val sb = shingleDocs(existing, verify = true)
+    // The banded relations are NOT persisted pre-partitioned on the band
+    // key: that shape was A/B-measured (sf0.1, OPTIMIZATION_r13.md §4) and
+    // REJECTED — the partitioned cache pins 32 fixed partitions that AQE
+    // cannot coalesce, so every downstream stage ran 32 tiny tasks (27 →
+    // 211 tasks, wall 1.4 → 2.2 s) to save 2 jobs. sa and sb themselves are
+    // doc_id-partitioned (see [[shingleDocs]]): verification needs that
+    // layout, and pays the same fixed partition count for it.
     val bandedA = bandRows(sa, numPerms, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bandedB = bandRows(sb, numPerms, bands)
@@ -705,7 +752,7 @@ object DedupOps {
                                   numPerms: Int = 128, bands: Int = 32): DataFrame = {
     require(numPerms % bands == 0,
       s"incrementalDropIdsFromStore: bands=$bands must divide numPerms=$numPerms")
-    val sa = shingleDocs(newDocs)
+    val sa = shingleDocs(newDocs, verify = true)
     val bandedA = bandRows(sa, numPerms, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Same tagged single-verify shape as [[incrementalDropIds]] (b_org 0 =
@@ -724,7 +771,7 @@ object DedupOps {
         lit(1).as("b_org"))
       .dropDuplicates("a_id", "b_id")
     val candIds = crossCand.select(col("b_id").as("doc_id")).distinct()
-    val sbCand = shingleDocs(existing.join(candIds, Seq("doc_id"), "left_semi"))
+    val sbCand = shingleDocs(existing.join(candIds, Seq("doc_id"), "left_semi"), verify = true)
     val cand = selfCand.dropDuplicates("a_id", "b_id")
       .unionByName(crossCand)
     val out = verifyPairsTagged(cand, sa, sa, sbCand, tau)

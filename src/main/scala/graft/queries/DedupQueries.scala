@@ -45,8 +45,10 @@ object DedupQueries {
       () => """SELECT md5(text) AS h, min(doc_id) AS canonical_id, count(*) AS n_copies
          FROM documents GROUP BY md5(text)""",
       planted = Some(Planted.exactGroups)),
-    // the shingle family spreads a narrow scan itself, inside shingleDocs
-    // (under its persist, so the spread exchange runs once); no call-site
+    // the shingle family lays out its input itself, inside shingleDocs
+    // (under its persist, so the exchange runs once, before shingling): a
+    // narrow scan is spread for the inverted-index ops, and every input is
+    // partitioned by doc_id for the ops that verify; no call-site
     // spreadScan here or on the other shingle-family entries
     QuerySpec("dedup_ngram_jaccard", (s, d) => DedupOps.ngramJaccardPairs(Tables.documents(s, d)),
       () => """WITH tok AS (SELECT doc_id,
@@ -200,11 +202,10 @@ object DedupQueries {
     // corpus too dense for the prefix join fails fast with the measured
     // bound and the LSH/df-cap remediations instead of GC-killing the JVM
     // (the sf10 saturated-vocabulary skip, NOTES_PERF r11).
-    // shingleDocs spreads a narrow scan for this op too. A call-site spread
-    // had measured a loss here (sf0.1, 1.3-1.6 s → 1.6-2.2 s) while the
+    // shingleDocs partitions the input by doc_id for this op, before
+    // shingling. (A call-site spread had measured a loss here while the
     // shingle filter ran before the exchange; with the text-only filter it
-    // does not (4 cores, warm runs, cache cleared between: sf0.1 2.8-3.7 →
-    // 2.7-3.3 s, the 10k-doc perfbench corpus 7.0-9.9 → 5.3-7.7 s).
+    // did not: 4 cores, sf0.1 2.8-3.7 → 2.7-3.3 s.)
     QuerySpec("dedup_jaccard_ppjoin", (s, d) => DedupOps.ngramJaccardPairsPrefix(Tables.documents(s, d),
       maxCandidates = GraftEnv.ppjoinBudget()),
       () => """WITH tok AS (SELECT doc_id,

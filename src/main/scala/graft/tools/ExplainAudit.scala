@@ -1,12 +1,8 @@
 package graft.tools
 
-import scala.concurrent.{Await, Promise}
-import scala.concurrent.duration._
-
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.util.QueryExecutionListener
-import graft.{GraftSessions, SparkEntry}
+import org.apache.spark.sql.execution.SparkPlan
+import graft.{Bench, GraftSessions, SparkEntry}
 
 /** Prints, for the headline queries, the static physical plan and the final
   * adaptive plan after the query ran through the noop sink, so the scan
@@ -37,26 +33,12 @@ object ExplainAudit {
   }
 
   /** Runs `df` through the noop sink, as Bench times it, and returns the
-    * physical plan that ran: for an adaptive query the final plan, with the
-    * join strategies and partition counts AQE chose at run time. The
-    * listener takes only the write of `df` itself (its command wraps `df`'s
-    * analyzed plan), not the end of an earlier query still queued on the
-    * listener bus. */
+    * physical plan that ran ([[Bench.FinalPlan]]). */
   def finalPlan(df: DataFrame): SparkPlan = {
-    val target = df.queryExecution.analyzed
-    val ran = Promise[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      private def ours(qe: QueryExecution) = qe.logical.find(_ eq target).isDefined
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (ours(qe)) ran.trySuccess(qe)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
-        if (ours(qe)) ran.tryFailure(e)
-    }
-    val listeners = df.sparkSession.listenerManager
-    listeners.register(listener)
+    val ran = new Bench.FinalPlan(df)
     try {
       df.write.format("noop").mode("overwrite").save()
-      Await.result(ran.future, 60.seconds).executedPlan
-    } finally listeners.unregister(listener)
+      ran.await()
+    } finally ran.close()
   }
 }

@@ -4,7 +4,8 @@ package graft
   * last sample's counters (jobs started before the builder returned split
   * out as `buildJobs`), and a plan fingerprint taken from the DataFrame
   * that sample built. `q1_pricing_summary`'s largest task holds at most
-  * two of the session's Tungsten pages. */
+  * two of the session's Tungsten pages; `q3_shipping_priority`'s final
+  * plan broadcasts its dimension sides. */
 class BenchSpec extends SparkSpecBase {
 
   test("measure: builder runs once per sample; counters and plan hash come from the last one") {
@@ -44,5 +45,16 @@ class BenchSpec extends SparkSpecBase {
     // each build numbers its lambda variables from one JVM-wide counter
     val hashes = (1 to 2).map(_ => Bench.planHash(SparkEntry.queries("wordcount")(spark, sfDir)))
     assert(hashes.head != "err" && hashes.head == hashes.last, hashes)
+  }
+
+  test("measure: broadcasts and their sizes come from the last sample's final plan") {
+    val counters = new Bench.JobCounters(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counters)
+    try {
+      val name = "q3_shipping_priority"
+      val m = Bench.measure(spark, sfDir, name, 1, counters, SparkEntry.queries(name))
+      assert(m.samples.forall(_ >= 0), s"$name: ${m.samples}")
+      assert(m.profile.broadcasts > 0 && m.profile.broadcastB > 0, s"$name: ${m.profile}")
+    } finally spark.sparkContext.removeSparkListener(counters)
   }
 }

@@ -6,8 +6,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{CorpusGen, DedupOps, TextOps}
 
-/** The shingle-family pair operators (n-gram inverted index, MinHash-LSH):
-  * outputs that must not depend on how the input or the shuffles are split. */
+/** The shingle-family pair operators (n-gram inverted index, prefix
+  * filter, MinHash-LSH, cross-corpus MinHash-LSH): outputs that must not
+  * depend on how the input or the shuffles are split. */
 class NearDupPairsSpec extends SparkSpecBase {
 
   /** Writes the planted-duplicate corpus (1,000 documents, stopword head)
@@ -25,11 +26,22 @@ class NearDupPairsSpec extends SparkSpecBase {
     df.select(col("a_id"), col("b_id"), col("jacc")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
 
-  test("ngramJaccardPairs and minhashLshPairs return the same rows whether the " +
-    "input arrives in one partition (spread) or four (not), at 1 or 7 shuffle partitions") {
+  // The verifying ops persist their shingle relation hash-partitioned by
+  // doc_id at the shuffle width, and their verify joins read it in place,
+  // so co-partitioning rests on partition counts: widths 1 and 7 differ
+  // from the session's 4 cores.
+  test("ngramJaccardPairs, ngramJaccardPairsPrefix, minhashLshPairs and crossMinhashPairs " +
+    "return the same rows whether the input arrives in one partition or four, " +
+    "at 1 or 7 shuffle partitions") {
+    // the reference side of the cross-corpus op: every third document
+    def cross(d: DataFrame) = DedupOps.crossMinhashPairs(
+        d.filter(col("doc_id") % 3 =!= 0), d.filter(col("doc_id") % 3 === 0))
+      .select(col("corpus_id").as("a_id"), col("ref_id").as("b_id"), col("jacc"))
     val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
       "ngramJaccardPairs" -> (d => DedupOps.ngramJaccardPairs(d)),
-      "minhashLshPairs" -> (d => DedupOps.minhashLshPairs(d)))
+      "ngramJaccardPairsPrefix" -> (d => DedupOps.ngramJaccardPairsPrefix(d)),
+      "minhashLshPairs" -> (d => DedupOps.minhashLshPairs(d)),
+      "crossMinhashPairs" -> cross)
     val root = Files.createTempDirectory("graft_neardup_")
     val corpusDirs = writeCorpus(root.toString)
     val prior = spark.conf.get("spark.sql.shuffle.partitions")

@@ -1,11 +1,13 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, GenerateExec, SparkPlan,
+  UnaryExecNode}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import graft.functions.{MinHashSignature, ShingleHashes}
 import graft.tools.ExplainAudit
 
@@ -158,6 +160,42 @@ class PlanShapeSpec extends SparkSpecBase {
       val signing = (plan +: cached).flatMap(evaluating(_, classOf[MinHashSignature]))
       assert(signing.size == sigs,
         s"$name: minhash_sig evaluated in ${signing.size} operators, want $sigs:\n$plan")
+      spark.catalog.clearCache()
+    }
+  }
+
+  test("near-dup verify: no broadcast carries an exploded relation or a shingle-hash " +
+    "array, and the doc-id joins read the shingle relation without an exchange") {
+    // a child's path to a cached scan of the shingle relation (one with an
+    // hv column) through unary operators; true when a shuffle lies on it
+    def shuffledShingles(p: SparkPlan, shuffled: Boolean): Boolean = p match {
+      case i: InMemoryTableScanExec => shuffled && i.relation.output.exists(_.name == "hv")
+      case s: QueryStageExec => shuffledShingles(s.plan, shuffled)
+      case e: ShuffleExchangeLike => shuffledShingles(e.child, shuffled = true)
+      case u: UnaryExecNode => shuffledShingles(u.child, shuffled)
+      case _ => false
+    }
+    def onDocId(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      keys.exists(_.references.exists(a => Set("a_id", "b_id").contains(a.name)))
+    Seq("dedup_minhash_lsh", "dedup_jaccard_ppjoin", "dedup_cross_minhash").foreach { name =>
+      val plan = ExplainAudit.finalPlan(SparkEntry.queries(name)(spark, sfDir))
+      val ops = operators(plan)
+      val broadcasts = ops.collect { case b: BroadcastExchangeExec => b }
+      val explodes = broadcasts.filter(b => operators(b.child).exists(_.isInstanceOf[GenerateExec]))
+      assert(explodes.isEmpty, s"$name: an exploded relation is broadcast:\n$plan")
+      val arrays = broadcasts.filter(_.output.exists(_.dataType match {
+        case ArrayType(LongType, _) => true
+        case _ => false
+      }))
+      assert(arrays.isEmpty, s"$name: a shingle-hash array is broadcast:\n$plan")
+      val docIdJoins: Seq[SparkPlan] = ops.collect {
+        case j: ShuffledHashJoinExec if onDocId(j.leftKeys) => j
+        case j: BroadcastHashJoinExec if onDocId(j.leftKeys) => j
+        case j: SortMergeJoinExec if onDocId(j.leftKeys) => j
+      }
+      assert(docIdJoins.nonEmpty, s"$name: no doc-id join found:\n$plan")
+      val shuffling = docIdJoins.filter(_.children.exists(shuffledShingles(_, shuffled = false)))
+      assert(shuffling.isEmpty, s"$name: a doc-id join shuffles the shingle relation:\n$plan")
       spark.catalog.clearCache()
     }
   }
